@@ -28,8 +28,10 @@ threads must release their own (the streaming sinks do, per batch, in a
 
 from __future__ import annotations
 
+import logging
 import threading
 
+_LOG = logging.getLogger(__name__)
 _TL = threading.local()
 
 
@@ -224,11 +226,11 @@ def stages_mark() -> int:
 
 def release_stages_since(mark: int) -> int:
     """Delete every staged boundary THIS thread recorded after ``mark``;
-    returns how many were deleted. A failed delete is WARNED with the
-    path, not swallowed — on shared storage a silently-leaked boundary
-    is stranded bytes with no signal (the path is popped either way, so
-    a retry storm never builds). Only call once downstream consumers of
-    those boundaries have materialized (see :func:`stage`)."""
+    returns how many were deleted. A failed delete is logged as a warning
+    naming the path, not swallowed — on shared storage a silently-leaked
+    boundary is stranded bytes with no signal (the path is popped either
+    way, so a retry storm never builds). Only call once downstream
+    consumers of those boundaries have materialized (see :func:`stage`)."""
     stages = _stages()
     n = 0
     while len(stages) > mark:
@@ -239,13 +241,9 @@ def release_stages_since(mark: int) -> int:
             HdfsOps(spark).delete(path, recursive=True)
             n += 1
         except Exception as exc:  # noqa: BLE001 — reap must keep going
-            import warnings
-
-            warnings.warn(
-                f"release_stages: failed to delete staged boundary "
-                f"{path!r}: {exc!r} (files may be stranded)",
-                RuntimeWarning,
-                stacklevel=2,
+            _LOG.warning(
+                "release_stages: failed to delete staged boundary %r: %r "
+                "(files may be stranded)", path, exc,
             )
     return n
 

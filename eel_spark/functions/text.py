@@ -98,10 +98,6 @@ def bpe_ish_token_count(
     )
 
 
-def char_count(text: Column | str) -> Column:
-    return F.length(_c(text))
-
-
 def whitespace_ratio(text: Column | str) -> Column:
     """Fraction of characters that are spaces (exact int/int → double).
     NULL for null/empty text — ANSI mode (Spark 4 default) makes a bare
@@ -157,14 +153,6 @@ LANG_MARKERS: dict[str, list[str]] = {
     "es": ["el", "la", "los", "y", "es", "no", "una", "por", "que", "con"],
     "zh": ["de", "shi", "bu", "le", "zai", "you", "wo", "ta", "men", "zhe"],
 }
-
-
-def lang_scores(text: Column | str, markers: dict[str, list[str]] | None = None) -> Column:
-    """Map of language → marker-hit count (struct of exact ints)."""
-    markers = markers or LANG_MARKERS
-    return F.struct(
-        *[stopword_count(text, words).alias(lang) for lang, words in markers.items()]
-    )
 
 
 def lang_id(text: Column | str, markers: dict[str, list[str]] | None = None) -> Column:

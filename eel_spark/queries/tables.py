@@ -18,8 +18,13 @@ they use.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, SparkSession
+import threading as _threading
+from collections import OrderedDict
+
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from eel_spark.datastream import DataStream
 
@@ -71,6 +76,26 @@ def table_via_avro(spark: SparkSession, sf_dir: str, name: str) -> DataStream:
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataStream:
+    """Read test table ``name`` from ``{sf_dir}/{name}.parquet``.
+
+    Spark infers a parquet schema with a one-task job, even for a single
+    file, so every read would launch a job whose answer cannot have
+    changed. Both branches read through :func:`_read_parquet`, which
+    stores the ``StructType`` inferred for a regular file under the
+    file's qualified path and hands it to later reads of that file as
+    ``spark.read.schema(...)``, which launches no job.
+
+    An entry holds only while its stamp matches: the file's length and
+    modification time (one Hadoop ``getFileStatus`` on the driver, so
+    ``file:`` and ``hdfs:`` behave the same) and the session settings that
+    change what inference returns (``_INFERENCE_CONFS``). A changed stamp
+    infers again and replaces the entry. At most ``_SCHEMA_MEMO_CAP``
+    paths are held, least recently used evicted first. Directories are
+    never stored: rewriting a nested file does not change a directory's
+    modification time, so a directory read infers every time. This holds
+    schemas only, not data: every read still lists and scans its file.
+    """
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # events.parquet carries TIMESTAMP(NANOS), which Spark only reads
         # as a long (spark.sql.legacy.parquet.nanosAsLong). Read the nanos
@@ -82,9 +107,52 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataStream:
             pass  # session may have it fixed already
         from eel_spark.timeutils import normalize_ts
 
-        df = normalize_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-        return DataStream(df)
-    return DataStream(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+        return DataStream(normalize_ts(_read_parquet(spark, path)))
+    return DataStream(_read_parquet(spark, path))
+
+
+# -- inferred-schema memo for table() ----------------------------------------
+
+_SCHEMA_MEMO_CAP = 64
+# qualified path -> (stamp, StructType), least recently used first
+_SCHEMA_MEMO: OrderedDict = OrderedDict()
+_SCHEMA_MEMO_LOCK = _threading.Lock()
+# session settings that change the schema parquet inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reusing the schema inferred for an
+    unchanged regular file (see :func:`table`)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        status = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(jpath)
+    except Py4JJavaError:
+        status = None  # missing path: let the read raise its usual error
+    if status is None or not status.isFile():
+        return spark.read.parquet(path)
+    key = status.getPath().toString()
+    stamp = (status.getLen(), status.getModificationTime(),
+             tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    with _SCHEMA_MEMO_LOCK:
+        hit = _SCHEMA_MEMO.get(key)
+        if hit is not None and hit[0] == stamp:
+            _SCHEMA_MEMO.move_to_end(key)
+            return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    # a copy: callers may extend ``df.schema`` in place (``.add``)
+    schema = StructType.fromJson(df.schema.jsonValue())
+    with _SCHEMA_MEMO_LOCK:
+        _SCHEMA_MEMO[key] = (stamp, schema)
+        _SCHEMA_MEMO.move_to_end(key)
+        while len(_SCHEMA_MEMO) > _SCHEMA_MEMO_CAP:
+            _SCHEMA_MEMO.popitem(last=False)
+    return df
 
 
 def _c(c: Column | str) -> Column:
@@ -132,17 +200,7 @@ def dsum(c: Column, out_scale: int = 6) -> Column:
     return F.sum(c).cast(f"decimal(38,{out_scale})")
 
 
-def sql_dec(expr: str, scale: int = 6) -> str:
-    return f"CAST({expr} AS DECIMAL(18,{scale}))"
-
-
-def sql_dsum(expr: str, out_scale: int = 6) -> str:
-    return f"CAST(SUM({expr}) AS DECIMAL(38,{out_scale}))"
-
-
 # -- per-invocation scoped temp dirs (r9 ADVICE: eager reaping) --------------
-
-import threading as _threading
 
 _SCOPED_TMPDIRS: dict = {}  # scope -> [older, newer] (≤2 kept per scope)
 # created at import: a lazily-created lock is itself a race (two first

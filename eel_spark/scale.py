@@ -214,19 +214,6 @@ def write_zordered(
     )
 
 
-def repartition_for_join(
-    left: DataFrame, right: DataFrame, on: str | Sequence[str], partitions: int | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Co-partition both sides on the join keys ahead of multiple joins —
-    one explicit shuffle each, reused by every downstream join on the same
-    keys (Exchange reuse), the DataFrame-level stand-in for bucketing."""
-    keys = [on] if isinstance(on, str) else list(on)
-    cols = [F.col(k) for k in keys]
-    if partitions:
-        return left.repartition(partitions, *cols), right.repartition(partitions, *cols)
-    return left.repartition(*cols), right.repartition(*cols)
-
-
 def key_skew_report(
     df: DataFrame, keys: str | Sequence[str], top: int = 20
 ) -> dict:

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -18,12 +19,31 @@ def pytest_collection_modifyitems(config, items):
     here instead of 146 scattered decorators: the list is generated from
     a ``--durations`` run and auditable/regenerable as one block, and a
     conftest hook runs before the core ``-m`` filter so the added marks
-    deselect as if they were inline."""
+    deselect as if they were inline.
+
+    A ``SLOW`` key that names a collected file but no collected test in
+    it fails collection: a slow test renamed without its key would
+    otherwise silently rejoin the default run. Keys for files that were
+    not collected, or were selected by node id (``file.py::test``), are
+    not checked, since none or only part of such a file was collected."""
+    matched, files = set(), set()
     for item in items:
         base = item.path.name if hasattr(item, "path") else item.fspath.basename
         name = getattr(item, "originalname", None) or item.name
+        files.add(base)
         if f"{base}::{name}" in SLOW:
+            matched.add(f"{base}::{name}")
             item.add_marker(pytest.mark.slow)
+    partial = {os.path.basename(a.split("::")[0]) for a in config.args if "::" in a}
+    stale = sorted(k for k in SLOW
+                   if k not in matched and k.split("::")[0] in files - partial)
+    if stale:
+        raise pytest.UsageError(
+            "tests/slow_tests.py SLOW keys match no collected test: "
+            + ", ".join(stale)
+        )
+
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
