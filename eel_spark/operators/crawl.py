@@ -299,8 +299,7 @@ def frontier_admit_batch(
 
     Holds the store's single-writer lease itself (batch-token
     self-adoption — a crashed attempt's stranded lease is adopted by
-    the same batch's retry); the streaming sink's outer acquisition
-    composes through per-thread re-entrancy.
+    the same batch's retry).
     """
     keyed = batch_df.where(F.col(url_col).isNotNull()).select(
         frontier_url_key(F.col(url_col)).alias("url_key"),
@@ -349,21 +348,21 @@ def compact_frontier_store(spark, store_path: str) -> None:
     replay finds its rows in the ``-1`` generation and correctly
     admits nothing, but its exactly-once overwrite is spent).
 
-    Staged swap: rewrite into a ``__compact_tmp`` sibling, then
-    delete+rename — a crash between the renames leaves the tmp tree
-    intact for manual completion, never a half-deleted store."""
-    from eel_spark.sources.hdfs import HdfsOps
+    Crash safety is ``sources/hdfs.staged_swap``'s: a crash at any
+    point leaves the store whole (or staged aside, which the next
+    writer's lease restores), never a half-deleted store."""
+    from eel_spark.sources.hdfs import staged_swap
 
-    ops = HdfsOps(spark)
     root = store_path.rstrip("/")
-    tmp = root + "__compact_tmp"
-    src = spark.read.parquet(root).drop("batch_id")
-    (
-        src.withColumn("batch_id", F.lit(-1))
-        .repartition("kp")
-        .write.mode("overwrite")
-        .partitionBy("batch_id", "kp")
-        .parquet(tmp)
-    )
-    ops.delete(root, recursive=True)
-    ops.rename(tmp, root)
+
+    def rewrite(tmp: str) -> None:
+        (
+            spark.read.parquet(root).drop("batch_id")
+            .withColumn("batch_id", F.lit(-1))
+            .repartition("kp")
+            .write.mode("overwrite")
+            .partitionBy("batch_id", "kp")
+            .parquet(tmp)
+        )
+
+    staged_swap(spark, root, rewrite)

@@ -39,10 +39,12 @@ STORE_TYPES = (
     "frontier",
 )
 
-#: single-writer lease, SIBLING of the store root (``<root>__maint_lease``)
-#: so a staged-swap compaction that renames the root never moves the
-#: lock out from under its holder. SCD2 keeps its own in-root
-#: ``_scd_lease`` (richer: batch-fingerprint self-adoption for replay).
+#: the ONE single-writer lease every store writer takes (appenders,
+#: compactors, ``maintain``, SCD2 merges and history rewrites, the funnel
+#: report sink): a SIBLING of the store root (``<root>__maint_lease``) so
+#: a staged-swap compaction that renames the root never moves the lock
+#: out from under its holder. In-root ``_scd_lease`` / ``_report_lease``
+#: files left by older code are ignored.
 MAINT_LEASE_SUFFIX = "__maint_lease"
 
 
@@ -61,8 +63,7 @@ def _held_leases() -> set:
 def acquire_store_lease(
     spark: SparkSession, path: str, op: str, token: str | None = None
 ) -> str | None:
-    """Acquire the store's single-writer maintenance lease (atomic
-    create-if-absent — the ``_scd_lease`` pattern, r13 verdict #3):
+    """Acquire the store's single-writer lease (atomic create-if-absent):
     every appender and compactor takes it, so concurrent
     maintain-vs-append (or append-vs-append) FAILS LOUDLY at
     acquisition instead of relying on the documented offline contract.
@@ -71,19 +72,27 @@ def acquire_store_lease(
     maintain → compactor call chain; the outermost acquisition owns
     the release).
 
-    ``token`` is the SELF-ADOPTION identity (SCD2's batch-fingerprint
-    pattern): a lease stranded by a hard-killed holder whose recorded
-    token EQUALS the token being acquired is adopted — the only caller
-    that can retry a checkpointed batch id is the one stream that owns
-    the checkpoint, so a crash mid-batch self-heals on replay instead
-    of wedging the sink until a human runs :func:`break_store_lease`.
-    Tokenless acquisitions (ad-hoc compaction, offline maintain) never
-    adopt; the loser raises RuntimeError naming the holder's recorded
-    operation (the file's mtime is the acquisition time)."""
-    from eel_spark.sources.hdfs import HdfsOps
+    ``token`` is the SELF-ADOPTION identity (a streaming batch id, an
+    SCD2 batch fingerprint): a lease stranded by a hard-killed holder
+    whose recorded token EQUALS the token being acquired is adopted —
+    the only caller that can retry a checkpointed batch is the one
+    stream that owns the checkpoint, so a crash mid-batch self-heals on
+    replay instead of wedging the sink until a human runs
+    :func:`break_store_lease`. Tokenless acquisitions (ad-hoc
+    compaction, offline maintain) never adopt; the loser raises
+    RuntimeError naming the holder's recorded operation (the file's
+    mtime is the acquisition time).
+
+    The outermost acquisition also HEALS an interrupted
+    :func:`~eel_spark.sources.hdfs.staged_swap` on every path a store
+    swaps (``<root>``, ``<root>/postings``, ``<root>__bands``), so every
+    holder — appender, compactor or maintain — finds the store whole
+    before it reads or writes it."""
+    from eel_spark.sources.hdfs import HdfsOps, restore_interrupted_swap
 
     ops = HdfsOps(spark)
-    lease = path.rstrip("/") + MAINT_LEASE_SUFFIX
+    root = path.rstrip("/")
+    lease = root + MAINT_LEASE_SUFFIX
     held = _held_leases()
     if lease in held:
         return None
@@ -116,6 +125,12 @@ def acquire_store_lease(
                 "the single-writer-per-checkpoint contract"
             )
     held.add(lease)
+    try:
+        for swapped in (root, f"{root}/postings", root + "__bands"):
+            restore_interrupted_swap(ops, swapped)
+    except BaseException:
+        release_store_lease(spark, lease)
+        raise
     return lease
 
 
@@ -430,16 +445,17 @@ def maintain(
     without one raises rather than guessing.
 
     The no-active-appenders half of the compactors' offline contract is
-    MECHANICAL since r14: every appender and compactor of the five
-    batch-partitioned families holds the store's single-writer lease
-    (:func:`acquire_store_lease`; SCD2's own ``_scd_lease`` plays the
-    same role), so a maintain racing an append fails loudly at the
-    compact step instead of corrupting state. The REPLAY-HORIZON half
-    stays the caller's to honor — except inside the streaming sinks'
-    ``maintain_every`` cadence, which proves it from the batch id
-    (streams._maybe_maintain). Returns ``{"store_type", "action",
-    "before", "after"}`` with the report rows as dicts; ``action`` is
-    ``"compacted"`` or ``"none"``."""
+    MECHANICAL: every appender and compactor of all six families holds
+    the store's one single-writer lease (:func:`acquire_store_lease`),
+    so a maintain racing an append fails loudly at the compact step
+    instead of corrupting state, and whichever holder comes first after
+    a crash mid-compaction finds the store healed (the lease restores
+    an interrupted staged swap before its holder runs). The
+    REPLAY-HORIZON half stays the caller's to honor — except inside the
+    streaming sinks' ``maintain_every`` cadence, which proves it from
+    the batch id (streams._maybe_maintain). Returns ``{"store_type",
+    "action", "before", "after"}`` with the report rows as dicts;
+    ``action`` is ``"compacted"`` or ``"none"``."""
     st = store_type or detect_store_type(spark, path)
     before = store_maintenance_report(spark, path, store_type=st).first().asDict()
     needs = (

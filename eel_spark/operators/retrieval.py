@@ -503,9 +503,9 @@ def compact_bm25_stats(spark, path: str) -> None:
     re-adds its counts (the same contract as the rollup/dedup-history
     compactors). Crash recovery: the swap stages the old store at
     ``<path>__old`` before moving the compacted one in; if a crash
-    lands between the two renames, the next call restores the staged
-    store and re-compacts. The restore/stage/swap mechanics live in
-    ``sources/hdfs.staged_swap`` (shared with ``compact_ivf_index``)."""
+    lands between the two renames, the next store writer's lease
+    restores the staged store (``sources/hdfs.staged_swap``, the one
+    swap every store uses)."""
     from eel_spark.sources.hdfs import staged_swap
 
     store = path.rstrip("/")

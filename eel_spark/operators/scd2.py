@@ -56,21 +56,26 @@ marker: replaying a torn init redoes the (idempotent) init overwrite
 instead of misreading the half-written table as an initialized one.
 Single writer per table and in-order batch retry (a failed batch is
 retried before the next is attempted, as a streaming checkpoint
-guarantees) assumed, and ENFORCED by a ``_scd_lease`` file acquired via
-atomic create-if-absent (``HdfsOps.create_atomic``) before any marker
-check: two genuinely concurrent writers no longer race the
+guarantees) assumed, and ENFORCED by the one store lease every store
+writer takes (``maintenance.acquire_store_lease``, the
+``<path>__maint_lease`` sibling of the table root), acquired before any
+marker check: two genuinely concurrent writers never race the
 check-then-write window — the loser fails loudly at acquisition. The
-lease is released in a ``finally`` on every Python-level exit
-(success, rejection, crash-recovery exception); only a hard process
-kill strands it, and a stranded lease recording the SAME batch
-fingerprint is self-adopted by the retry (so checkpoint-replayed
-streaming merges keep their automatic crash recovery) — a
-different-batch lease needs :func:`break_scd2_lease` after confirming
-the holder is dead (the lease file records holder fingerprint +
-acquisition time). An inflight marker for a DIFFERENT
-batch still fails loudly (a crashed batch must be retried in order) —
-use a transactional table format when concurrent writers or readers
-matter.
+merge presents its batch fingerprint as the lease's adoption token, so
+a lease stranded by a hard-killed attempt at the SAME batch is adopted
+by the retry (checkpoint-replayed streaming merges keep their automatic
+crash recovery), while any other stranded lease needs
+``maintenance.break_store_lease`` after confirming the holder is dead.
+A stale in-root ``_scd_lease`` file left by older code is ignored. An
+inflight marker for a DIFFERENT batch still fails loudly (a crashed
+batch must be retried in order) — use a transactional table format when
+concurrent writers or readers matter.
+
+History rewrites (:func:`scd2_trim_history`, :func:`compact_scd2_history`)
+hold the same lease and swap the closed ``scd_current=0`` subtree by
+rename inside the root; every lease holder that touches closed history
+(merge, trim, compaction) first restores a subtree a crash left staged
+aside.
 """
 
 from __future__ import annotations
@@ -83,6 +88,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eel_spark.functions.hashes import row_digest
+from eel_spark.operators.maintenance import store_write_lease
 
 CURRENT_COL = "scd_current"  # partition: 1 = open version, 0 = closed
 BUCKET_COL = "scd_bucket"  # partition: hash(key) % n_buckets
@@ -92,7 +98,6 @@ BUCKET_COL = "scd_bucket"  # partition: hash(key) % n_buckets
 # of the table never see them
 INFLIGHT_DIR = "_scd_inflight"  # batch fingerprint, written pre-merge
 APPLIED_DIR = "_scd_applied"  # batch fingerprint, written post-merge
-LEASE_FILE = "_scd_lease"  # single-writer lock (atomic create-if-absent)
 
 
 def _keylist(keys: str | Sequence[str]) -> list[str]:
@@ -242,8 +247,6 @@ def scd2_merge(
         .withColumn("__rn", rn)
         .persist()
     )
-    lease = f"{path}/{LEASE_FILE}"
-    lease_held = False
     try:
         fp = _batch_fingerprint(chains, out_cols)
         applied = f"{path}/{APPLIED_DIR}/{fp}"
@@ -254,159 +257,124 @@ def scd2_merge(
         # path would fail the out-of-order check forever, while redoing
         # the init overwrite is idempotent (same batch → same partitions)
         inflight_init = f"{inflight}__init"
+        # the store's single-writer lease (maintenance.acquire_store_lease),
+        # taken BEFORE any marker check: the foreign-marker rejection
+        # below only catches a writer that already left an inflight
+        # marker — two writers racing the check-then-write window would
+        # both see a clean table. The batch fingerprint is the adoption
+        # token: under the single-writer + in-order-retry contract a
+        # same-fp lease can only be a hard-killed earlier attempt at this
+        # very batch, so its retry adopts it (automatic crash recovery).
+        # The flip side (accepted trade-off): a LIVE duplicate submission
+        # of the SAME batch — two callers concurrently merging identical
+        # data — also adopts and the two interleave. Preventing that is
+        # the caller's responsibility (Structured Streaming's checkpoint
+        # serializes same-query attempts, so the streaming sink satisfies
+        # it by construction); the lease fences writers of DIFFERENT
+        # batches unconditionally.
+        with store_write_lease(spark, path, "scd2_merge", token=fp):
+            # a crashed closed-history rewrite may have left the closed
+            # subtree staged aside: restore it before appending closed
+            # rows, or the append would start a new subtree beside it
+            _restore_closed_history(ops, path)
+            if ops.exists(applied):
+                # a crash between promoting the marker and deleting the
+                # inflight one leaves both: drop it, or it would read as
+                # a torn batch and wedge every later merge and compaction
+                ops.delete(inflight, recursive=True)
+                ops.delete(inflight_init, recursive=True)
+                return {
+                    "new_keys": 0, "changed": 0, "unchanged": 0, "closed": 0,
+                    "buckets_rewritten": 0, "replayed": True,
+                }
+            replay = ops.exists(inflight)
+            replay_init = ops.exists(inflight_init)
 
-        # single-writer LEASE, acquired via atomic create-if-absent
-        # BEFORE any marker check: the r8 foreign-marker rejection only
-        # catches a writer that already left an inflight marker — two
-        # writers racing the check-then-write window both saw a clean
-        # table. The namenode's atomic create picks exactly one winner;
-        # a loser holding a DIFFERENT batch fails loudly here. Released
-        # in the finally on every Python-level exit. A lease recording
-        # THIS batch's fingerprint is self-adopted: under the
-        # single-writer + in-order-retry contract a same-fp lease can
-        # only be a hard-killed earlier attempt at this very batch
-        # (e.g. a streaming_scd2_sink job OOM-killed mid-merge whose
-        # checkpoint replays the batch), and refusing it would turn the
-        # documented automatic crash recovery into a manual
-        # break_scd2_lease step. The flip side (r10 ADVICE, accepted
-        # trade-off): the lease records only the batch fp, so a LIVE
-        # duplicate submission of the SAME batch — two callers
-        # concurrently merging identical data — also self-adopts and the
-        # two interleave. Preventing duplicate concurrent submission of
-        # one batch is the caller's responsibility (Structured
-        # Streaming's checkpoint serializes same-query attempts, so the
-        # streaming sink satisfies it by construction); the lease exists
-        # to fence writers of DIFFERENT batches, which it does
-        # unconditionally.
-        if not ops.create_atomic(lease, content=fp + "\n"):
-            try:
-                holder_fp = ops.read_text(lease).strip()
-            except Exception:
-                holder_fp = "<unreadable>"
-            if holder_fp != fp:
-                holder = ops.list_status(lease)
-                held = (
-                    f", acquired at epoch-ms "
-                    f"{holder[0]['modification_time']}"
-                    if holder
-                    else ""
-                )
+            # single-writer guard: an inflight marker for a DIFFERENT batch
+            # means either a crashed batch was never retried (the in-order
+            # retry contract requires retrying it before attempting the next
+            # batch) or a second writer is mid-merge right now. Interleaving
+            # would corrupt both batches' recovery, so fail loudly — this
+            # converts a silent-corruption risk into an explicit error.
+            foreign = [
+                st["name"]
+                for st in ops.list_status(f"{path}/{INFLIGHT_DIR}/*")
+                if st["name"] not in (fp, f"{fp}__init")
+            ]
+            if foreign:
                 raise RuntimeError(
-                    f"SCD2 table at {path} is locked by another writer "
-                    f"(lease {lease}, holder batch {holder_fp!r}{held}): "
-                    "merges are single-writer — wait for the holder to "
-                    "finish, or if its process was hard-killed, remove "
-                    "the stale lease with break_scd2_lease(spark, path) "
-                    "before retrying"
+                    f"SCD2 table at {path} has inflight marker(s) for a "
+                    f"different batch ({foreign}): either a crashed merge "
+                    "was never retried (retry THAT batch first — in-order "
+                    "retry is part of the crash contract) or a second "
+                    "writer is running concurrently (this merge is "
+                    "single-writer; use a transactional table format for "
+                    "concurrent writers)"
                 )
-        lease_held = True
-        if ops.exists(applied):
-            return {
-                "new_keys": 0, "changed": 0, "unchanged": 0, "closed": 0,
-                "buckets_rewritten": 0, "replayed": True,
-            }
-        replay = ops.exists(inflight)
-        replay_init = ops.exists(inflight_init)
 
-        # single-writer guard: an inflight marker for a DIFFERENT batch
-        # means either a crashed batch was never retried (the in-order
-        # retry contract requires retrying it before attempting the next
-        # batch) or a second writer is mid-merge right now. Interleaving
-        # would corrupt both batches' recovery, so fail loudly — this
-        # converts a silent-corruption risk into an explicit error.
-        foreign = [
-            st["name"]
-            for st in ops.list_status(f"{path}/{INFLIGHT_DIR}/*")
-            if st["name"] not in (fp, f"{fp}__init")
-        ]
-        if foreign:
-            raise RuntimeError(
-                f"SCD2 table at {path} has inflight marker(s) for a "
-                f"different batch ({foreign}): either a crashed merge "
-                "was never retried (retry THAT batch first — in-order "
-                "retry is part of the crash contract) or a second "
-                "writer is running concurrently (this merge is "
-                "single-writer; use a transactional table format for "
-                "concurrent writers)"
-            )
+            # markers live under the table root, so "table initialized" is
+            # the existence of the current-rows partition dir, not of path
+            if replay_init or not ops.exists(f"{path}/{CURRENT_COL}=1"):
+                n = chains.count()  # materializes the pin
+                new_keys = chains.select(*ks).distinct().count()
+                ops.mkdirs(inflight_init)
+                # dynamic overwrite (not a root truncate): replaces only the
+                # partitions in the data, never the marker dirs — so a crash
+                # before the applied marker replays through this same branch
+                _write_generation(
+                    chains.select(*out_cols), ks, path, n_buckets, dynamic=True
+                )
+                ops.mkdirs(applied)
+                ops.delete(inflight_init, recursive=True)
+                return {
+                    "new_keys": new_keys,
+                    "changed": 0,
+                    "unchanged": 0,
+                    "closed": n - new_keys,
+                    "buckets_rewritten": -1,
+                    "replayed": replay_init,
+                }
 
-        # markers live under the table root, so "table initialized" is
-        # the existence of the current-rows partition dir, not of path
-        if replay_init or not ops.exists(f"{path}/{CURRENT_COL}=1"):
-            n = chains.count()  # materializes the pin
-            new_keys = chains.select(*ks).distinct().count()
-            ops.mkdirs(inflight_init)
-            # dynamic overwrite (not a root truncate): replaces only the
-            # partitions in the data, never the marker dirs — so a crash
-            # before the applied marker replays through this same branch
-            _write_generation(
-                chains.select(*out_cols), ks, path, n_buckets, dynamic=True
-            )
-            ops.mkdirs(applied)
-            ops.delete(inflight_init, recursive=True)
-            return {
-                "new_keys": new_keys,
-                "changed": 0,
-                "unchanged": 0,
-                "closed": n - new_keys,
-                "buckets_rewritten": -1,
-                "replayed": replay_init,
-            }
-
-        touched = [
-            int(r["__b"])
-            for r in chains.select(
-                _bucket(ks, n_buckets).alias("__b")
-            )
-            .distinct()
-            .collect()
-        ]
-        cur = (
-            spark.read.parquet(path)
-            .where(
-                (F.col(CURRENT_COL) == 1)
-                & F.col(BUCKET_COL).isin(touched)
-            )
-            .drop(CURRENT_COL, BUCKET_COL)
-            .persist()
-        )
-        # crash recovery ONLY: the touched buckets' full history (open +
-        # closed) — the normal path never lists a closed partition
-        hist = None
-        if replay:
-            hist = (
+            touched = [
+                int(r["__b"])
+                for r in chains.select(
+                    _bucket(ks, n_buckets).alias("__b")
+                )
+                .distinct()
+                .collect()
+            ]
+            cur = (
                 spark.read.parquet(path)
-                .where(F.col(BUCKET_COL).isin(touched))
-                .drop(BUCKET_COL)
+                .where(
+                    (F.col(CURRENT_COL) == 1)
+                    & F.col(BUCKET_COL).isin(touched)
+                )
+                .drop(CURRENT_COL, BUCKET_COL)
+                .persist()
             )
-        try:
-            stats = _merge_pinned(
-                spark, path, chains, cur, ks, attrs, out_cols, touched,
-                n_buckets, hist=hist,
-                mark_inflight=lambda: ops.mkdirs(inflight),
-            )
-            ops.mkdirs(applied)
-            ops.delete(inflight, recursive=True)
-            stats["replayed"] = replay
-            return stats
-        finally:
-            cur.unpersist()
+            # crash recovery ONLY: the touched buckets' full history (open +
+            # closed) — the normal path never lists a closed partition
+            hist = None
+            if replay:
+                hist = (
+                    spark.read.parquet(path)
+                    .where(F.col(BUCKET_COL).isin(touched))
+                    .drop(BUCKET_COL)
+                )
+            try:
+                stats = _merge_pinned(
+                    spark, path, chains, cur, ks, attrs, out_cols, touched,
+                    n_buckets, hist=hist,
+                    mark_inflight=lambda: ops.mkdirs(inflight),
+                )
+                ops.mkdirs(applied)
+                ops.delete(inflight, recursive=True)
+                stats["replayed"] = replay
+                return stats
+            finally:
+                cur.unpersist()
     finally:
-        if lease_held:
-            ops.delete(lease)
         chains.unpersist()
-
-
-def break_scd2_lease(spark: SparkSession, path: str) -> bool:
-    """Remove a stranded single-writer lease left by a hard-killed merge
-    process (every Python-level exit releases it automatically). Returns
-    True when a lease file was actually removed. Only break a lease
-    after confirming its holder is dead — the file records the holder's
-    batch fingerprint, and ``HdfsOps.list_status`` on it shows the
-    acquisition time."""
-    from eel_spark.sources.hdfs import HdfsOps
-
-    return HdfsOps(spark).delete(f"{path}/{LEASE_FILE}")
 
 
 def _batch_fingerprint(chains: DataFrame, cols: list[str]) -> str:
@@ -856,40 +824,55 @@ def read_scd2_asof(spark: SparkSession, path: str, ts) -> DataFrame:
 
 # trim and compaction share ONE pair of staged-swap names (kept from the
 # r10 trim for on-disk compat), so whichever tool runs next after a crash
-# recognizes and recovers the other's interrupted swap — distinct names
-# would make trim silently treat a compaction's staged-aside closed
-# history as "no closed history at all"
+# recognizes and recovers the other's interrupted swap. They live INSIDE
+# the root with a leading underscore: a ``scd_current=0__old`` sibling
+# would be read by Spark's partition discovery as a partition value.
 _CLOSED_TRASH = "_scd_trim_old"
 _CLOSED_STAGING = "_scd_trim_staging"
 
 
+def _restore_closed_history(ops, path: str) -> None:
+    """Heal an interrupted :func:`_swap_closed_history` (crash between
+    its two renames). Run by every holder of the store lease that
+    touches the closed subtree (merge, trim, compaction)."""
+    from eel_spark.sources.hdfs import restore_interrupted_swap
+
+    restore_interrupted_swap(
+        ops, f"{path}/{CURRENT_COL}=0", aside=f"{path}/{_CLOSED_TRASH}"
+    )
+
+
+def _swap_closed_history(ops, path: str, staging: str | None, tag: str):
+    """Replace the closed subtree with ``staging`` (``None``: remove
+    it): stage the old subtree aside, rename the new one in (rolled back
+    if that rename fails), drop the old one. A crash between the renames
+    is healed by :func:`_restore_closed_history`."""
+    closed_root = f"{path}/{CURRENT_COL}=0"
+    trash = f"{path}/{_CLOSED_TRASH}"
+    if not ops.rename(closed_root, trash):
+        raise IOError(f"scd2 history {tag}: could not stage {closed_root} aside")
+    if staging is not None and not ops.rename(staging, closed_root):
+        ops.rename(trash, closed_root)  # roll back
+        raise IOError(f"scd2 history {tag}: could not swap in {staging}")
+    ops.delete(trash, recursive=True)
+
+
 @_contextmanager
 def _closed_history_writer(spark: SparkSession, path: str, tag: str):
-    """Shared prologue/epilogue for closed-history rewriters (retention
-    trim, small-files compaction): acquire the single-writer
-    ``_scd_lease`` (these are writes — interleaving with a merge would
-    corrupt both), refuse tables with inflight markers (a torn batch's
-    in-order retry re-reads the touched buckets' FULL history —
-    rewriting closed rows underneath it would break the repair), recover
-    an interrupted swap (crash between the two renames leaves the
-    authoritative subtree staged aside), and reap stale leftovers UP
-    FRONT (a crash after a successful swap but before the trash delete
-    must not strand a full closed-history copy behind the early-return
-    paths). Underscore-prefixed staging names keep Spark's file index
-    blind to both dirs, so a crash never breaks partition discovery.
-    Yields ``(ops, closed_root, trash, staging)``; the lease releases on
-    every Python-level exit."""
+    """Shared prologue for closed-history rewriters (retention trim,
+    small-files compaction): hold the store lease (these are writes —
+    interleaving with a merge would corrupt both), refuse tables with
+    inflight markers (a torn batch's in-order retry re-reads the touched
+    buckets' FULL history — rewriting closed rows underneath it would
+    break the repair), recover an interrupted swap, and reap stale
+    leftovers UP FRONT (a crash after a successful swap but before the
+    trash delete must not strand a full closed-history copy behind the
+    early-return paths). Yields ``(ops, closed_root, staging)``; the
+    lease releases on every Python-level exit."""
     from eel_spark.sources.hdfs import HdfsOps
 
     ops = HdfsOps(spark)
-    lease = f"{path}/{LEASE_FILE}"
-    if not ops.create_atomic(lease, content=f"__{tag}__\n"):
-        raise RuntimeError(
-            f"SCD2 table at {path} is locked by another writer (lease "
-            f"{lease}): {tag} is a write — wait for the holder, or use "
-            "break_scd2_lease(spark, path) if it was hard-killed"
-        )
-    try:
+    with store_write_lease(spark, path, f"scd2_history_{tag}"):
         inflight = [
             st["name"] for st in ops.list_status(f"{path}/{INFLIGHT_DIR}/*")
         ]
@@ -899,21 +882,11 @@ def _closed_history_writer(spark: SparkSession, path: str, tag: str):
                 f"({inflight}): a crashed merge must be retried (and "
                 f"repaired) before a history {tag}"
             )
-        closed_root = f"{path}/{CURRENT_COL}=0"
-        trash = f"{path}/{_CLOSED_TRASH}"
+        _restore_closed_history(ops, path)
         staging = f"{path}/{_CLOSED_STAGING}"
-        if not ops.exists(closed_root) and ops.exists(trash):
-            # interrupted swap: the staged-aside subtree is authoritative
-            if not ops.rename(trash, closed_root):
-                raise IOError(
-                    f"scd2 history {tag}: could not restore {trash} "
-                    "after an interrupted swap"
-                )
-        ops.delete(trash, recursive=True)
+        ops.delete(f"{path}/{_CLOSED_TRASH}", recursive=True)
         ops.delete(staging, recursive=True)
-        yield ops, closed_root, trash, staging
-    finally:
-        ops.delete(lease)
+        yield ops, f"{path}/{CURRENT_COL}=0", staging
 
 
 def scd2_trim_history(
@@ -930,18 +903,17 @@ def scd2_trim_history(
     that is the point of retention, pick ``older_than`` behind every
     replay/audit horizon.
 
-    Mechanics: takes the single-writer ``_scd_lease`` (trim is a write —
-    interleaving with a merge would corrupt both), rewrites the
-    surviving closed rows into a staged ``scd_current=0`` subtree, and
-    swaps it in by rename with the same crash contract as the other
-    compactors (crash between the two renames → the next call restores
-    the staged-aside subtree and re-trims). Buckets whose closed history
+    Mechanics: takes the store lease (trim is a write — interleaving
+    with a merge would corrupt both), rewrites the surviving closed rows
+    into a staged ``scd_current=0`` subtree, and swaps it in by rename
+    with the same crash contract as compaction (crash between the two
+    renames → the next lease holder restores the staged-aside subtree). Buckets whose closed history
     expires ENTIRELY disappear with the swap — the reason this is a
     subtree swap and not a dynamic partition overwrite, which only
     rewrites partitions present in the new data and would strand
     all-expired buckets. Returns {"dropped", "kept"}."""
     with _closed_history_writer(spark, path, "trim") as (
-        ops, closed_root, trash, staging,
+        ops, closed_root, staging,
     ):
         has_files = bool(
             ops.list_status(f"{closed_root}/{BUCKET_COL}=*/*.parquet")
@@ -964,22 +936,13 @@ def scd2_trim_history(
             # nothing survives: remove the subtree (no empty staging dir
             # that a later read would choke on); same crash contract —
             # a kill after the rename restores from trash next call
-            if not ops.rename(closed_root, trash):
-                raise IOError(
-                    f"scd2_trim_history: could not stage {closed_root} aside"
-                )
-            ops.delete(trash, recursive=True)
+            _swap_closed_history(ops, path, None, "trim")
             return {"dropped": total, "kept": 0}
         # stage the surviving subtree, then swap (bucket dirs that lost
         # ALL rows simply do not exist in the staged tree)
         keep = closed.where(keep_cond)
         keep.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
-        if not ops.rename(closed_root, trash):
-            raise IOError(f"scd2_trim_history: could not stage {closed_root} aside")
-        if not ops.rename(staging, closed_root):
-            ops.rename(trash, closed_root)  # roll back
-            raise IOError(f"scd2_trim_history: could not swap in {staging}")
-        ops.delete(trash, recursive=True)
+        _swap_closed_history(ops, path, staging, "trim")
         return {"dropped": total - kept, "kept": kept}
 
 
@@ -1003,7 +966,7 @@ def compact_scd2_history(spark: SparkSession, path: str) -> dict:
     readers that hold open file handles across the swap. Returns
     {"files_before", "files_after", "buckets", "rows"}."""
     with _closed_history_writer(spark, path, "compaction") as (
-        ops, closed_root, trash, staging,
+        ops, closed_root, staging,
     ):
         files = ops.list_status(
             f"{closed_root}/{BUCKET_COL}=*/*.parquet"
@@ -1028,16 +991,7 @@ def compact_scd2_history(spark: SparkSession, path: str) -> dict:
             .partitionBy(BUCKET_COL)
             .parquet(staging)
         )
-        if not ops.rename(closed_root, trash):
-            raise IOError(
-                f"compact_scd2_history: could not stage {closed_root} aside"
-            )
-        if not ops.rename(staging, closed_root):
-            ops.rename(trash, closed_root)  # roll back
-            raise IOError(
-                f"compact_scd2_history: could not swap in {staging}"
-            )
-        ops.delete(trash, recursive=True)
+        _swap_closed_history(ops, path, staging, "compaction")
         n_after = len(
             ops.list_status(f"{closed_root}/{BUCKET_COL}=*/*.parquet")
         )

@@ -1089,17 +1089,17 @@ def read_ivf_centroids(spark, path: str) -> DataFrame:
     root = path.rstrip("/")
     ops = HdfsOps(spark)
     if not ops.exists(f"{root}/centroids"):
-        # a reindex/compact that crashed between staged_swap's two root
-        # renames leaves the REAL corpus staged at <root>__old; telling
-        # the caller to init would create a fresh index beside it, and
-        # the next swap's __old cleanup would then destroy the corpus.
-        # Route readers (and appenders — they come through here) to the
-        # healing operators instead (r12 advice).
+        # a reindex that crashed between staged_swap's two root renames
+        # leaves the REAL corpus staged at <root>__old; telling the
+        # caller to init would create a fresh index beside it. Readers
+        # take no lease, so route them to any writer (its lease
+        # acquisition heals the swap) instead.
         if ops.exists(root + "__old"):
             raise ValueError(
                 f"interrupted reindex/compact at {path}: the index is "
-                f"staged aside at {root}__old — re-run reindex_ivf_index "
-                "or compact_ivf_index (either heals the swap) instead of "
+                f"staged aside at {root}__old — run any index writer "
+                "(append_ivf_batch, compact_ivf_index, reindex_ivf_index "
+                "— its store lease heals the swap) instead of "
                 "init_ivf_index"
             )
         raise ValueError(f"no IVF index at {path} — call init_ivf_index first")
@@ -1596,17 +1596,9 @@ def compact_ivf_index(spark, path: str) -> None:
     their PQ code array — one projection over rows already being
     rewritten, so after compaction the degraded-legacy class is GONE
     and the BQ/ADC paths rank every row at full fidelity."""
-    from eel_spark.sources.hdfs import (
-        HdfsOps,
-        restore_interrupted_swap,
-        staged_swap,
-    )
+    from eel_spark.sources.hdfs import staged_swap
 
     store = f"{path.rstrip('/')}/postings"
-    # heal a crashed reindex_ivf_index ROOT swap before reading the
-    # centroids/books it would have staged aside (r12 review — the
-    # mirror of reindex healing compaction's postings swap)
-    restore_interrupted_swap(HdfsOps(spark), path.rstrip("/"))
     dim = read_ivf_centroids(spark, path).select(
         F.size("centroid").alias("d")
     ).first()["d"]
@@ -1717,21 +1709,10 @@ def reindex_ivf_index(
     Queries served from the reindexed store are bit-identical to
     one-shot ``ivf_topk`` with the new centroids over the union of
     appended waves (tested)."""
-    from eel_spark.sources.hdfs import (
-        HdfsOps,
-        restore_interrupted_swap,
-        staged_swap,
-    )
+    from eel_spark.sources.hdfs import HdfsOps, staged_swap
 
     ops = HdfsOps(spark)
     root = path.rstrip("/")
-    # this operator READS the store before its own staged_swap runs, so
-    # heal interrupted prior swaps first — its own root swap AND a
-    # crashed compact_ivf_index's postings swap (r12 review: without
-    # the second restore, compact-crash → reindex failed on the
-    # missing postings dir that compact's own retry would have healed)
-    restore_interrupted_swap(ops, root)
-    restore_interrupted_swap(ops, f"{root}/postings")
     old_cents = read_ivf_centroids(spark, path)
     dim = old_cents.select(F.size("centroid").alias("d")).first()["d"]
     books = read_ivf_pq_books(spark, path)
@@ -1763,10 +1744,6 @@ def reindex_ivf_index(
             )
 
     def rewrite(tmp: str) -> None:
-        # a crashed earlier attempt leaves a half-built replacement root
-        # here — always rebuild from scratch (the store itself is still
-        # authoritative until the swap)
-        ops.delete(tmp, recursive=True)
         if books is not None:
             books.write.mode("overwrite").parquet(f"{tmp}/pq_books")
         centroids.select("cell_id", "centroid").write.mode(

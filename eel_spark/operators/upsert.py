@@ -11,10 +11,12 @@ touched-partition list collects to the driver bounded by the batch's
 distinct partition values, not by data size.
 
 Without a partition column the whole table must merge (there is
-nothing to prune); the rewrite goes through a temp directory and a
-filesystem rename so the readable table is never half-written — but
-the delete→rename window is NOT transactional (use a real table
-format when concurrent readers matter).
+nothing to prune); the rewrite goes through ``sources/hdfs.staged_swap``
+— the one swap every store uses — so the readable table is never
+half-written and a crash at any point leaves it whole, or staged aside
+at ``<path>__old``, which the next upsert restores on entry. Readers
+between the swap's two renames see no table (use a real table format
+when concurrent readers matter).
 """
 
 from __future__ import annotations
@@ -107,11 +109,19 @@ def _upsert_pinned(
     partition_col: str | None,
     prune: bool,
 ) -> dict:
-    from eel_spark.sources.hdfs import HdfsOps
+    from eel_spark.sources.hdfs import (
+        HdfsOps,
+        restore_interrupted_swap,
+        staged_swap,
+    )
 
     ops = HdfsOps(spark)
     writer_cols = updates.columns
 
+    # no lease here, so heal a crashed full rewrite's swap ourselves —
+    # before the exists check, which would otherwise read the staged
+    # table as "no table" and replace it with the batch alone
+    restore_interrupted_swap(ops, path.rstrip("/"))
     if not ops.exists(path):
         w = updates.write.mode("overwrite")
         if partition_col:
@@ -169,22 +179,17 @@ def _upsert_pinned(
         )
         rewritten = len(touched)
     else:
-        # full rewrite via temp swap. NOT dynamic overwrite: a dynamic
-        # write only replaces partitions PRESENT in the output, so a
-        # partition whose every row moved away (prune=False exists
+        # full rewrite via the staged swap. NOT dynamic overwrite: a
+        # dynamic write only replaces partitions PRESENT in the output,
+        # so a partition whose every row moved away (prune=False exists
         # precisely to allow key moves) would keep its stale files
-        tmp = path.rstrip("/") + "__upsert_tmp"
-        ops.delete(tmp, recursive=True)
-        w = merged.write.mode("overwrite")
-        if partition_col:
-            w = w.partitionBy(partition_col)
-        w.parquet(tmp)
-        ops.delete(path, recursive=True)
-        if not ops.rename(tmp, path):
-            raise IOError(
-                f"rename {tmp} -> {path} failed; merged data is intact "
-                "under the temp path"
-            )
+        def write(tmp: str) -> None:
+            w = merged.write.mode("overwrite")
+            if partition_col:
+                w = w.partitionBy(partition_col)
+            w.parquet(tmp)
+
+        staged_swap(spark, path.rstrip("/"), write)
         rewritten = -1  # full rewrite: every partition
 
     return {

@@ -208,46 +208,52 @@ class HdfsWatcher:
                 time.sleep(interval_sec)
 
 
-def restore_interrupted_swap(ops: HdfsOps, store: str) -> bool:
+def restore_interrupted_swap(
+    ops: HdfsOps, store: str, aside: str | None = None
+) -> bool:
     """If a prior :func:`staged_swap` of ``store`` was interrupted
-    between its two renames (store missing, ``<store>__old`` present),
-    the staged-aside copy is authoritative — move it back. Returns True
-    when a restore happened. Shared by ``staged_swap`` itself and by
-    operators that READ a store (or a sibling store under the same
-    root) before calling it, e.g. ``reindex_ivf_index`` /
-    ``compact_ivf_index``, so a crash in ANY of the swapping operators
-    is healed by whichever runs next."""
-    if not ops.exists(store) and ops.exists(store + "__old"):
-        if not ops.rename(store + "__old", store):
+    between its two renames (store missing, its staged-aside copy
+    ``aside`` — default ``<store>__old`` — present), the staged-aside
+    copy is authoritative — move it back. Returns True when a restore
+    happened. Called by the outermost
+    ``maintenance.acquire_store_lease`` on every path a store swaps, by
+    ``upsert_parquet`` (which takes no lease) on its own path, and by
+    the SCD2 writers for the closed subtree they swap inside the root,
+    so whichever writer runs next after a crash finds the store whole."""
+    aside = aside or store + "__old"
+    if not ops.exists(store) and ops.exists(aside):
+        if not ops.rename(aside, store):
             raise IOError(
-                f"staged_swap: could not restore staged store "
-                f"{store}__old after an interrupted swap"
+                f"could not restore staged store {aside} after an "
+                "interrupted swap"
             )
         return True
     return False
 
 
 def staged_swap(spark: SparkSession, store: str, write_fn) -> None:
-    """Crash-safe whole-store replacement, shared by the increment-store
-    compactors (``compact_bm25_stats``, ``compact_ivf_index``): a static
+    """Crash-safe whole-store replacement — the ONE swap every store
+    rewrite uses (the BM25, IVF, frontier and dedup-history compactors,
+    the IVF reindex, ``upsert_parquet``'s full rewrite): a static
     overwrite of the store root would truncate before writing, so a
     crash mid-write loses the store. Instead:
 
-    1. If a PRIOR swap was interrupted between its two renames (store
-       missing, ``<store>__old`` present) the staged-aside copy is
-       authoritative — restore it first.
-    2. ``write_fn(tmp)`` builds the replacement at
-       ``<store>__compacting`` (same filesystem → rename-able); it may
-       read the (restored) store freely.
-    3. Swap: store → ``__old``, tmp → store (rolled back if the second
+    1. ``write_fn(tmp)`` builds the replacement at a fresh
+       ``<store>__compacting`` (same filesystem → rename-able; a
+       crashed attempt's half-built tree is deleted first); it may read
+       the store freely.
+    2. Swap: store → ``__old``, tmp → store (rolled back if the second
        rename fails), then drop ``__old``.
 
-    Run OFFLINE relative to appenders — data landing in the store
-    between write_fn's read and the swap is destroyed by it (the
-    documented compactor contract)."""
+    At every crash point the store is either whole at ``store`` or
+    whole at ``<store>__old`` with ``store`` missing. The caller must
+    heal the second state before reading (:func:`restore_interrupted_swap`
+    — the store lease does it on acquisition). Run OFFLINE relative to
+    appenders — data landing in the store between write_fn's read and
+    the swap is destroyed by it (the lease enforces this)."""
     tmp = store + "__compacting"
     ops = HdfsOps(spark)
-    restore_interrupted_swap(ops, store)
+    ops.delete(tmp, recursive=True)
     write_fn(tmp)
     ops.delete(store + "__old", recursive=True)
     if not ops.rename(store, store + "__old"):

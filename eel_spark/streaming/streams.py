@@ -1160,26 +1160,15 @@ def frontier_store_sink(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         from eel_spark.operators.crawl import frontier_admit_batch
-        from eel_spark.operators.maintenance import (
-            acquire_store_lease,
-            release_store_lease,
-        )
 
         _maybe_maintain(
             spark, store_path, batch_id, maintain_every, maintain_kwargs
         )
         if batch_df.isEmpty():
             return
-        __lease = acquire_store_lease(
-            spark, store_path, "frontier_append", token=f"batch={batch_id}"
+        frontier_admit_batch(
+            batch_df, store_path, batch_id, url_col=url_col, ts_col=ts_col
         )
-        try:
-            frontier_admit_batch(
-                batch_df, store_path, batch_id, url_col=url_col,
-                ts_col=ts_col,
-            )
-        finally:
-            release_store_lease(spark, __lease)
 
     return (
         urls.writeStream.foreachBatch(write_batch)
@@ -1290,37 +1279,38 @@ def compact_dedup_history(spark: SparkSession, survivor_path: str) -> None:
     suppresses them and the store stays correct, but its exactly-once
     eviction is spent.
 
-    The rewrite lands in sibling ``…__compact_tmp`` directories first,
-    then swaps via delete+rename (overwriting a path while reading it is
-    a data-loss hazard). Like upsert's unpartitioned path, the swap is
-    two renames, not a transaction — a crash between them leaves the
-    ``__compact_tmp`` dirs intact for manual completion, and the
-    original is only deleted after its replacement finished writing.
+    Both tables are rewritten through ``sources/hdfs.staged_swap``, one
+    after the other: a crash at any point leaves each table whole (or
+    staged aside, which the next writer's lease restores), and a crash
+    between the two swaps leaves a compacted survivor table beside a
+    per-batch bands table — the same rows, so appends stay correct and
+    the next compaction finishes the job.
     """
-    from eel_spark.sources.hdfs import HdfsOps
+    from eel_spark.sources.hdfs import staged_swap
 
-    ops = HdfsOps(spark)
     bands_path = survivor_path + "__bands"
-    for path, build in (
+
+    def survivors(tmp: str) -> None:
         (
-            survivor_path,
-            lambda df: df.withColumn("batch_id", F.lit(-1))
+            spark.read.parquet(survivor_path).drop("batch_id")
+            .withColumn("batch_id", F.lit(-1))
             .write.mode("overwrite")
-            .partitionBy("batch_id"),
-        ),
+            .partitionBy("batch_id")
+            .parquet(tmp)
+        )
+
+    def bands(tmp: str) -> None:
         (
-            bands_path,
-            lambda df: df.withColumn("batch_id", F.lit(-1))
+            spark.read.parquet(bands_path).drop("batch_id")
+            .withColumn("batch_id", F.lit(-1))
             .repartition("band", "kp")
             .write.mode("overwrite")
-            .partitionBy("batch_id", "band", "kp"),
-        ),
-    ):
-        tmp = path + "__compact_tmp"
-        src = spark.read.parquet(path).drop("batch_id")
-        build(src).parquet(tmp)
-        ops.delete(path, recursive=True)
-        ops.rename(tmp, path)
+            .partitionBy("batch_id", "band", "kp")
+            .parquet(tmp)
+        )
+
+    staged_swap(spark, survivor_path, survivors)
+    staged_swap(spark, bands_path, bands)
 
 
 def _maybe_maintain(
@@ -1345,36 +1335,32 @@ def _maybe_maintain(
         detect_store_type,
         maintain,
         max_live_batch_id,
+        store_write_lease,
     )
 
-    try:
-        st = detect_store_type(spark, path)
-    except ValueError:
-        return  # store not materialized yet (prior batches wrote nothing)
-    kw = dict(maintain_kwargs or {})
-    if st != "scd2":
-        live = max_live_batch_id(spark, path, st)
-        if live is not None and live >= batch_id:
-            return  # torn prior attempt of this batch — not provably safe
-        # "compact every N batches" intent: the store holds ~N live
-        # increments at each cadence point, so the threshold must sit
-        # just under it (callers can still override via maintain_kwargs)
-        kw.setdefault("max_batches", max(int(maintain_every) - 1, 1))
     # hold the lease with THIS batch's adoption token across the whole
     # maintain (the inner compactor's acquisition is re-entrant): a
     # hard kill mid-compaction strands a lease the REPLAY of this batch
     # adopts, so the unattended cadence self-heals instead of wedging
-    # the sink until a human breaks the lock (scd2's compactor keeps
-    # its own in-root lease — not wrapped, same as before)
-    from eel_spark.operators.maintenance import store_write_lease
-
-    if st == "scd2":
+    # the sink until a human breaks the lock. Taken before detection so
+    # the lease's heal has restored an interrupted swap first.
+    with store_write_lease(
+        spark, path, "maintain_every", token=f"batch={batch_id}"
+    ):
+        try:
+            st = detect_store_type(spark, path)
+        except ValueError:
+            return  # store not materialized yet (prior batches wrote nothing)
+        live = max_live_batch_id(spark, path, st)
+        if live is not None and live >= batch_id:
+            return  # torn prior attempt of this batch — not provably safe
+        kw = dict(maintain_kwargs or {})
+        # "compact every N batches" intent: the store holds ~N live
+        # increments at each cadence point, so the threshold must sit
+        # just under it (callers can still override via maintain_kwargs;
+        # scd2's policy reads max_files_per_leaf instead)
+        kw.setdefault("max_batches", max(int(maintain_every) - 1, 1))
         maintain(spark, path, store_type=st, **kw)
-    else:
-        with store_write_lease(
-            spark, path, "maintain_every", token=f"batch={batch_id}"
-        ):
-            maintain(spark, path, store_type=st, **kw)
 
 
 def streaming_scd2_sink(
@@ -1414,19 +1400,27 @@ def streaming_scd2_sink(
     safe between merges because a replayed merge self-no-ops on its
     batch fingerprint regardless of the files' layout.
     """
+    from eel_spark.operators.maintenance import store_write_lease
     from eel_spark.operators.scd2 import scd2_merge
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
         _maybe_maintain(
-            batch_df.sparkSession, path, batch_id, maintain_every,
-            maintain_kwargs,
+            spark, path, batch_id, maintain_every, maintain_kwargs
         )
         if batch_df.isEmpty():
             return
-        scd2_merge(
-            batch_df.sparkSession, path, batch_df, keys, attr_cols,
-            ts_col, order_cols, n_buckets=n_buckets,
-        )
+        # hold the lease under the batch-id token (the merge's own
+        # fingerprint-token acquisition is then re-entrant): a replay
+        # after a hard kill mid-merge presents batch=N first — at the
+        # cadence maintain or here — and adopts the stranded lease
+        with store_write_lease(
+            spark, path, "scd2_append", token=f"batch={batch_id}"
+        ):
+            scd2_merge(
+                spark, path, batch_df, keys, attr_cols, ts_col,
+                order_cols, n_buckets=n_buckets,
+            )
 
     return (
         df.writeStream.foreachBatch(fold)
@@ -1513,14 +1507,15 @@ def streaming_funnel_report_sink(
     batch: restarting with a different value would re-hash users into
     different buckets, and the bucket-pruned merge would silently leave
     each user's OLD row standing beside the new one — the mismatch
-    raises instead. The store is SINGLE-WRITER, enforced like scd2's:
-    each batch takes a ``_report_lease`` via atomic create-if-absent —
-    a second query (or offline upsert) racing the keyed merge would
-    silently lose rows — and a stale lease recording THIS batch id
-    self-adopts (a hard-killed attempt whose checkpoint replays the
-    batch), while a foreign holder fails loudly. Per-trigger cost: one
-    bucket-pruned merge of the batch's users + one O(users) aggregate —
-    events are never rescanned."""
+    raises instead. The store is SINGLE-WRITER: each batch holds the
+    store lease on ``path`` (``maintenance.acquire_store_lease``, token
+    ``batch=N``) — a second query (or offline upsert) racing the keyed
+    merge would silently lose rows — and a stale lease recording THIS
+    batch id self-adopts (a hard-killed attempt whose checkpoint
+    replays the batch), while a foreign holder fails loudly. A stale
+    in-root ``_report_lease`` file left by older code is ignored.
+    Per-trigger cost: one bucket-pruned merge of the batch's users + one
+    O(users) aggregate — events are never rescanned."""
     from eel_spark.operators.funnel import funnel_state_report
     from eel_spark.operators.upsert import upsert_parquet
 
@@ -1535,32 +1530,22 @@ def streaming_funnel_report_sink(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
 
-        from eel_spark.caching import pins_mark, release_pins_since
-
-        from eel_spark.caching import pin
+        from eel_spark.caching import pin, pins_mark, release_pins_since
+        from eel_spark.operators.maintenance import (
+            acquire_store_lease,
+            release_store_lease,
+        )
         from eel_spark.sources.hdfs import HdfsOps
 
         mark = pins_mark()
         spark = batch_df.sparkSession
         ops = HdfsOps(spark)
-        lease = f"{path}/_report_lease"
-        lease_tag = f"batch {int(batch_id)}\n"
-        if not ops.create_atomic(lease, content=lease_tag):
-            try:
-                holder = ops.read_text(lease)
-            except Exception:
-                holder = "<unreadable>"
-            if holder != lease_tag:
-                raise RuntimeError(
-                    f"funnel report store at {path} is locked by "
-                    f"another writer (lease {lease}, holder "
-                    f"{holder.strip()!r}): the keyed state merge is "
-                    "single-writer — stop the other query, or delete "
-                    "the lease if its process was hard-killed"
-                )
-            # same batch id: a hard-killed earlier attempt this
-            # checkpoint replay is re-running — adopt and redo (the
-            # keyed upsert makes the redo idempotent)
+        # a same-batch stale lease is a hard-killed earlier attempt this
+        # checkpoint replay is re-running — adopted, and the keyed
+        # upsert makes the redo idempotent
+        lease = acquire_store_lease(
+            spark, path, "funnel_report", token=f"batch={batch_id}"
+        )
         try:
             marker = f"{path}/_n_buckets"
             if not ops.create_atomic(marker, content=f"{n_buckets}\n"):
@@ -1604,7 +1589,7 @@ def streaming_funnel_report_sink(
             report.write.mode("overwrite").parquet(report_path)
         finally:
             release_pins_since(mark)
-            ops.delete(lease)
+            release_store_lease(spark, lease)
 
     return (
         funnel_out.writeStream.foreachBatch(write_batch)

@@ -393,8 +393,9 @@ def test_store_lease_loser_raises_rollup(spark, tmp_path):
 def test_store_lease_loser_raises_dedup_and_scd2(spark, tmp_path):
     """Dedup pair: with the lease held, the streaming append FAILS its
     batch (query error carries the lease message) and the compactor
-    raises. SCD2 pair: its own ``_scd_lease`` plays the maintenance-
-    lease role — a held lease fails the compactor loudly."""
+    raises. SCD2 pair: the same store lease gates the merge and the
+    compactor, and a stale in-root ``_scd_lease`` left by older code is
+    ignored."""
     from eel_spark.streaming import (
         compact_dedup_history,
         incremental_near_dedup_sink,
@@ -423,8 +424,8 @@ def test_store_lease_loser_raises_dedup_and_scd2(spark, tmp_path):
         compact_dedup_history(spark, surv)
     _Ops(spark).delete(surv + MAINT_LEASE_SUFFIX)
 
-    # scd2: the in-root _scd_lease gates compaction the same way
-    from eel_spark.operators.scd2 import LEASE_FILE, compact_scd2_history, scd2_merge
+    # scd2: the same store lease gates the merge and the compactor
+    from eel_spark.operators.scd2 import compact_scd2_history, scd2_merge
     from eel_spark.sources.hdfs import HdfsOps
 
     dim = str(tmp_path / "dim")
@@ -433,10 +434,15 @@ def test_store_lease_loser_raises_dedup_and_scd2(spark, tmp_path):
         "k long, seg string, d date, seq long",
     )
     scd2_merge(spark, dim, log, "k", ["seg"], "d", ["seq"], n_buckets=2)
-    assert HdfsOps(spark).create_atomic(f"{dim}/{LEASE_FILE}", content="x\n")
-    with pytest.raises(RuntimeError, match="locked by another writer"):
+    assert HdfsOps(spark).create_atomic(dim + MAINT_LEASE_SUFFIX,
+                                        content="foreign_merge\n")
+    with pytest.raises(RuntimeError, match="foreign_merge"):
         compact_scd2_history(spark, dim)
-    HdfsOps(spark).delete(f"{dim}/{LEASE_FILE}")
+    with pytest.raises(RuntimeError, match="foreign_merge"):
+        scd2_merge(spark, dim, log, "k", ["seg"], "d", ["seq"], n_buckets=2)
+    HdfsOps(spark).delete(dim + MAINT_LEASE_SUFFIX)
+    # a stale in-root lease file from older code is not a lease
+    assert HdfsOps(spark).create_atomic(f"{dim}/_scd_lease", content="x\n")
     compact_scd2_history(spark, dim)
 
 

@@ -848,12 +848,16 @@ def test_merge_concurrent_writer_lease(spark, tmp_path):
     r8 foreign-marker rejection could not see. Atomic create-if-absent
     picks one winner; the loser fails loudly BEFORE touching any marker
     or data; every Python-level exit (success or rejection) releases the
-    lease; break_scd2_lease clears a hard-kill stranding."""
-    from eel_spark.operators.scd2 import LEASE_FILE, break_scd2_lease
+    lease; break_store_lease clears a hard-kill stranding. The lease is
+    the one store lease (``<path>__maint_lease``)."""
+    from eel_spark.operators.maintenance import (
+        MAINT_LEASE_SUFFIX,
+        break_store_lease,
+    )
     from eel_spark.sources.hdfs import HdfsOps
 
     path = str(tmp_path / "dim")
-    lease = f"{path}/{LEASE_FILE}"
+    lease = path + MAINT_LEASE_SUFFIX
     ops = HdfsOps(spark)
 
     # a successful merge acquires and releases
@@ -862,12 +866,12 @@ def test_merge_concurrent_writer_lease(spark, tmp_path):
     assert not ops.exists(lease)
 
     # the atomic-create primitive: exactly one winner
-    assert ops.create_atomic(lease, content="holder-fp\n")
+    assert ops.create_atomic(lease, content="scd2_merge [holder-fp]\n")
     assert not ops.create_atomic(lease, content="second-writer\n")
 
-    # a concurrent merge (ANY batch — same or different fp) loses loudly
+    # a concurrent merge of a different batch loses loudly
     nxt = _log(spark, [(2, "B", 7, date(2024, 3, 1), 7)])
-    with pytest.raises(RuntimeError, match="locked by another writer"):
+    with pytest.raises(RuntimeError, match="active writer"):
         scd2_merge(spark, path, nxt, "k", ["seg", "score"], "d", ["seq"],
                    n_buckets=4)
     # the loser must not have disturbed the holder's lease or the table:
@@ -876,7 +880,7 @@ def test_merge_concurrent_writer_lease(spark, tmp_path):
     assert ops.list_status(f"{path}/_scd_inflight/*") == []
 
     # hard-kill recovery: break the stranded lease, then the retry wins
-    assert break_scd2_lease(spark, path)
+    assert break_store_lease(spark, path)
     stats = scd2_merge(spark, path, nxt, "k", ["seg", "score"], "d",
                        ["seq"], n_buckets=4)
     assert stats["changed"] == 1 and not ops.exists(lease)
@@ -894,11 +898,11 @@ def test_merge_self_adopts_same_batch_stale_lease(spark, tmp_path):
     fingerprint; the checkpoint-replayed retry of the SAME batch must
     self-adopt it (automatic crash recovery, no manual break), while a
     DIFFERENT batch still fails loudly with the holder's fp named."""
-    from eel_spark.operators.scd2 import LEASE_FILE
+    from eel_spark.operators.maintenance import MAINT_LEASE_SUFFIX
     from eel_spark.sources.hdfs import HdfsOps
 
     path = str(tmp_path / "dim")
-    lease = f"{path}/{LEASE_FILE}"
+    lease = path + MAINT_LEASE_SUFFIX
     ops = HdfsOps(spark)
 
     scd2_merge(spark, path, _log(spark, BASE_LOG), "k", ["seg", "score"],
@@ -914,20 +918,20 @@ def test_merge_self_adopts_same_batch_stale_lease(spark, tmp_path):
     after = {s["name"] for s in ops.list_status(f"{path}/_scd_applied/*")}
     (fp,) = after - before  # the nxt batch's fingerprint
 
-    assert ops.create_atomic(lease, content=fp + "\n")
+    assert ops.create_atomic(lease, content=f"scd2_merge [{fp}]\n")
     replay = scd2_merge(spark, path, nxt, "k", ["seg", "score"], "d",
                         ["seq"], n_buckets=4)
     assert replay["replayed"] is True  # adopted the lease, saw applied
     assert not ops.exists(lease)  # and released it on the way out
 
     # a different-batch lease still rejects, naming the holder
-    assert ops.create_atomic(lease, content="deadbeef0000\n")
+    assert ops.create_atomic(lease, content="scd2_merge [deadbeef0000]\n")
     with pytest.raises(RuntimeError, match="deadbeef0000"):
         scd2_merge(spark, path,
                    _log(spark, [(3, "F", 5, date(2024, 5, 1), 20)]),
                    "k", ["seg", "score"], "d", ["seq"], n_buckets=4)
     assert ops.exists(lease)  # loser must not release the holder's lease
-    assert ops.read_text(lease).strip() == "deadbeef0000"
+    assert ops.read_text(lease).strip() == "scd2_merge [deadbeef0000]"
 
 
 def test_trim_history_retention(spark, tmp_path):
@@ -936,14 +940,15 @@ def test_trim_history_retention(spark, tmp_path):
     to pre-trim; as-of before the cutoff loses the purged versions (the
     point); all-expired buckets disappear; idempotent re-trim no-ops;
     lease respected; interrupted swap self-heals."""
+    from eel_spark.operators.maintenance import MAINT_LEASE_SUFFIX
     from eel_spark.operators.scd2 import (
-        LEASE_FILE,
         read_scd2_current,
         scd2_trim_history,
     )
     from eel_spark.sources.hdfs import HdfsOps
 
     path = str(tmp_path / "dim")
+    lease = path + MAINT_LEASE_SUFFIX
     ops = HdfsOps(spark)
     scd2_merge(spark, path, _log(spark, BASE_LOG), "k", ["seg", "score"],
                "d", ["seq"], n_buckets=4)
@@ -954,7 +959,7 @@ def test_trim_history_retention(spark, tmp_path):
     # (3,C,1) ends 2024-01-09 (<= cutoff, dropped)
     stats = scd2_trim_history(spark, path, cutoff)
     assert stats == {"dropped": 1, "kept": 1}
-    assert not ops.exists(f"{path}/{LEASE_FILE}")
+    assert not ops.exists(lease)
     assert _versions(read_scd2_current(spark, path)) == cur_before
     assert _versions(read_scd2_asof(spark, path, date(2024, 2, 15))) == asof_after
     # pre-cutoff as-of lost the purged version (retention semantics)
@@ -970,10 +975,10 @@ def test_trim_history_retention(spark, tmp_path):
     assert _versions(read_scd2_current(spark, path)) == cur_before
 
     # lease respected
-    assert ops.create_atomic(f"{path}/{LEASE_FILE}", content="x\n")
-    with pytest.raises(RuntimeError, match="locked"):
+    assert ops.create_atomic(lease, content="x\n")
+    with pytest.raises(RuntimeError, match="active writer"):
         scd2_trim_history(spark, path, cutoff)
-    ops.delete(f"{path}/{LEASE_FILE}")
+    ops.delete(lease)
 
     # interrupted-swap recovery: closed subtree staged aside, no new one
     scd2_merge(spark, path,
@@ -1031,8 +1036,8 @@ def test_compact_scd2_history_one_file_per_bucket(spark, tmp_path):
     import glob
     import os
 
+    from eel_spark.operators.maintenance import MAINT_LEASE_SUFFIX
     from eel_spark.operators.scd2 import (
-        LEASE_FILE,
         compact_scd2_history,
         read_scd2_current,
         scd2_trim_history,
@@ -1040,6 +1045,7 @@ def test_compact_scd2_history_one_file_per_bucket(spark, tmp_path):
     from eel_spark.sources.hdfs import HdfsOps
 
     path = str(tmp_path / "dim")
+    lease = path + MAINT_LEASE_SUFFIX
     ops = HdfsOps(spark)
     # three merge batches: every batch closes versions of key 1/3 so the
     # same buckets accumulate multiple closed file sets
@@ -1075,7 +1081,7 @@ def test_compact_scd2_history_one_file_per_bucket(spark, tmp_path):
     assert stats["files_before"] == n_before
     assert stats["files_after"] == stats["buckets"]
     assert all(n == 1 for n in per_bucket_counts().values())
-    assert not ops.exists(f"{path}/{LEASE_FILE}")
+    assert not ops.exists(lease)
     # row-identical across every read path
     assert _versions(read_scd2_current(spark, path)) == cur_before
     assert _versions(spark.read.parquet(path)) == hist_before
@@ -1096,10 +1102,10 @@ def test_compact_scd2_history_one_file_per_bucket(spark, tmp_path):
             read_scd2_current(spark, path).collect()}[2] == "Z"
 
     # lease respected
-    assert ops.create_atomic(f"{path}/{LEASE_FILE}", content="x\n")
-    with pytest.raises(RuntimeError, match="locked"):
+    assert ops.create_atomic(lease, content="x\n")
+    with pytest.raises(RuntimeError, match="active writer"):
         compact_scd2_history(spark, path)
-    ops.delete(f"{path}/{LEASE_FILE}")
+    ops.delete(lease)
 
     # inflight marker: compaction refuses like trim does
     ops.mkdirs(f"{path}/_scd_inflight/deadbeef")

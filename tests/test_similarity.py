@@ -1183,9 +1183,10 @@ def test_reindex_crash_windows_and_validation(spark, ivf_index, clustered):
     assert read_ivf_postings(spark, path).count() == n_before
     assert not ops.exists(f"{path}__compacting")
     # window 2: crash between the two renames — store staged aside.
-    # Readers and appenders must route to the healing operators, NOT
-    # suggest init (a fresh init beside __old would be destroyed with
-    # __old by the next swap's cleanup — r12 advice).
+    # Lease-less readers must route to a writer, NOT suggest init (a
+    # fresh init beside __old would be destroyed with __old by the next
+    # swap's cleanup); any writer's lease heals the swap — an appender
+    # included, which then appends into the restored index.
     assert ops.rename(path, f"{path}__old")
     from eel_spark.operators.similarity import (
         append_ivf_batch,
@@ -1194,10 +1195,12 @@ def test_reindex_crash_windows_and_validation(spark, ivf_index, clustered):
 
     with pytest.raises(ValueError, match="interrupted reindex/compact"):
         read_ivf_centroids(spark, path)
-    with pytest.raises(ValueError, match="interrupted reindex/compact"):
-        append_ivf_batch(path, clustered, id_col="vec_id", src_batch=99)
+    append_ivf_batch(path, clustered, id_col="vec_id", src_batch=99)
+    assert not ops.exists(f"{path}__old")
+    assert read_ivf_postings(spark, path).count() == n_before + 30
+    assert ops.rename(path, f"{path}__old")
     reindex_ivf_index(spark, path, n_cells=3, iterations=1)
-    assert read_ivf_postings(spark, path).count() == n_before
+    assert read_ivf_postings(spark, path).count() == n_before + 30
     assert ivf_topk_against_index(
         spark, path, _queries(spark), k=3, n_probe=2
     ).count() == 9

@@ -580,7 +580,8 @@ def test_compact_dedup_history(spark, tmp_path):
     assert [r["batch_id"] for r in bands.select("batch_id").distinct().collect()] == [-1]
     # layout preserved: (band, kp) partition dirs under the single generation
     assert _glob.glob(f"{surv_path}__bands/batch_id=-1/band=*/kp=*/part-*")
-    assert not _glob.glob(f"{surv_path}__bands__compact_tmp")
+    assert not _glob.glob(f"{surv_path}*__compacting")
+    assert not _glob.glob(f"{surv_path}*__old")
 
     # wave 5 after compaction: near-dup of wave-1 survivor 1 dropped,
     # fresh doc admitted
@@ -900,8 +901,8 @@ def test_incremental_dedup_backfills_pre_banded_store(spark, tmp_path):
 
 def test_compact_dedup_history_at_depth_with_replay(spark, tmp_path, monkeypatch):
     """Compaction at realistic history depth (25 accumulated batches),
-    interleaved with a checkpoint replay, plus the documented
-    non-atomic delete/rename window:
+    interleaved with a checkpoint replay, plus a crash inside the
+    staged swap:
 
     1. 25 micro-batches accumulate (each wave: one fresh doc + one
        near-dup of the PREVIOUS wave's survivor — so cross-batch
@@ -909,9 +910,10 @@ def test_compact_dedup_history_at_depth_with_replay(spark, tmp_path, monkeypatch
     2. A pre-compaction batch is replayed (commit marker dropped) AFTER
        compaction: its rows already sit in the -1 generation, so the
        replay must not lose survivors or re-admit its near-dup.
-    3. A crash between compaction's delete and rename leaves the
-       __compact_tmp sibling intact for manual completion, and the
-       completed swap restores the store byte-for-byte.
+    3. A crash between the swap's two renames leaves the survivor
+       table staged aside at ``__old``; the next compaction's lease
+       heals it and finishes, restoring the store row-for-row with no
+       staging paths left.
     """
     import glob as _glob
     import os
@@ -993,27 +995,35 @@ def test_compact_dedup_history_at_depth_with_replay(spark, tmp_path, monkeypatch
         r["doc_id"] for r in spark.read.parquet(surv_path).collect()
     } == expected
 
-    # crash in the delete/rename window of a SECOND compaction
+    # crash between the two renames of a SECOND compaction's swap
     before_rows = sorted(
         (r["doc_id"], r["batch_id"])
         for r in spark.read.parquet(surv_path).collect()
     )
     real_rename = HdfsOps.rename
+    renames = []
+
     def crashing_rename(self, src, dst):
-        raise RuntimeError("simulated crash mid-swap")
+        renames.append(src)
+        if len(renames) == 2:
+            raise RuntimeError("simulated crash mid-swap")
+        return real_rename(self, src, dst)
+
     monkeypatch.setattr(HdfsOps, "rename", crashing_rename)
     with pytest.raises(RuntimeError, match="mid-swap"):
         compact_dedup_history(spark, surv_path)
     monkeypatch.setattr(HdfsOps, "rename", real_rename)
-    # original deleted, tmp intact — complete the swap manually as the
-    # docstring instructs and verify nothing was lost
-    tmp = surv_path + "__compact_tmp"
-    assert os.path.exists(tmp) and not os.path.exists(surv_path)
-    HdfsOps(spark).rename(tmp, surv_path)
+    # the survivor table is staged aside, not lost
+    assert not os.path.exists(surv_path)
+    assert os.path.exists(surv_path + "__old")
+    # the next call's lease heals the swap and the compaction completes
+    compact_dedup_history(spark, surv_path)
     assert sorted(
         (r["doc_id"], r["batch_id"])
         for r in spark.read.parquet(surv_path).collect()
     ) == before_rows
+    assert not _glob.glob(f"{surv_path}*__old")
+    assert not _glob.glob(f"{surv_path}*__compacting")
 
 
 def test_kafka_option_contract_without_broker(spark, monkeypatch):
@@ -1778,9 +1788,11 @@ def test_streaming_funnel_report_sink_n_buckets_frozen(spark, tmp_path):
 
 
 def test_streaming_funnel_report_sink_foreign_lease_rejected(spark, tmp_path):
-    """r11 review: a foreign _report_lease (another live writer) fails
-    the batch loudly instead of silently interleaving the keyed merge;
-    a same-batch stale lease self-adopts (checkpoint-replay recovery)."""
+    """A foreign store lease (another live writer) fails the batch
+    loudly instead of silently interleaving the keyed merge; a
+    same-batch stale lease self-adopts (checkpoint-replay recovery).
+    The sink holds the one store lease (``<path>__maint_lease``)."""
+    from eel_spark.operators.maintenance import MAINT_LEASE_SUFFIX
     from eel_spark.sources.hdfs import HdfsOps
     from eel_spark.streaming import (
         streaming_funnel,
@@ -1799,10 +1811,10 @@ def test_streaming_funnel_report_sink_foreign_lease_rejected(spark, tmp_path):
         "click": F.col("event_type") == "click",
     }
     sink_root = str(tmp_path / "sink")
+    lease = sink_root + MAINT_LEASE_SUFFIX
     ops = HdfsOps(spark)
     ops.mkdirs(sink_root)
-    assert ops.create_atomic(f"{sink_root}/_report_lease",
-                             content="batch 999\n")
+    assert ops.create_atomic(lease, content="funnel_report [batch=999]\n")
 
     def run():
         stream = (
@@ -1821,14 +1833,13 @@ def test_streaming_funnel_report_sink_foreign_lease_rejected(spark, tmp_path):
         )
         q.awaitTermination(120)
 
-    with pytest.raises(Exception, match="locked by"):
+    with pytest.raises(Exception, match="active writer"):
         run()
     # stale lease for the batch the checkpoint now replays: self-adopts
-    ops.delete(f"{sink_root}/_report_lease")
-    assert ops.create_atomic(f"{sink_root}/_report_lease",
-                             content="batch 0\n")
+    ops.delete(lease)
+    assert ops.create_atomic(lease, content="funnel_report [batch=0]\n")
     run()
-    assert not ops.exists(f"{sink_root}/_report_lease")  # released
+    assert not ops.exists(lease)  # released
     assert spark.read.parquet(f"{sink_root}/report").count() > 0
 
 

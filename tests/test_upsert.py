@@ -60,7 +60,9 @@ def test_unpartitioned_upsert_swaps_atomically(spark, tmp_path):
     stats = upsert_parquet(spark, path, batch, "k")
     assert stats["inserted"] == 1 and stats["updated"] == 1
     assert _rows(spark, path) == {1: ("a1", "A"), 2: ("b2", "B"), 3: ("c1", "C")}
-    assert not os.path.exists(path + "__upsert_tmp")
+    # the staged swap leaves no staging or staged-aside copy behind
+    assert not os.path.exists(path + "__compacting")
+    assert not os.path.exists(path + "__old")
 
 
 def test_multi_column_keys(spark, tmp_path):
