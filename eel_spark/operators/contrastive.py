@@ -50,7 +50,6 @@ def mine_triplets(
     k_scan: int = 20,
     n_buckets: int | None = None,
     seed: int = 0,
-    n_salt: int = 32,
     neighbors_df: DataFrame | None = None,
 ) -> DataFrame:
     """(anchor_id, positive_id, negative_id, pos_cos, neg_cos) triplets.
@@ -98,7 +97,7 @@ def mine_triplets(
         neighbors = brute_force_topk(
             emb, q,
             id_col=id_col, vec_col=vec_col, query_id_col="__anchor",
-            k=k_scan, exclude_self=True, n_salt=n_salt,
+            k=k_scan, exclude_self=True,
         ).select(
             "__anchor", F.col(id_col).alias("__cand"), "cos", "rank"
         )

@@ -173,14 +173,10 @@ def bm25_scores(
     b: float = 0.75,
 ) -> DataFrame:
     """BM25 score per document matching ≥1 query term: (id, score,
-    n_terms). The per-document sum folds the per-term components in
-    sorted order (array_sort + aggregate) so the score is reproducible
-    across partitionings, retries, and cluster sizes."""
-    stats = bm25_term_stats(df, text_col, id_col, query_terms)
-    comp = stats.select(
-        id_col, _bm25_component(k1, b).alias("__c")
-    )
-    return _fold_scores(comp, [id_col])
+    n_terms) — :func:`bm25_scores_multi` with one query."""
+    return bm25_scores_multi(
+        df, text_col, id_col, {"q": query_terms}, k1, b
+    ).drop("query_id")
 
 
 def bm25_topk(
@@ -192,17 +188,11 @@ def bm25_topk(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """Top-k documents by BM25, deterministic (score DESC, id ASC)
-    tie-break, ranked with the same two-phase salted top-k the ANN
-    operators use — no single-reducer global sort."""
-    from eel_spark.operators.similarity import _topk_per_query
-
-    scored = bm25_scores(df, text_col, id_col, query_terms, k1, b)
-    # _topk_per_query partitions by a query id; BM25 has one query —
-    # a constant key keeps phase-1 salting as the parallelism source
-    scored = scored.withColumn("__q", F.lit(0))
-    out = _topk_per_query(scored, "__q", id_col, k, value_col="score")
-    return out.drop("__q")
+    """Top-k documents by BM25: (id, score, rank) —
+    :func:`bm25_topk_multi` with one query."""
+    return bm25_topk_multi(
+        df, text_col, id_col, {"q": query_terms}, k, k1, b
+    ).drop("query_id")
 
 
 def _normalize_queries(queries: dict) -> dict:
@@ -282,10 +272,10 @@ def bm25_topk_multi(
 ) -> DataFrame:
     """Top-k documents per query by BM25 over one corpus scan:
     (query_id, id, score, rank), deterministic (score DESC, id ASC)
-    tie-break. ``_topk_per_query`` partitions phase 1 by
-    (query_id, salt) — q queries × n_salt tasks of |matches|/n_salt rows
-    each — so per-query ranking never single-reduces the corpus.
-    ``stats`` as in :func:`bm25_scores_multi`."""
+    tie-break, ranked by the shared two-phase salted top-k
+    (``similarity._topk_per_query_multi``): phase 1 partitions by
+    (query_id, salt), so per-query ranking never single-reduces the
+    corpus. ``stats`` as in :func:`bm25_scores_multi`."""
     from eel_spark.operators.similarity import _topk_per_query
 
     scored = bm25_scores_multi(df, text_col, id_col, queries, k1, b,
@@ -673,52 +663,30 @@ def reciprocal_rank_fusion(
         rrf(q, d) = Σ_systems  w_s / (k_rrf + rank_s(q, d))
 
     Rank-only fusion needs no score calibration between systems, which
-    is why it is the standard hybrid-retrieval baseline. Each input is a
-    (query_col, id_col, rank) table (the shape ``bm25_topk_multi`` /
-    ``_topk_per_query`` emit); a document absent from a system's list
-    simply contributes nothing for it. One union + one (query, doc)
-    groupBy with map-side partials, then the shared salted per-query
-    top-k — no window over the full candidate union. The fused score is
-    a sum of exact dyadic-ish rationals folded in sorted order for the
-    same cross-partitioning determinism as the BM25 fold."""
+    is why it is the standard hybrid-retrieval baseline. Each input is a (query_col, id_col, rank) table (the shape
+    ``bm25_topk_multi`` / ``_topk_per_query`` emit); a document absent
+    from a system's list contributes nothing for it. The tables are
+    tagged and unioned, and one (query, doc) groupBy turns them into the
+    wide one-rank-column-per-system table :func:`rrf_from_ranks` fuses —
+    the one RRF implementation. A malformed input with duplicate
+    (query, doc) rows inside one system counts once, at its best
+    (smallest) rank: the groupBy keeps the MIN rank per system."""
     if not rankings:
         raise ValueError("rankings must contain at least one table")
-    ws = list(weights) if weights is not None else [1.0] * len(rankings)
-    if len(ws) != len(rankings):
-        raise ValueError(
-            f"{len(rankings)} rankings but {len(ws)} weights"
-        )
-    bad = [w for w in ws if not (float(w) > 0.0)]
-    if bad:
-        raise ValueError(
-            f"RRF weights must be positive (got {bad}): a zero weight "
-            "silently erases a system and a negative one inverts it"
-        )
-    from eel_spark.operators.similarity import _topk_per_query
-
     tagged = None
-    for i, (w, r) in enumerate(zip(ws, rankings)):
-        part = r.select(
-            query_col,
-            id_col,
-            F.lit(i).alias("__sys"),
-            (F.lit(float(w)) / (F.lit(float(k_rrf)) + F.col("rank")))
-            .alias("__c"),
-        )
+    for i, r in enumerate(rankings):
+        part = r.select(query_col, id_col, F.lit(i).alias("__sys"), "rank")
         tagged = part if tagged is None else tagged.unionByName(part)
-    # a malformed input with duplicate (query, doc) rows would
-    # double-count that system's contribution — collapse to the BEST
-    # (smallest-rank ⇒ largest) component per doc WITHIN each system; on
-    # the canonical _topk_per_query shape this is the identity. One
-    # post-union dedup exchange for all systems (not one per ranking —
-    # r11 review), and the fold's (query, doc) exchange follows.
-    tagged = tagged.groupBy(query_col, id_col, "__sys").agg(
-        F.max("__c").alias("__c")
+    rank_cols = [f"__rank_{i}" for i in range(len(rankings))]
+    ranked = tagged.groupBy(query_col, id_col).agg(
+        *[
+            F.min(F.when(F.col("__sys") == i, F.col("rank"))).alias(rc)
+            for i, rc in enumerate(rank_cols)
+        ]
     )
-    fused = _fold_scores(tagged, [query_col, id_col])
-    # output schema: (query_col, id_col, score, rank) — _topk_per_query
-    # keeps only those; the per-doc system count is internal to the fold
-    return _topk_per_query(fused, query_col, id_col, k, value_col="score")
+    return rrf_from_ranks(
+        ranked, rank_cols, id_col, query_col, k, k_rrf, weights
+    )
 
 
 def rrf_from_ranks(
@@ -730,26 +698,22 @@ def rrf_from_ranks(
     k_rrf: int = 60,
     weights: Sequence[float] | None = None,
 ) -> DataFrame:
-    """RRF over a FUSED ranking table: one row per (query, doc) with a
-    nullable rank column per system (the shape
+    """Reciprocal Rank Fusion (see :func:`reciprocal_rank_fusion` for
+    the formula) over a wide ranking table: one row per (query, doc)
+    with a nullable rank column per system (the shape
     ``similarity._topk_per_query_multi`` emits; null ⇒ the doc is not in
-    that system's top-k). Same math and output as
-    :func:`reciprocal_rank_fusion` — bit-identical scores: per row the
-    non-null contributions w_s/(k_rrf + rank_s) are sorted ascending and
-    folded from 0.0, exactly ``_fold_scores``'s deterministic sum over
-    the per-system bests (the input grain is already (query, doc)-unique
-    per system, so the per-system max-dedup is the identity here).
+    that system's top-k). Output (query_col, id_col, score, rank).
 
-    The win over the list-of-tables form (§2.4): when all systems rank
-    the same candidate table, the N-way union + per-system dedup
-    aggregate + (query, doc) fold aggregate collapse into a single
-    PROJECTION — the fused score needs no shuffle at all, only the final
-    shared salted top-k does."""
+    Per row the non-null contributions w_s/(k_rrf + rank_s) are sorted
+    ascending and folded from 0.0 — a deterministic sum, independent of
+    partitioning (float addition is not associative). The fused score
+    is a projection, so it needs no shuffle; only the final shared
+    salted top-k (``similarity._topk_per_query``) ranks it."""
     if not rank_cols:
         raise ValueError("rank_cols must name at least one ranking")
     ws = list(weights) if weights is not None else [1.0] * len(rank_cols)
     if len(ws) != len(rank_cols):
-        raise ValueError(f"{len(rank_cols)} rank_cols but {len(ws)} weights")
+        raise ValueError(f"{len(rank_cols)} rankings but {len(ws)} weights")
     bad = [w for w in ws if not (float(w) > 0.0)]
     if bad:
         raise ValueError(

@@ -31,6 +31,8 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from eel_spark.operators.similarity import _N_SALT
+
 
 def _hash_order(hash_cols: Sequence[str], seed: int) -> Column:
     """Deterministic pseudo-random order key: a pure function of the
@@ -78,7 +80,6 @@ def weighted_sample_without_replacement(
     hash_cols: Sequence[str],
     group_cols: Sequence[str] = (),
     seed: int = 0,
-    n_salt: int = 32,
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement — Efraimidis & Spirakis'
     A-ES (public): keep the ``k`` rows with the largest
@@ -97,10 +98,10 @@ def weighted_sample_without_replacement(
     map-side like :func:`quota_sample`. WITHOUT groups a naive global
     window would single-reduce |df|, so the global path runs the shared
     two-phase salted top-k shape instead: phase 1 ranks within
-    ``pmod(hash, n_salt)`` (map-side-pruned), phase 2 ranks the
-    ≤ ``n_salt·k`` survivors. NULL or non-positive weights raise
-    in-plan (A-ES is undefined there; silently dropping rows would skew
-    every downstream estimate).
+    ``pmod(hash, _N_SALT)`` (map-side-pruned; the similarity kernel's
+    salt count), phase 2 ranks the ≤ ``_N_SALT·k`` survivors. NULL or
+    non-positive weights raise in-plan (A-ES is undefined there;
+    silently dropping rows would skew every downstream estimate).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -135,7 +136,7 @@ def weighted_sample_without_replacement(
             .filter(F.col(rn_name) <= F.lit(int(k)))
             .drop(rn_name)
         )
-    salt = F.pmod(_hash_order(hash_cols, seed + 1), F.lit(int(n_salt)))
+    salt = F.pmod(_hash_order(hash_cols, seed + 1), F.lit(_N_SALT))
     w1 = Window.partitionBy(salt).orderBy(F.desc(key), *tie)
     survivors = (
         df.withColumn(rn_name, F.row_number().over(w1))

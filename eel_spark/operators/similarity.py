@@ -24,48 +24,25 @@ from eel_spark.functions import vectors
 from eel_spark.scale import ensure_parallelism
 
 
+# phase-1 fan-out of the two-phase top-k: each query's candidates are
+# ranked in _N_SALT (query, salt) partitions before the per-query merge
+_N_SALT = 32
+
+
 def _topk_per_query(
     scored: DataFrame,
     query_id_col: str,
     id_col: str,
     k: int,
-    n_salt: int = 32,
     value_col: str = "cos",
     ascending: bool = False,
 ) -> DataFrame:
-    """Two-phase exact top-k over a (query, candidate, cos) table.
-
-    Phase 1 ranks within (query, salt) where salt = hash(candidate id)
-    mod ``n_salt`` — n_salt× the parallelism of a per-query window, and
-    per-task row count = |candidates| / n_salt. Phase 2 ranks the
-    surviving n_salt·k rows per query — a bounded input, so the
-    single-reducer-per-query window is harmless. Exact: every global
-    top-k row is by definition in its salt partition's top-k, so phase 1
-    never discards a winner. Replaces the per-query full-corpus
-    single-task sort that a lone Window.partitionBy(query_id) performs
-    on the unsalted cross product (the reference's linear scan —
-    eel-core DataStream.scala:267 cartesian — has the same O(corpus)
-    per-query cost; this is the distributed answer)."""
-    salt_name, rank_name = "__salt", "__lr"
-    while salt_name in scored.columns:
-        salt_name = "_" + salt_name
-    while rank_name in scored.columns:
-        rank_name = "_" + rank_name
-    value_order = F.asc(value_col) if ascending else F.desc(value_col)
-    order = [value_order, F.asc(id_col)]
-    w_local = Window.partitionBy(query_id_col, salt_name).orderBy(*order)
-    survivors = (
-        scored.withColumn(salt_name, F.pmod(F.xxhash64(F.col(id_col)), n_salt))
-        .withColumn(rank_name, F.row_number().over(w_local))
-        .filter(F.col(rank_name) <= k)
-        .drop(salt_name, rank_name)
-    )
-    w_global = Window.partitionBy(query_id_col).orderBy(*order)
-    return (
-        survivors.withColumn("rank", F.row_number().over(w_global))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, value_col, "rank")
-    )
+    """One exact per-query top-k of a (query, candidate, value) table:
+    (query, id, value_col, rank) — :func:`_topk_per_query_multi` with one
+    dimension."""
+    return _topk_per_query_multi(
+        scored, query_id_col, id_col, k, {"x": (value_col, ascending)}
+    ).withColumnRenamed("rank_x", "rank")
 
 
 def _topk_per_query_multi(
@@ -74,78 +51,114 @@ def _topk_per_query_multi(
     id_col: str,
     k: int,
     dims: dict[str, tuple[str, bool]],
-    n_salt: int = 32,
 ) -> DataFrame:
-    """N exact per-query top-k rankings of ONE table in ONE shuffle pair.
+    """N exact per-query top-k rankings of ONE table in ONE shuffle pair
+    — the one two-phase salted top-k every ranking path uses.
 
-    ``dims`` maps a dimension name to ``(value_col, ascending)``; the
-    output has one row per (query, id) that ranks in ANY dimension's
-    top-k, with a nullable ``rank_<name>`` per dimension (null ⇒ not in
-    that dimension's top-k). Equivalent to N independent
-    :func:`_topk_per_query` calls, but all N share the (query, salt)
-    phase-1 exchange and the (query) phase-2 exchange: every window
-    partitions by the same key, so Catalyst plans one Exchange per phase
-    and N sorts — the input is scanned and shuffled once instead of N
-    times (§2.4).
+    ``dims`` maps a dimension name to ``(value_col, ascending)``; ties
+    break by id ascending. The output has one row per (query, id) that
+    ranks in ANY dimension's top-k: the query and id, the distinct value
+    columns, and a nullable ``rank_<name>`` per dimension (null ⇒ not in
+    that dimension's top-k).
 
-    Exactness per dimension matches ``_topk_per_query``'s argument: a
-    global top-k row is in its salt partition's top-k, so phase 1 never
-    drops a winner. Phase 2 ranks the pooled survivors of ALL
-    dimensions, so each dimension's ordering puts its OWN phase-1
-    survivors first (survivor flag DESC before the value order): rows
-    kept only for another dimension sort strictly after every survivor
-    of this one and cannot displace or interleave them — survivors'
-    row_numbers equal the ranks they'd get ranked alone."""
+    Phase 1 ranks within (query, salt) where salt = hash(candidate id)
+    mod ``_N_SALT``: ``_N_SALT``× the parallelism of a per-query window,
+    |candidates| / ``_N_SALT`` rows per task. Phase 2 ranks the surviving
+    ≤ ``_N_SALT``·k rows per query — a bounded input, so the
+    single-reducer-per-query window is harmless. This replaces the
+    per-query full-corpus sort that a lone Window.partitionBy(query_id)
+    performs on the unsalted cross product (the reference's linear scan —
+    eel-core DataStream.scala:267 cartesian — has the same O(corpus)
+    per-query cost); it is REPOSE's local-prune/global-merge shape. All N
+    dimensions share the (query, salt) phase-1 exchange and the (query)
+    phase-2 exchange: every window partitions by the same key, so
+    Catalyst plans one Exchange per phase and N sorts — the input is
+    scanned and shuffled once instead of N times (§2.4).
+
+    Exact per dimension: a global top-k row is in its salt partition's
+    top-k, so phase 1 never drops a winner. Phase 2 ranks the pooled
+    survivors of ALL dimensions, so each dimension's ordering puts its
+    OWN phase-1 survivors first (survivor flag DESC before the value
+    order): rows kept only for another dimension sort strictly after
+    every survivor of this one and cannot displace or interleave them.
+    Both filters are ORs of per-dimension ``rank <= k`` conjunctions; with
+    one dimension each is a plain conjunction, from which Catalyst infers
+    a WindowGroupLimit in both phases (plan-asserted in tests)."""
     salt_name = "__salt"
     while salt_name in scored.columns:
         salt_name = "_" + salt_name
     orders = {
-        name: [
-            F.asc(vc) if asc else F.desc(vc),
-            F.asc(id_col),
-        ]
+        name: [F.asc(vc) if asc else F.desc(vc), F.asc(id_col)]
         for name, (vc, asc) in dims.items()
     }
+    value_cols = list(dict.fromkeys(vc for vc, _ in dims.values()))
     salted = scored.withColumn(
-        salt_name, F.pmod(F.xxhash64(F.col(id_col)), n_salt)
+        salt_name, F.pmod(F.xxhash64(F.col(id_col)), _N_SALT)
     )
-    w_local = {
-        name: Window.partitionBy(query_id_col, salt_name).orderBy(*o)
-        for name, o in orders.items()
-    }
-    for name in dims:
+    for name, order in orders.items():
+        w_local = Window.partitionBy(query_id_col, salt_name).orderBy(*order)
         salted = salted.withColumn(
-            f"__lr_{name}", F.row_number().over(w_local[name])
+            f"__lr_{name}", F.row_number().over(w_local)
         )
     survivors = salted.filter(
         " OR ".join(f"__lr_{n} <= {int(k)}" for n in dims)
     ).select(
         query_id_col,
         id_col,
-        *[F.col(vc) for vc in dict.fromkeys(vc for vc, _ in dims.values())],
+        *value_cols,
         *[(F.col(f"__lr_{n}") <= k).alias(f"__sv_{n}") for n in dims],
     )
-    for name in dims:
+    for name, order in orders.items():
         w_global = Window.partitionBy(query_id_col).orderBy(
-            F.desc(f"__sv_{name}"), *orders[name]
+            F.desc(f"__sv_{name}"), *order
         )
         survivors = survivors.withColumn(
             f"__gr_{name}", F.row_number().over(w_global)
         )
-    ranked = survivors.select(
+    kept = {n: f"(__sv_{n} AND __gr_{n} <= {int(k)})" for n in dims}
+    return survivors.filter(" OR ".join(kept.values())).select(
         query_id_col,
         id_col,
+        *value_cols,
         *[
-            F.when(
-                F.col(f"__sv_{n}") & (F.col(f"__gr_{n}") <= k),
-                F.col(f"__gr_{n}"),
-            ).alias(f"rank_{n}")
-            for n in dims
+            F.when(F.expr(cond), F.col(f"__gr_{n}")).alias(f"rank_{n}")
+            for n, cond in kept.items()
         ],
     )
-    return ranked.filter(
-        " OR ".join(f"rank_{n} IS NOT NULL" for n in dims)
+
+
+def _exact_rerank(
+    corpus: DataFrame,
+    queries: DataFrame,
+    cands: DataFrame,
+    query_id_col: str,
+    id_col: str,
+    k: int,
+) -> DataFrame:
+    """Exact-cosine top-k of a bounded candidate set — the second stage
+    of every prefiltered ANN path (BQ, PQ, IVF-PQ, and their
+    incremental-index twins). ``cands`` holds the (query_id_col, id_col)
+    survivors of the approximate stage; ``corpus`` is (id, vector) and
+    ``queries`` is (query id, vector), positionally, prepared by the
+    caller so each path keeps its own casts. The survivors are few
+    (|queries|·refine·k rows), so they are broadcast into the corpus join
+    and the vectors are read only for them; then one more broadcast of
+    the query vectors. Same result contract and tie-breaks as
+    :func:`brute_force_topk`."""
+    pairs = cands.select(
+        F.col(query_id_col).alias("__qid"), F.col(id_col).alias("__id")
     )
+    rerank = (
+        corpus.toDF("__id", "__v")
+        .join(F.broadcast(pairs), "__id")
+        .join(F.broadcast(queries.toDF("__qid", "__qv")), "__qid")
+        .select(
+            F.col("__qid").alias(query_id_col),
+            F.col("__id").alias(id_col),
+            vectors.cosine(F.col("__v"), F.col("__qv")).alias("cos"),
+        )
+    )
+    return _topk_per_query(rerank, query_id_col, id_col, k)
 
 
 def brute_force_topk(
@@ -156,15 +169,15 @@ def brute_force_topk(
     query_id_col: str = "query_id",
     k: int = 10,
     exclude_self: bool = False,
-    n_salt: int = 32,
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
     queries_df is broadcast (query sets are small relative to the corpus);
-    the per-pair kernel is a JVM fold; the top-k is the two-phase
-    salted rank (``_topk_per_query``) — per-query work is spread over
-    ``n_salt`` tasks instead of funneling |corpus| rows through one
-    reducer per query. No global sort, no driver collect.
+    the per-pair kernel is a JVM fold; the top-k is the one two-phase
+    salted kernel (``_topk_per_query_multi``, one dimension) — per-query
+    work is spread over the salt partitions instead of funneling
+    |corpus| rows through one reducer per query. No global sort, no
+    driver collect.
     ``exclude_self`` drops corpus rows whose id equals the query id before
     ranking (for corpus-internal queries).
     """
@@ -182,7 +195,7 @@ def brute_force_topk(
     )
     if exclude_self:
         scored = scored.filter(F.col(id_col) != F.col(query_id_col))
-    return _topk_per_query(scored, query_id_col, id_col, k, n_salt=n_salt)
+    return _topk_per_query(scored, query_id_col, id_col, k)
 
 
 def train_centroids(
@@ -309,7 +322,12 @@ def _assign_cells_packed(
     k-means loop calls this directly so the pack aggregate can carry the
     array rebuild of the mean update (one barrier fewer per iteration);
     ``cents`` must not collide with a ``df`` column (callers pick it
-    against ``df.columns``)."""
+    against ``df.columns``): the crossJoin would shadow that column and
+    the final drop would delete it, so a collision raises."""
+    if cents in df.columns:
+        raise ValueError(
+            f"packed centroid column {cents!r} collides with an input column"
+        )
     best = F.array_min(
         F.transform(
             cents,
@@ -336,9 +354,9 @@ def _probe_cells(
     """Per query, the ``n_probe`` nearest cells: (__qid, __qv, cell_id).
     One broadcast crossJoin against the n_cells-row centroid table plus a
     per-query window over n_cells rows — bounded by queries × n_cells.
-    Shared by :func:`ivf_topk` and :func:`ivf_topk_against_index` so the
-    one-shot and incremental-index paths cannot drift (their equivalence
-    is bit-exact, tested). ``with_dims`` additionally carries each row's
+    Shared by every IVF path (:func:`ivf_topk`, :func:`ivf_pq_topk` and
+    their incremental-index twins) so the one-shot and incremental-index
+    paths cannot drift (their equivalence is bit-exact, tested). ``with_dims`` additionally carries each row's
     query-vector and centroid sizes (``__qdim``/``__cdim``) so the
     against-index paths can validate dimensions inside the probed-cells
     collect they already pay for — see ``_collect_probed_cells``."""
@@ -404,19 +422,6 @@ def ivf_scored_candidates(
         "cell_id",
         vectors.cosine(F.col("__v"), F.col("__qv")).alias("cos"),
     )
-
-
-def topk_from_scored(
-    scored: DataFrame,
-    query_id_col: str = "query_id",
-    id_col: str = "vec_id",
-    k: int = 10,
-) -> DataFrame:
-    """Rank a (query, candidate, cos) table with the same two-phase
-    salted exact top-k every similarity path uses (tie-break: cos DESC,
-    id ASC) — the public entry for callers that stage scored candidates
-    once (:func:`ivf_scored_candidates`) and rank subsets of them."""
-    return _topk_per_query(scored, query_id_col, id_col, k)
 
 
 def probe_cells(
@@ -501,7 +506,6 @@ def bq_topk(
     k: int = 10,
     dim: int | None = None,
     refine: int = 8,
-    n_salt: int = 32,
     exclude_self: bool = False,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
@@ -511,11 +515,13 @@ def bq_topk(
     Stage 1 scans ONLY the signature table (``pack_signatures`` output,
     or built inline from ``vectors_df``): per pair, one xor+bit_count
     per 64 dims instead of ``dim`` float multiplies, and 32× less data
-    read than the float corpus. The two-phase salted rank keeps
-    ``refine*k`` candidates per query. Stage 2 joins the (bounded,
-    broadcastable) candidate set back to the float corpus and reranks by
-    exact cosine — so the result format and tie-breaks match
-    ``brute_force_topk`` exactly; only stage-1 misses cost recall.
+    read than the float corpus. The one salted top-k kernel
+    (``_topk_per_query_multi``, Hamming ascending) keeps ``refine*k``
+    candidates per query. Stage 2 (``_exact_rerank``) joins the bounded,
+    broadcast candidate set back to the float corpus and reranks it by
+    exact cosine with the same kernel — so the result format and
+    tie-breaks match ``brute_force_topk`` exactly; only stage-1 misses
+    cost recall.
 
     Same family as the banded hyperplane LSH in operators/dedup.py, but
     for *ranking* (global top-k per query) rather than *pairing*: LSH
@@ -540,33 +546,14 @@ def bq_topk(
     if exclude_self:
         ham = ham.filter(F.col(id_col) != F.col(query_id_col))
     cands = _topk_per_query(
-        ham,
-        query_id_col,
-        id_col,
-        refine * k,
-        n_salt=n_salt,
-        value_col="hamming",
-        ascending=True,
-    ).select(query_id_col, id_col)
-    # rerank: candidates are bounded (|queries|·refine·k rows) → broadcast
-    # them into the corpus join so the float vectors are read only for
-    # survivors; then one more broadcast of the (small) query vectors.
-    qvecs = F.broadcast(
-        queries_df.select(
-            F.col(query_id_col), F.col(vec_col).alias("__qvec")
-        )
+        ham, query_id_col, id_col, refine * k,
+        value_col="hamming", ascending=True,
     )
-    rerank = (
-        vectors_df.select(F.col(id_col), F.col(vec_col))
-        .join(F.broadcast(cands), id_col)
-        .join(qvecs, query_id_col)
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            vectors.cosine(F.col(vec_col), F.col("__qvec")).alias("cos"),
-        )
+    return _exact_rerank(
+        vectors_df.select(id_col, vec_col),
+        queries_df.select(query_id_col, vec_col),
+        cands, query_id_col, id_col, k,
     )
-    return _topk_per_query(rerank, query_id_col, id_col, k, n_salt=n_salt)
 
 
 # --- product quantization (PQ / ADC) ---------------------------------------
@@ -781,7 +768,6 @@ def ivf_pq_topk(
     k: int = 10,
     n_probe: int = 4,
     refine: int = 8,
-    n_salt: int = 32,
     exclude_self: bool = False,
     coded: DataFrame | None = None,
 ) -> DataFrame:
@@ -799,21 +785,9 @@ def ivf_pq_topk(
         coded = encode_ivf_pq(
             vectors_df, centroids, books, dim, n_subs, id_col, vec_col
         )
-    q = queries_df.select(
-        F.col(query_id_col).alias("__qid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__qv"),
-        _subvecs(F.col(vec_col), dim, n_subs).alias("__qsv"),
-    )
-    # probe selection — same shape as ivf_topk (tiny per-query window
-    # over n_cells rows)
-    qc = q.crossJoin(F.broadcast(centroids)).withColumn(
-        "__dist", vectors.l2_distance(F.col("__qv"), F.col("centroid"))
-    )
-    wq = Window.partitionBy("__qid").orderBy(F.asc("__dist"), F.asc("cell_id"))
     probes = F.broadcast(
-        qc.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= n_probe)
-        .select("__qid", "__qsv", "cell_id")
+        _probe_cells(queries_df, centroids, query_id_col, vec_col, n_probe)
+        .withColumn("__qsv", _subvecs(F.col("__qv"), dim, n_subs))
         .crossJoin(F.broadcast(_packed_books(books)))
         .select("__qid", "cell_id", _pq_lut().alias("__lut"))
     )
@@ -825,28 +799,14 @@ def ivf_pq_topk(
     if exclude_self:
         scored = scored.filter(F.col(id_col) != F.col(query_id_col))
     cands = _topk_per_query(
-        scored,
-        query_id_col,
-        id_col,
-        refine * k,
-        n_salt=n_salt,
-        value_col="adc",
-        ascending=True,
-    ).select(query_id_col, id_col)
-    qvecs = F.broadcast(
-        queries_df.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
+        scored, query_id_col, id_col, refine * k,
+        value_col="adc", ascending=True,
     )
-    rerank = (
-        vectors_df.select(F.col(id_col), F.col(vec_col))
-        .join(F.broadcast(cands), id_col)
-        .join(qvecs, query_id_col)
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            vectors.cosine(F.col(vec_col), F.col("__qvec")).alias("cos"),
-        )
+    return _exact_rerank(
+        vectors_df.select(id_col, vec_col),
+        queries_df.select(query_id_col, vec_col),
+        cands, query_id_col, id_col, k,
     )
-    return _topk_per_query(rerank, query_id_col, id_col, k, n_salt=n_salt)
 
 
 def encode_ivf_pq(
@@ -892,7 +852,6 @@ def pq_topk(
     query_id_col: str = "query_id",
     k: int = 10,
     refine: int = 8,
-    n_salt: int = 32,
     exclude_self: bool = False,
     codes: DataFrame | None = None,
 ) -> DataFrame:
@@ -933,28 +892,14 @@ def pq_topk(
     if exclude_self:
         scored = scored.filter(F.col(id_col) != F.col(query_id_col))
     cands = _topk_per_query(
-        scored,
-        query_id_col,
-        id_col,
-        refine * k,
-        n_salt=n_salt,
-        value_col="adc",
-        ascending=True,
-    ).select(query_id_col, id_col)
-    qvecs = F.broadcast(
-        queries_df.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
+        scored, query_id_col, id_col, refine * k,
+        value_col="adc", ascending=True,
     )
-    rerank = (
-        vectors_df.select(F.col(id_col), F.col(vec_col))
-        .join(F.broadcast(cands), id_col)
-        .join(qvecs, query_id_col)
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            vectors.cosine(F.col(vec_col), F.col("__qvec")).alias("cos"),
-        )
+    return _exact_rerank(
+        vectors_df.select(id_col, vec_col),
+        queries_df.select(query_id_col, vec_col),
+        cands, query_id_col, id_col, k,
     )
-    return _topk_per_query(rerank, query_id_col, id_col, k, n_salt=n_salt)
 
 
 # ---------------------------------------------------------------------------
@@ -1411,24 +1356,15 @@ def ivf_bq_topk_against_index(
     cands = _topk_per_query(
         ham, query_id_col, id_col, refine * k,
         value_col="hamming", ascending=True,
-    ).select(F.col(query_id_col).alias("__cqid"), F.col(id_col).alias("__cid"))
-    # survivors are bounded (|queries|·refine·k rows): broadcast them into
-    # the postings join so float vectors are read only for survivors
-    q = queries_df.select(
-        F.col(query_id_col).alias("__cqid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__qv"),
     )
-    rerank = (
-        read_ivf_postings(spark, path, cells=probed_cells)
-        .join(F.broadcast(cands), F.col("id") == F.col("__cid"))
-        .join(F.broadcast(q), "__cqid")
-        .select(
-            F.col("__cqid").alias(query_id_col),
-            F.col("id").alias(id_col),
-            vectors.cosine(F.col("vec"), F.col("__qv")).alias("cos"),
-        )
+    return _exact_rerank(
+        read_ivf_postings(spark, path, cells=probed_cells).select("id", "vec"),
+        queries_df.select(
+            query_id_col,
+            F.transform(F.col(vec_col), lambda x: x.cast("double")),
+        ),
+        cands, query_id_col, id_col, k,
     )
-    return _topk_per_query(rerank, query_id_col, id_col, k)
 
 
 def ivf_pq_topk_against_index(
@@ -1487,22 +1423,15 @@ def ivf_pq_topk_against_index(
     cands = _topk_per_query(
         scored, query_id_col, id_col, refine * k,
         value_col="adc", ascending=True,
-    ).select(F.col(query_id_col).alias("__cqid"), F.col(id_col).alias("__cid"))
-    q = queries_df.select(
-        F.col(query_id_col).alias("__cqid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__qv"),
     )
-    rerank = (
-        read_ivf_postings(spark, path, cells=probed_cells)
-        .join(F.broadcast(cands), F.col("id") == F.col("__cid"))
-        .join(F.broadcast(q), "__cqid")
-        .select(
-            F.col("__cqid").alias(query_id_col),
-            F.col("id").alias(id_col),
-            vectors.cosine(F.col("vec"), F.col("__qv")).alias("cos"),
-        )
+    return _exact_rerank(
+        read_ivf_postings(spark, path, cells=probed_cells).select("id", "vec"),
+        queries_df.select(
+            query_id_col,
+            F.transform(F.col(vec_col), lambda x: x.cast("double")),
+        ),
+        cands, query_id_col, id_col, k,
     )
-    return _topk_per_query(rerank, query_id_col, id_col, k)
 
 
 def ivf_drift_report(spark, path: str) -> DataFrame:

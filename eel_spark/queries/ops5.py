@@ -566,16 +566,16 @@ SELECT query_id, doc_id, rank, score_num FROM (
 def retrieval_rrf_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: fuse a term-frequency ranking and a
     term-coverage ranking of the documents corpus per query via
-    Reciprocal Rank Fusion (operators/retrieval.reciprocal_rank_fusion —
+    Reciprocal Rank Fusion (operators/retrieval.rrf_from_ranks —
     Cormack et al.'s rank-only combiner, the standard hybrid-retrieval
     baseline). ONE match-bounded corpus scan feeds BOTH base rankings
     (tokens intersect the broadcast-literal union term set before the
     explode, so nothing token-volume-sized shuffles), and both rankings
     are computed by one fused salted top-k (_topk_per_query_multi: one
-    shuffle pair for N ranking dimensions — r15, §2.4); the bounded
-    (≤ 2·k·n_queries rows) ranked table is pinned for the fusion's two
-    branches, and the fusion is one union + one map-side-combinable
-    (query, doc) groupBy + the same salted top-k.
+    shuffle pair for N ranking dimensions — r15, §2.4) into one wide
+    (query, doc, rank_lex, rank_cov) table; the fusion is a projection
+    over that table plus the same salted top-k — no pin, no union, no
+    fusion groupBy.
     ``score_num`` is the fused score scaled by lcm(61..70) and rounded
     back to the exact integer numerator — the engine-neutral form (§6)
     that gates the operator's float arithmetic to within half an ulp."""

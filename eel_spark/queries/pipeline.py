@@ -706,11 +706,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str):
     scored = pin(similarity.ivf_scored_candidates(emb, queries, cents))
     # probe-all: n_probe = n_cells ⇒ every corpus vector is a candidate
     # for every query ⇒ exact. Feeds the output AND the recall reference.
-    exact = pin(similarity.topk_from_scored(scored, k=10))
+    exact = pin(similarity._topk_per_query(scored, "query_id", "vec_id", 10))
     probes = similarity.probe_cells(queries, cents, n_probe=6)
-    approx = similarity.topk_from_scored(
+    approx = similarity._topk_per_query(
         scored.join(F.broadcast(probes), ["query_id", "cell_id"], "left_semi"),
-        k=10,
+        "query_id", "vec_id", 10,
     )
     # mean recall over the QUERY SET = |approx ∩ exact| / (k · n_queries):
     # every query contributes hits_q/k, a query with no overlapping (or

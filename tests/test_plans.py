@@ -6,6 +6,8 @@ measured query set."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from eel_spark.queries import QUERIES as _GATED
@@ -236,7 +238,9 @@ def test_brute_force_topk_rank_is_two_phase_salted(spark):
     (corpus x query) cross product: that funnels every query's |corpus|
     rows through one reducer (round-4 judge finding). The plan must show
     the deepest Window salted — partitioned by (query, salt) — with the
-    query-only Window ranking only the bounded salted survivors."""
+    query-only Window ranking only the bounded salted survivors, and
+    Catalyst must infer a WindowGroupLimit (the map-side top-k prune) in
+    BOTH phases from the kernel's per-dimension filters."""
     import re
 
     from eel_spark.operators import similarity
@@ -265,6 +269,10 @@ def test_brute_force_topk_rank_is_two_phase_salted(spark):
     win_pos = [m.start() for m in re.finditer(r"Window \[", opt)]
     lr_filter = opt.index("Filter (__lr")
     assert win_pos[0] < lr_filter < win_pos[1], opt
+    limits = re.findall(r"WindowGroupLimit \[([^\]]*)\]", opt)
+    assert len(limits) == 2, f"expected a WindowGroupLimit per phase: {opt}"
+    assert "__salt" not in limits[0] and "query_id" in limits[0], limits
+    assert "__salt" in limits[1], limits
 
 
 def test_bq_topk_plan_jvm_only_and_salted(spark):
@@ -639,23 +647,17 @@ def test_hybrid_against_stores_plan_jvm_only_and_pruned(spark, tmp_path):
 
 # -- committed plan-audit evidence is self-verifying (r15, VERDICT item 5) ---
 # The r14 round shipped two "regenerated at round close" audit dumps that
-# were in fact stale copies of the _before plans. This pins a slice of
-# plans/r15/audit/ to a fresh explain so stale evidence fails CI instead
-# of needing a judge to diff it.
+# were in fact stale copies of the _before plans. Every dump under
+# plans/r15/audit/ is checked against a fresh explain so stale evidence
+# fails CI instead of needing a judge to diff it.
 
 AUDIT_SF = "/root/testdata/sf0.1"
-AUDIT_PINNED = [
-    "ann_ivf_topk",
-    "retrieval_rrf_fused",
-    "pipeline_prepare_corpus",
-    "q21_waiting_suppliers",
-    "dedup_minhash_pairs",
-    # in the pinned set since the round-close regen caught its committed
-    # dump stale: the uncapped-_bucket_pairs fallback (876ed60) changed
-    # this slot's plan (fusion -> streaming band self-join) one commit
-    # AFTER the audit dumps were generated
-    "dedup_simhash_pairs",
-]
+AUDIT_DIR = os.path.join(
+    os.path.dirname(__file__), "..", "plans", "r15", "audit"
+)
+AUDIT_SLOTS = sorted(
+    f[: -len(".txt")] for f in os.listdir(AUDIT_DIR) if f.endswith(".txt")
+)
 AUDIT_MARKERS = (
     "Exchange",
     "SortMergeJoin",
@@ -665,24 +667,23 @@ AUDIT_MARKERS = (
     "InMemoryRelation",
     "BatchEvalPython",
     "ArrowEvalPython",
+    # window ranks and the top-k prune Catalyst infers from them: a
+    # change to a ranking filter's shape can drop the prune without
+    # moving any exchange
+    "Window",
+    "WindowGroupLimit",
 )
 
 
-@pytest.mark.parametrize("name", AUDIT_PINNED)
+@pytest.mark.parametrize("name", AUDIT_SLOTS)
 def test_audit_dump_matches_fresh_explain(spark, name):
-    """The committed plans/r15/audit dump for each pinned slot must have
+    """The committed plans/r15/audit dump for each slot must have
     the same structural node counts as a fresh explain of the current
     code at the audit SF — both sides pre-execution, cache-clean (the
     audit generator clears the cache before each explain; reprint
     multiplicity of cached-relation build plans is then a pure function
     of the plan)."""
-    import os
-
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "plans", "r15", "audit",
-        f"{name}.txt",
-    )
-    committed = open(path).read()
+    committed = open(os.path.join(AUDIT_DIR, f"{name}.txt")).read()
     spark.catalog.clearCache()
     fresh = plan_str(QUERIES[name](spark, AUDIT_SF))
     for marker in AUDIT_MARKERS:

@@ -602,6 +602,22 @@ def test_rrf_from_ranks_bit_equals_list_form(spark):
         ).collect())
     )
     assert got == want  # exact, floats included
+    # and both equal a Python fold over the SORTED contributions from 0.0
+    contribs: dict = {}
+    for w, t in ((1.0, a), (0.5, b)):
+        for r in t.collect():
+            contribs.setdefault((r["query_id"], r["doc_id"]), []).append(
+                w / (60.0 + r["rank"])
+            )
+    expect = {}
+    for key, cs in contribs.items():
+        acc = 0.0
+        for c in sorted(cs):
+            acc += c
+        expect[key] = acc
+    assert {(q, d): s for q, d, s, _ in got} == {
+        key: expect[key] for key in {(q, d) for q, d, _, _ in got}
+    }
     with pytest.raises(ValueError, match="at least one"):
         rrf_from_ranks(wide, [], "doc_id")
     with pytest.raises(ValueError, match="weights"):
@@ -610,10 +626,25 @@ def test_rrf_from_ranks_bit_equals_list_form(spark):
         rrf_from_ranks(wide, ["rank_a"], "doc_id", weights=[0.0])
 
 
+def _python_topk(rows, value_idx, k, ascending):
+    """Per-query top-k of (query, id, values...) tuples by a pure-Python
+    sort on (value, id): {(query, id): rank}."""
+    by_q: dict = {}
+    for r in rows:
+        by_q.setdefault(r[0], []).append(r)
+    out = {}
+    for q, rs in by_q.items():
+        rs.sort(key=lambda r: ((r[value_idx] if ascending else -r[value_idx]), r[1]))
+        out.update({(q, r[1]): i + 1 for i, r in enumerate(rs[:k])})
+    return out
+
+
 def test_topk_per_query_multi_equals_independent_topks(spark):
-    """One fused shuffle pair (_topk_per_query_multi) must reproduce N
-    independent _topk_per_query rankings exactly, including ties broken
-    by id and rows surviving for only one dimension."""
+    """The one salted top-k kernel (_topk_per_query_multi, and its
+    one-dimension adapter _topk_per_query) must reproduce a pure-Python
+    per-query sort by (value, id) exactly — ties broken by id, both
+    orders, one and two dimensions, rows surviving for only one
+    dimension."""
     from eel_spark.operators.similarity import (
         _topk_per_query,
         _topk_per_query_multi,
@@ -621,7 +652,9 @@ def test_topk_per_query_multi_equals_independent_topks(spark):
 
     rows = [
         ("q1", i, float(i % 7), float((13 * i) % 11)) for i in range(40)
-    ] + [("q2", i, float(i % 3), float(i)) for i in range(25)]
+    ] + [("q2", i, float(i % 3), float(i)) for i in range(25)] + [
+        ("q3", i, float((i * 5) % 4), float(i % 2)) for i in range(300)
+    ]
     scored = spark.createDataFrame(
         rows, "query_id string, doc_id long, va double, vb double"
     )
@@ -629,32 +662,25 @@ def test_topk_per_query_multi_equals_independent_topks(spark):
         scored, "query_id", "doc_id", 5,
         {"a": ("va", False), "b": ("vb", True)},
     ).collect()
-    got_a = sorted(
-        (r["query_id"], r["doc_id"], r["rank_a"])
-        for r in multi if r["rank_a"] is not None
-    )
-    got_b = sorted(
-        (r["query_id"], r["doc_id"], r["rank_b"])
-        for r in multi if r["rank_b"] is not None
-    )
-    want_a = sorted(
-        (r["query_id"], r["doc_id"], r["rank"])
-        for r in _topk_per_query(
-            scored, "query_id", "doc_id", 5, value_col="va"
-        ).collect()
-    )
-    want_b = sorted(
-        (r["query_id"], r["doc_id"], r["rank"])
-        for r in _topk_per_query(
-            scored, "query_id", "doc_id", 5, value_col="vb", ascending=True
-        ).collect()
-    )
-    assert got_a == want_a
-    assert got_b == want_b
-    # every emitted row ranks in at least one dimension
-    assert all(
-        r["rank_a"] is not None or r["rank_b"] is not None for r in multi
-    )
+    for name, idx, asc in (("a", 2, False), ("b", 3, True)):
+        got = {
+            (r["query_id"], r["doc_id"]): r[f"rank_{name}"]
+            for r in multi if r[f"rank_{name}"] is not None
+        }
+        assert got == _python_topk(rows, idx, 5, asc), name
+    # every emitted row ranks in at least one dimension and carries its
+    # input values
+    vals = {(r[0], r[1]): (r[2], r[3]) for r in rows}
+    for r in multi:
+        assert r["rank_a"] is not None or r["rank_b"] is not None
+        assert (r["va"], r["vb"]) == vals[(r["query_id"], r["doc_id"])]
+    for asc in (False, True):
+        single = _topk_per_query(
+            scored, "query_id", "doc_id", 5, value_col="va", ascending=asc
+        )
+        assert single.columns == ["query_id", "doc_id", "va", "rank"]
+        got = {(r["query_id"], r["doc_id"]): r["rank"] for r in single.collect()}
+        assert got == _python_topk(rows, 2, 5, asc), asc
 
 
 def test_rrf_hybrid_bm25_plus_ann_jvm_only(spark, stats_store):
@@ -847,8 +873,28 @@ def test_rrf_rejects_nonpositive_weights_and_dedupes(spark):
         r["doc_id"]: r["score"]
         for r in reciprocal_rank_fusion([dup], "doc_id", k=5).collect()
     }
-    assert got[1] == pytest.approx(1 / 61, rel=1e-12)  # rank 5 dup ignored
-    assert got[2] == pytest.approx(1 / 62, rel=1e-12)
+    assert got[1] == 0.0 + 1.0 / 61.0  # rank 5 dup ignored
+    assert got[2] == 0.0 + 1.0 / 62.0
+    # duplicates across systems: each system counts its best rank once,
+    # and the fused score is the Python fold over the sorted per-system
+    # contributions from 0.0
+    other = spark.createDataFrame(
+        [("q", 2, 3), ("q", 2, 1), ("q", 1, 4)],
+        "query_id string, doc_id long, rank int",
+    )
+    got = {
+        r["doc_id"]: r["score"]
+        for r in reciprocal_rank_fusion(
+            [dup, other], "doc_id", k=5, weights=[0.7, 0.3]
+        ).collect()
+    }
+    for doc, cs in {
+        1: [0.7 / 61.0, 0.3 / 64.0], 2: [0.7 / 62.0, 0.3 / 61.0]
+    }.items():
+        acc = 0.0
+        for c in sorted(cs):
+            acc += c
+        assert got[doc] == acc, doc
 
 
 # -- gated hybrid-fusion slot (r11) -------------------------------------------

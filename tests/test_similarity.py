@@ -70,19 +70,30 @@ def test_scored_candidates_reproduce_ivf_topk(clustered):
     )
     cents = similarity.train_centroids(clustered, n_cells=3, iterations=3)
     scored = similarity.ivf_scored_candidates(clustered, queries, cents)
-    exact = similarity.topk_from_scored(scored, k=3)
+    exact = similarity._topk_per_query(scored, "query_id", "vec_id", 3)
     ref_all = similarity.ivf_topk(clustered, queries, cents, k=3, n_probe=3)
     assert sorted(map(tuple, exact.collect())) == sorted(
         map(tuple, ref_all.collect())
     )
     probes = similarity.probe_cells(queries, cents, n_probe=2)
-    approx = similarity.topk_from_scored(
-        scored.join(probes, ["query_id", "cell_id"], "left_semi"), k=3
+    approx = similarity._topk_per_query(
+        scored.join(probes, ["query_id", "cell_id"], "left_semi"),
+        "query_id", "vec_id", 3,
     )
     ref_2 = similarity.ivf_topk(clustered, queries, cents, k=3, n_probe=2)
     assert sorted(map(tuple, approx.collect())) == sorted(
         map(tuple, ref_2.collect())
     )
+
+
+def test_assign_cells_packed_rejects_colliding_column(clustered):
+    # the crossJoin would shadow the input column and the final drop
+    # would delete it: a collision must raise, not lose the column
+    packed = similarity.train_centroids(clustered, n_cells=3).agg(
+        F.collect_list(F.struct("cell_id", "centroid")).alias("cluster")
+    )
+    with pytest.raises(ValueError, match="collides"):
+        similarity._assign_cells_packed(clustered, packed, "cluster", "embedding")
 
 
 def test_train_centroids_deterministic(clustered):
