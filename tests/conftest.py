@@ -21,6 +21,9 @@ def pytest_collection_modifyitems(config, items):
     conftest hook runs before the core ``-m`` filter so the added marks
     deselect as if they were inline.
 
+    A key names a test function (``file.py::test``, all its
+    parametrized items) or one parametrized item (``file.py::test[id]``).
+
     A ``SLOW`` key that names a collected file but no collected test in
     it fails collection: a slow test renamed without its key would
     otherwise silently rejoin the default run. Keys for files that were
@@ -31,8 +34,9 @@ def pytest_collection_modifyitems(config, items):
         base = item.path.name if hasattr(item, "path") else item.fspath.basename
         name = getattr(item, "originalname", None) or item.name
         files.add(base)
-        if f"{base}::{name}" in SLOW:
-            matched.add(f"{base}::{name}")
+        keys = {f"{base}::{name}", f"{base}::{item.name}"} & SLOW.keys()
+        if keys:
+            matched |= keys
             item.add_marker(pytest.mark.slow)
     partial = {os.path.basename(a.split("::")[0]) for a in config.args if "::" in a}
     stale = sorted(k for k in SLOW

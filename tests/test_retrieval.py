@@ -615,9 +615,7 @@ def test_rrf_from_ranks_bit_equals_list_form(spark):
         for c in sorted(cs):
             acc += c
         expect[key] = acc
-    assert {(q, d): s for q, d, s, _ in got} == {
-        key: expect[key] for key in {(q, d) for q, d, _, _ in got}
-    }
+    assert all(s == expect[(q, d)] for q, d, s, _ in got), got
     with pytest.raises(ValueError, match="at least one"):
         rrf_from_ranks(wide, [], "doc_id")
     with pytest.raises(ValueError, match="weights"):
@@ -634,7 +632,7 @@ def _python_topk(rows, value_idx, k, ascending):
         by_q.setdefault(r[0], []).append(r)
     out = {}
     for q, rs in by_q.items():
-        rs.sort(key=lambda r: ((r[value_idx] if ascending else -r[value_idx]), r[1]))
+        rs.sort(key=lambda r: (r[value_idx] if ascending else -r[value_idx], r[1]))
         out.update({(q, r[1]): i + 1 for i, r in enumerate(rs[:k])})
     return out
 
