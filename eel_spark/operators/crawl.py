@@ -32,7 +32,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from eel_spark.functions.text import _c, _decode_entities, url_host
-from eel_spark.operators.maintenance import locked_store_write
+from eel_spark.operators.maintenance import (
+    _compact_to_sentinel,
+    _read_store,
+    commit_batch,
+    locked_store_write,
+)
 
 __all__ = [
     "sitemap_entries",
@@ -217,22 +222,6 @@ def _frontier_kp(key: Column) -> Column:
     return F.pmod(F.xxhash64(key), F.lit(N_FRONTIER_KP)).cast("int")
 
 
-#: AnalysisException fragments that mean "no store materialized yet" —
-#: anything else (permissions, corruption, drift) must fail loudly
-_NO_STORE_TAGS = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-
-
-def _read_store(spark, store_path: str):
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(store_path)
-    except AnalysisException as e:
-        if not any(tag in str(e) for tag in _NO_STORE_TAGS):
-            raise
-        return None
-
-
 def frontier_unseen(
     candidates: DataFrame,
     store_path: str,
@@ -325,44 +314,28 @@ def frontier_admit_batch(
             "url_key",
             "left_anti",
         ).drop("__kp")
-    (
+    commit_batch(
         wave.withColumn("kp", _frontier_kp(F.col("url_key")))
         .withColumn("batch_id", F.lit(batch_id))
         # one task per kp bucket → one file per partition dir
-        .repartition("kp")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "kp")
-        .parquet(store_path)
+        .repartition("kp"),
+        store_path, batch_id, ("batch_id", "kp"),
     )
 
 
 @locked_store_write("store_path", "spark")
 def compact_frontier_store(spark, store_path: str) -> None:
     """Collapse the frontier store's per-wave ``batch_id=N`` partition
-    trees into one ``batch_id=-1`` generation, preserving the kp
-    layout so the membership probe's partition pruning keeps working —
-    the directory-listing lever, same contract as the other five
-    compactors: run past the replay horizon with no active appender
-    (the store lease enforces the latter mechanically; a pre-horizon
-    replay finds its rows in the ``-1`` generation and correctly
-    admits nothing, but its exactly-once overwrite is spent).
-
-    Crash safety is ``sources/hdfs.staged_swap``'s: a crash at any
-    point leaves the store whole (or staged aside, which the next
-    writer's lease restores), never a half-deleted store."""
-    from eel_spark.sources.hdfs import staged_swap
-
-    root = store_path.rstrip("/")
-
-    def rewrite(tmp: str) -> None:
-        (
-            spark.read.parquet(root).drop("batch_id")
-            .withColumn("batch_id", F.lit(-1))
-            .repartition("kp")
-            .write.mode("overwrite")
-            .partitionBy("batch_id", "kp")
-            .parquet(tmp)
-        )
-
-    staged_swap(spark, root, rewrite)
+    trees into one ``batch_id=-1`` generation through
+    ``maintenance._compact_to_sentinel``, preserving the kp layout so
+    the membership probe's partition pruning keeps working. A
+    pre-horizon replay finds its rows in the ``-1`` generation and
+    correctly admits nothing, but its exactly-once overwrite is
+    spent."""
+    _compact_to_sentinel(
+        store_path.rstrip("/"),
+        spark.read.parquet(store_path).drop("batch_id"),
+        "batch_id",
+        ("batch_id", "kp"),
+        lambda df: df.repartition("kp"),
+    )

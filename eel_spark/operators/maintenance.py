@@ -1,43 +1,56 @@
-"""Unified maintenance for the incremental stores.
+"""The incremental-store module: the one commit protocol the six store
+families share, and the table that tells their layouts apart.
 
-Six store families share the per-batch increment discipline
-(``__src_batch``/``batch_id`` partitions, -1 reserved as the compacted
-sentinel, dynamic overwrite + staged-swap compaction): the BM25 stats
-store (operators/retrieval.py), the IVF ANN index
-(operators/similarity.py), the incremental-dedup history
-(streaming/streams.py), the SCD2 closed history (operators/scd2.py), the rollup store
-(operators/rollups.py) and the crawl frontier store
-(operators/crawl.py). Each documents "compact every
-O(100) batches", but nothing measured it — this module closes the loop
-the way ``ivf_drift_report`` → ``reindex_ivf_index`` does for centroid
-drift, for file/batch depth instead (r12 verdict #4):
+The families are the BM25 stats store (operators/retrieval.py), the IVF
+index (operators/similarity.py), the incremental-dedup history
+(streaming/streams.py), the SCD2 closed history (operators/scd2.py), the
+rollup store (operators/rollups.py) and the crawl frontier
+(operators/crawl.py). Each keeps its schema, its fold and compaction
+aggregates and its sort/repartition; the protocol around them is here:
 
-- :func:`store_maintenance_report` — ONE report shape across all six
-  stores: store type, batch depth, file/byte/dir counts, the
-  max-files-per-leaf listing lever, whether a compacted generation
-  exists and when it was written.
-- :func:`maintain` — threshold policy that triggers the store's OWN
-  compactor when the measured depth exceeds it.
+- **Lease.** Every appender, compactor and ``maintain`` holds the
+  store's one single-writer lease (:func:`acquire_store_lease`,
+  :func:`store_write_lease`, :func:`locked_store_write`). The outermost
+  acquisition heals an interrupted swap first.
+- **Commit with reap.** :func:`commit_batch` rejects a negative batch id
+  (-1 is the compacted sentinel), writes the batch's partitions by
+  per-writer dynamic overwrite (old data stays intact until the job
+  commits, so an interrupted append loses nothing), then deletes this
+  batch's key-hash sub-partitions the new increment no longer touches,
+  so a replayed batch id converges to exactly its rows.
+- **Sentinel compaction.** :func:`_compact_to_sentinel` folds the store
+  into one ``<batch col> = -1`` generation through :func:`_staged_swap`,
+  so a crash at any step leaves the store whole or staged aside for the
+  next lease holder to restore. SCD2 instead swaps its closed subtree
+  (operators/scd2.py).
+- **Family table.** ``_FAMILIES`` holds each family's layout marker, its
+  batch-dir glob (or the rollup's batch-id data column), its
+  torn-attempt probe and its compactor. :func:`detect_store_type`,
+  :func:`store_maintenance_report`, :func:`maintain` and the streaming
+  cadence (streams._maybe_maintain) read it.
+- **Missing store.** :func:`_read_store` reads a store that may not
+  exist yet: None for a missing or empty one, an error for anything
+  else.
 
-Scale shape: the report is driver-side file-listing over the store
-tree — an ADMIN operation, O(store files), never touching row data
-(except the rollup store, whose batch ids are data columns: one slim
+The report and ``maintain`` close the "compact every O(100) batches"
+loop by measuring depth: one report shape across the six families and a
+threshold policy that runs the family's own compactor. The report is
+driver-side file listing, O(store files), never touching row data
+(except the rollup store, whose batch ids are data: one slim
 aggregate). Run it from the ingest scheduler, not inside queries.
 """
 
 from __future__ import annotations
 
 import functools
+import importlib
 import inspect
 from contextlib import contextmanager
+from dataclasses import dataclass
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-
-STORE_TYPES = (
-    "bm25_stats", "ivf_index", "dedup_history", "scd2", "rollup",
-    "frontier",
-)
+from pyspark.sql import functions as F
 
 #: the ONE single-writer lease every store writer takes (appenders,
 #: compactors, ``maintain``, SCD2 merges and history rewrites, the funnel
@@ -84,11 +97,11 @@ def acquire_store_lease(
     mtime is the acquisition time).
 
     The outermost acquisition also HEALS an interrupted
-    :func:`~eel_spark.sources.hdfs.staged_swap` on every path a store
+    :func:`_staged_swap` on every path a store
     swaps (``<root>``, ``<root>/postings``, ``<root>__bands``), so every
     holder — appender, compactor or maintain — finds the store whole
     before it reads or writes it."""
-    from eel_spark.sources.hdfs import HdfsOps, restore_interrupted_swap
+    from eel_spark.sources.hdfs import HdfsOps
 
     ops = HdfsOps(spark)
     root = path.rstrip("/")
@@ -127,7 +140,7 @@ def acquire_store_lease(
     held.add(lease)
     try:
         for swapped in (root, f"{root}/postings", root + "__bands"):
-            restore_interrupted_swap(ops, swapped)
+            _restore_interrupted_swap(ops, swapped)
     except BaseException:
         release_store_lease(spark, lease)
         raise
@@ -206,6 +219,243 @@ def locked_store_write(
 
     return deco
 
+
+# -- the swap, the commit and the missing-store read ------------------------
+
+
+def _restore_interrupted_swap(
+    ops, store: str, aside: str | None = None
+) -> bool:
+    """If a prior :func:`_staged_swap` of ``store`` was interrupted
+    between its two renames (store missing, its staged-aside copy
+    ``aside`` — default ``<store>__old`` — present), the staged-aside
+    copy is authoritative — move it back. Returns True when a restore
+    happened. Called by the outermost :func:`acquire_store_lease` on
+    every path a store swaps, by ``upsert_parquet`` (which takes no
+    lease) on its own path, and by the SCD2 writers for the closed
+    subtree they swap inside the root, so whichever writer runs next
+    after a crash finds the store whole."""
+    aside = aside or store + "__old"
+    if not ops.exists(store) and ops.exists(aside):
+        if not ops.rename(aside, store):
+            raise IOError(
+                f"could not restore staged store {aside} after an "
+                "interrupted swap"
+            )
+        return True
+    return False
+
+
+def _staged_swap(spark: SparkSession, store: str, write_fn) -> None:
+    """Crash-safe whole-store replacement — the ONE swap every store
+    rewrite uses (the sentinel compactions, the IVF reindex,
+    ``upsert_parquet``'s full rewrite): a static overwrite of the store
+    root would truncate before writing, so a crash mid-write loses the
+    store. Instead:
+
+    1. ``write_fn(tmp)`` builds the replacement at a fresh
+       ``<store>__compacting`` (same filesystem → rename-able; a
+       crashed attempt's half-built tree is deleted first); it may read
+       the store freely.
+    2. Swap: store → ``__old``, tmp → store (rolled back if the second
+       rename fails), then drop ``__old``.
+
+    At every crash point the store is either whole at ``store`` or
+    whole at ``<store>__old`` with ``store`` missing. The caller must
+    heal the second state before reading (:func:`_restore_interrupted_swap`
+    — the store lease does it on acquisition). Run OFFLINE relative to
+    appenders — data landing in the store between write_fn's read and
+    the swap is destroyed by it (the lease enforces this)."""
+    from eel_spark.sources.hdfs import HdfsOps
+
+    tmp = store + "__compacting"
+    ops = HdfsOps(spark)
+    ops.delete(tmp, recursive=True)
+    write_fn(tmp)
+    ops.delete(store + "__old", recursive=True)
+    if not ops.rename(store, store + "__old"):
+        raise IOError(f"staged_swap: could not stage {store} aside")
+    if not ops.rename(tmp, store):
+        ops.rename(store + "__old", store)  # roll back
+        raise IOError(f"staged_swap: could not swap in {tmp}")
+    ops.delete(store + "__old", recursive=True)
+
+
+def _overwrite_partitions(
+    df: DataFrame, path: str, parts: Sequence[str]
+) -> None:
+    """Dynamic partition overwrite via the PER-WRITER option — never the
+    session conf, which would race with concurrent writers on the same
+    SparkSession (parallel foreachBatch, a second operator)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*parts)
+        .parquet(path)
+    )
+
+
+def commit_batch(
+    df: DataFrame,
+    path: str,
+    batch_id: int,
+    parts: Sequence[str],
+    live_kps: set[int] | None = None,
+) -> None:
+    """Commit one batch's increment to the table at ``path``: the frame
+    (already tagged with its batch id) replaces exactly the partitions
+    it carries, ``partitionBy(*parts)``, by dynamic overwrite. The
+    caller holds the store lease.
+
+    A negative ``batch_id`` is refused before anything is written: -1
+    is the compacted sentinel, and an append under it would overwrite
+    (and its reap would delete) the compacted generation.
+
+    ``live_kps`` is the key-hash sub-partition set (``parts[1]``) the
+    caller collected from this increment. After the commit, this
+    batch's ``<parts[1]>=K`` dirs whose K is not in it are deleted, so
+    replaying (or re-submitting corrected data under) a batch id
+    converges to exactly its rows — a two-level dynamic overwrite alone
+    would leave vacated kp dirs behind forever. A crash after the commit
+    and before the reap leaves stale rows only until the batch's next
+    replay, never data loss. Families without a kp level pass None."""
+    if int(batch_id) < 0:
+        raise ValueError(
+            f"batch id must be non-negative (got {int(batch_id)}) — "
+            "negative ids are reserved for compacted partitions"
+        )
+    _overwrite_partitions(df, path, parts)
+    if live_kps is None:
+        return
+    from eel_spark.sources.hdfs import HdfsOps
+
+    ops = HdfsOps(df.sparkSession)
+    batch_root = f"{path.rstrip('/')}/{parts[0]}={int(batch_id)}"
+    for st in ops.list_status(f"{batch_root}/{parts[1]}=*"):
+        if int(st["name"].split("=", 1)[1]) not in live_kps:
+            ops.delete(st["path"], recursive=True)
+
+
+def _compact_to_sentinel(
+    store: str,
+    folded: DataFrame,
+    batch_col: str,
+    parts: Sequence[str],
+    shape=None,
+) -> None:
+    """Replace the table at ``store`` with ``folded`` — the family's
+    compaction aggregate, without a ``batch_col`` — tagged
+    ``batch_col = -1``, laid out by ``shape`` (the family's
+    sort/repartition) and partitioned by ``parts`` as its appends are,
+    through :func:`_staged_swap`. Run OFFLINE under the store lease and
+    past the replay horizon: a batch appended during compaction is
+    destroyed by the swap, and one replayed after it re-adds its rows."""
+    tagged = folded.withColumn(batch_col, F.lit(-1))
+    if shape is not None:
+        tagged = shape(tagged)
+
+    def write(tmp: str) -> None:
+        tagged.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
+
+    _staged_swap(folded.sparkSession, store, write)
+
+
+#: AnalysisException tags that mean "nothing materialized yet": a
+#: missing path, or a directory with no parquet footers to infer a
+#: schema from (every batch so far wrote zero rows)
+_NO_STORE_TAGS = (
+    "PATH_NOT_FOUND", "Path does not exist", "UNABLE_TO_INFER_SCHEMA",
+)
+
+
+def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
+    """The table at ``path``, or None when it is missing or empty. Any
+    other failure (permissions, a corrupt footer, schema drift) raises:
+    reading it as "no history" would let an appender skip its history
+    match or overwrite touched partitions with batch-only rows."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if not any(tag in str(e) for tag in _NO_STORE_TAGS):
+            raise
+        return None
+
+
+# -- the family table ---------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _Family:
+    """One store family's layout, as the maintenance code sees it. Paths
+    are templates over the store ``{root}``."""
+
+    #: present only on this family's stores: a path that exists, or a
+    #: glob that matches
+    marker: str
+    #: ``module:function`` of the family's compactor, imported on use
+    compactor: str
+    #: glob of the ``<col>=<id>`` batch partition dirs; None when the
+    #: family keeps no batch dirs
+    batches: str | None = None
+    #: the batch-id DATA column of a family without batch dirs (rollup)
+    batch_col: str | None = None
+    #: glob whose match marks a torn prior attempt; None: a live batch
+    #: id at or past the current batch marks it
+    torn: str | None = None
+    #: trees the report walks for its file counts
+    trees: tuple[str, ...] = ("{root}",)
+    #: tree whose files-per-leaf is the depth lever, when not the root
+    leaf_tree: str | None = None
+    #: the compactor needs the caller's ``merges`` (rollup: merge
+    #: semantics are data, not layout)
+    needs_merges: bool = False
+
+
+#: detection order: each family's layout is disjoint by construction, and
+#: the dedup history's ``__bands`` sibling is probed before the
+#: frontier's ``batch_id=`` dirs, which the dedup survivors share
+_FAMILIES = {
+    "ivf_index": _Family(
+        marker="{root}/centroids",
+        batches="{root}/postings/__src_batch=*",
+        compactor="eel_spark.operators.similarity:compact_ivf_index",
+    ),
+    "scd2": _Family(
+        marker="{root}/scd_current=*",
+        # scd2.INFLIGHT_DIR: a merge that crashed mid-batch; compacting
+        # the closed history under its replay would break the repair
+        torn="{root}/_scd_inflight/*",
+        leaf_tree="{root}/scd_current=0",
+        compactor="eel_spark.operators.scd2:compact_scd2_history",
+    ),
+    "dedup_history": _Family(
+        marker="{root}__bands",
+        batches="{root}/batch_id=*",
+        trees=("{root}", "{root}__bands"),
+        compactor="eel_spark.streaming.streams:compact_dedup_history",
+    ),
+    "bm25_stats": _Family(
+        marker="{root}/__src_batch=*",
+        batches="{root}/__src_batch=*",
+        compactor="eel_spark.operators.retrieval:compact_bm25_stats",
+    ),
+    "frontier": _Family(
+        marker="{root}/batch_id=*",
+        batches="{root}/batch_id=*",
+        compactor="eel_spark.operators.crawl:compact_frontier_store",
+    ),
+    "rollup": _Family(
+        marker="{root}/granularity=*",
+        batch_col="__src_batch",
+        needs_merges=True,
+        compactor="eel_spark.operators.rollups:compact_rollup",
+    ),
+}
+
+STORE_TYPES = tuple(_FAMILIES)
+
 _REPORT_SCHEMA = (
     "path string, store_type string, n_batches long, "
     "has_compacted_generation boolean, n_files long, n_bytes long, "
@@ -213,40 +463,42 @@ _REPORT_SCHEMA = (
 )
 
 
+def _family(store_type: str) -> _Family:
+    try:
+        return _FAMILIES[store_type]
+    except KeyError:
+        raise ValueError(
+            f"unknown store_type {store_type!r} — one of {STORE_TYPES}"
+        ) from None
+
+
 def detect_store_type(spark: SparkSession, path: str) -> str:
     """Identify which store family lives at ``path`` from its on-disk
-    layout markers (each family's layout is disjoint by construction):
-    IVF keeps a ``centroids/`` table, SCD2 ``scd_current=`` partitions,
-    the dedup history a ``<path>__bands`` sibling, the BM25 store
-    ``__src_batch=`` partition dirs at the root, the rollup store
-    ``granularity=`` partition dirs, the frontier store ``batch_id=``
-    partition dirs WITHOUT a ``__bands`` sibling (the sibling check
-    runs first, so reaching the frontier branch implies its absence)."""
+    layout markers, probed in ``_FAMILIES`` order: IVF keeps a
+    ``centroids/`` table, SCD2 ``scd_current=`` partitions, the dedup
+    history a ``<path>__bands`` sibling, the BM25 store ``__src_batch=``
+    partition dirs at the root, the frontier store ``batch_id=``
+    partition dirs (reached only without a ``__bands`` sibling), the
+    rollup store ``granularity=`` partition dirs."""
     from eel_spark.sources.hdfs import HdfsOps
 
     ops = HdfsOps(spark)
     root = path.rstrip("/")
-    if ops.exists(f"{root}/centroids"):
-        return "ivf_index"
-    if ops.list_status(f"{root}/scd_current=*"):
-        return "scd2"
-    if ops.exists(root + "__bands"):
-        return "dedup_history"
-    if ops.list_status(f"{root}/__src_batch=*"):
-        return "bm25_stats"
-    if ops.list_status(f"{root}/batch_id=*"):
-        return "frontier"
-    if ops.list_status(f"{root}/granularity=*"):
-        # merge_time_rollup-maintained tables share this layout but
-        # carry no __src_batch column — they are already-merged final
-        # tables, not incremental stores, and have no compactor to run
-        if "__src_batch" in spark.read.parquet(root).columns:
-            return "rollup"
-        raise ValueError(
-            f"table at {path} has a rollup layout but no __src_batch "
-            "column — a merge_time_rollup table, not an incremental "
-            "store (only append_rollup_batch stores are maintainable)"
-        )
+    for name, fam in _FAMILIES.items():
+        marker = fam.marker.format(root=root)
+        if not (ops.list_status(marker) if "*" in marker else ops.exists(marker)):
+            continue
+        # merge_time_rollup-maintained tables share the rollup layout
+        # but carry no batch column — already-merged final tables, not
+        # incremental stores, with no compactor to run
+        if fam.batch_col and fam.batch_col not in spark.read.parquet(root).columns:
+            raise ValueError(
+                f"table at {path} has a rollup layout but no "
+                f"{fam.batch_col} column — a merge_time_rollup table, not "
+                "an incremental store (only append_rollup_batch stores "
+                "are maintainable)"
+            )
+        return name
     raise ValueError(
         f"no recognizable incremental store at {path} — expected one of "
         f"{STORE_TYPES} (IVF centroids/, scd_current=, a __bands sibling, "
@@ -277,60 +529,58 @@ def _walk(ops, root: str):
     return n_files, n_bytes, n_dirs, max_leaf
 
 
-def _batch_dirs(ops, pattern: str):
-    """(non-negative batch count, sentinel mtime or None) from the
-    ``<col>=<id>`` partition dirs matching ``pattern``."""
-    n = 0
-    sentinel_ms = None
-    for st in ops.list_status(pattern):
-        bid = st["name"].split("=", 1)[1]
-        if bid == "-1":
-            sentinel_ms = st["modification_time"]
-        else:
-            n += 1
-    return n, sentinel_ms
+def _live_batches(spark, ops, fam: _Family, root: str):
+    """(live batch count, max live batch id, sentinel mtime) — live
+    means non-sentinel. The sentinel mtime is the compacted generation's
+    dir mtime, -1 when the rollup's data shows one without a time, None
+    when there is none. All None for a family without batch ids."""
+    if fam.batches:
+        ids, sentinel_ms = [], None
+        for st in ops.list_status(fam.batches.format(root=root)):
+            bid = int(st["name"].split("=", 1)[1])
+            if bid == -1:
+                sentinel_ms = st["modification_time"]
+            else:
+                ids.append(bid)
+        return len(ids), max(ids, default=None), sentinel_ms
+    if fam.batch_col:
+        # batch ids are DATA here — one slim aggregate over the store
+        # (partials are one row per bucket per batch)
+        b = F.col(fam.batch_col)
+        row = (
+            spark.read.parquet(root)
+            .agg(
+                F.count_distinct(F.when(b >= 0, b)).alias("n"),
+                F.max(F.when(b >= 0, b)).alias("m"),
+                F.max((b == -1).cast("int")).alias("c"),
+            )
+            .first()
+        )
+        return int(row["n"]), row["m"], -1 if row["c"] else None
+    return None, None, None
 
 
-def max_live_batch_id(
-    spark: SparkSession, path: str, store_type: str | None = None
-) -> int | None:
-    """Largest non-sentinel batch id present in the store, or None when
-    there are none (or the family has no batch ids — SCD2). The
-    streaming sinks' REPLAY-HORIZON check: at the start of micro-batch
-    N every batch < N is committed (Structured Streaming commits batch
-    N-1 before planning N), so compaction is safe iff the store's max
-    live id is < N — a max id == N means a torn prior attempt of THIS
-    batch already wrote partitions, and compacting them would fold rows
-    the replay is about to re-append (double count)."""
+def _torn_attempt(
+    spark: SparkSession, path: str, store_type: str, batch_id: int
+) -> bool:
+    """Whether a torn prior attempt of micro-batch ``batch_id`` left
+    state that compaction must not fold — the streaming cadence's
+    REPLAY-HORIZON check. At the start of micro-batch N every batch < N
+    is committed (Structured Streaming commits N-1 before planning N),
+    so a live batch id >= N can only be a torn attempt of THIS batch,
+    whose rows the replay is about to re-append (compacting them would
+    double count). SCD2 keeps no batch ids: its torn attempt is an
+    inflight marker, which its history compactor refuses until the
+    replayed merge repairs it."""
     from eel_spark.sources.hdfs import HdfsOps
 
     ops = HdfsOps(spark)
     root = path.rstrip("/")
-    st = store_type or detect_store_type(spark, path)
-    if st == "scd2":
-        return None
-    if st == "rollup":
-        from pyspark.sql import functions as F
-
-        row = (
-            spark.read.parquet(root)
-            .agg(F.max(F.when(F.col("__src_batch") >= 0,
-                              F.col("__src_batch"))).alias("m"))
-            .first()
-        )
-        return None if row["m"] is None else int(row["m"])
-    pattern = {
-        "ivf_index": f"{root}/postings/__src_batch=*",
-        "bm25_stats": f"{root}/__src_batch=*",
-        "dedup_history": f"{root}/batch_id=*",
-        "frontier": f"{root}/batch_id=*",
-    }[st]
-    ids = [
-        int(st_["name"].split("=", 1)[1])
-        for st_ in ops.list_status(pattern)
-        if st_["name"].split("=", 1)[1] != "-1"
-    ]
-    return max(ids) if ids else None
+    fam = _family(store_type)
+    if fam.torn:
+        return bool(ops.list_status(fam.torn.format(root=root)))
+    live = _live_batches(spark, ops, fam, root)[1]
+    return live is not None and live >= batch_id
 
 
 def store_maintenance_report(
@@ -344,76 +594,30 @@ def store_maintenance_report(
 
     ``n_batches`` counts live (non-sentinel) increment generations —
     the read-side file-listing cost driver; NULL for SCD2, whose depth
-    lever is ``max_files_per_leaf`` (files per closed bucket, what its
-    compactor collapses to 1). ``last_compaction_ms`` is the compacted
+    lever is ``max_files_per_leaf`` over its closed subtree (files per
+    closed bucket, what its compactor collapses to 1 — the open side is
+    the merge's to manage). ``last_compaction_ms`` is the compacted
     generation's directory mtime where the layout records one (BM25 /
-    IVF / dedup sentinels), NULL otherwise."""
-    from pyspark.sql import functions as F
-
+    IVF / dedup / frontier sentinels), NULL otherwise."""
     from eel_spark.sources.hdfs import HdfsOps
 
     ops = HdfsOps(spark)
     root = path.rstrip("/")
     st = store_type or detect_store_type(spark, path)
-    n_batches: int | None
-    compacted_ms = None
-    if st == "ivf_index":
-        n_batches, compacted_ms = _batch_dirs(
-            ops, f"{root}/postings/__src_batch=*"
-        )
-        files = _walk(ops, root)
-    elif st == "bm25_stats":
-        n_batches, compacted_ms = _batch_dirs(ops, f"{root}/__src_batch=*")
-        files = _walk(ops, root)
-    elif st == "frontier":
-        n_batches, compacted_ms = _batch_dirs(ops, f"{root}/batch_id=*")
-        files = _walk(ops, root)
-    elif st == "dedup_history":
-        n_batches, compacted_ms = _batch_dirs(ops, f"{root}/batch_id=*")
-        fa = _walk(ops, root)
-        fb = _walk(ops, root + "__bands")
-        files = tuple(
-            max(a, b) if i == 3 else a + b for i, (a, b) in enumerate(zip(fa, fb))
-        )
-    elif st == "rollup":
-        # batch ids are DATA columns here — one slim aggregate over the
-        # store (partials are one row per bucket per batch)
-        row = (
-            spark.read.parquet(root)
-            .agg(
-                F.count_distinct(
-                    F.when(F.col("__src_batch") >= 0, F.col("__src_batch"))
-                ).alias("n"),
-                F.max((F.col("__src_batch") == -1).cast("int")).alias("c"),
-            )
-            .first()
-        )
-        n_batches = int(row["n"])
-        compacted_ms = None
-        files = _walk(ops, root)
-        if row["c"]:
-            compacted_ms = -1  # present, mtime unknowable from data rows
-    elif st == "scd2":
-        n_batches = None
-        files = _walk(ops, root)
-        # the depth LEVER must be what the compactor actually moves:
-        # compact_scd2_history rewrites only the CLOSED subtree (the
-        # open scd_current=1 buckets are the merge's to manage), so a
-        # whole-store max would trip the policy forever on a store
-        # whose open side is fragmented (r13 review)
-        closed_leaf = _walk(ops, f"{root}/scd_current=0")[3]
-        files = (files[0], files[1], files[2], closed_leaf)
-    else:
-        raise ValueError(f"unknown store_type {st!r} — one of {STORE_TYPES}")
-    n_files, n_bytes, n_dirs, max_leaf = files
-    has_compacted = compacted_ms is not None
+    fam = _family(st)
+    n_batches, _, compacted_ms = _live_batches(spark, ops, fam, root)
+    walks = [_walk(ops, t.format(root=root)) for t in fam.trees]
+    n_files, n_bytes, n_dirs = (sum(w[i] for w in walks) for i in range(3))
+    max_leaf = max(w[3] for w in walks)
+    if fam.leaf_tree:
+        max_leaf = _walk(ops, fam.leaf_tree.format(root=root))[3]
     return spark.createDataFrame(
         [
             (
                 root,
                 st,
                 n_batches,
-                has_compacted if st != "scd2" else None,
+                None if n_batches is None else compacted_ms is not None,
                 n_files,
                 n_bytes,
                 n_dirs,
@@ -457,45 +661,27 @@ def maintain(
     "action", "before", "after"}`` with the report rows as dicts;
     ``action`` is ``"compacted"`` or ``"none"``."""
     st = store_type or detect_store_type(spark, path)
+    fam = _family(st)
     before = store_maintenance_report(spark, path, store_type=st).first().asDict()
     needs = (
         before["max_files_per_leaf"] > int(max_files_per_leaf)
-        if st == "scd2"
-        else (before["n_batches"] or 0) > int(max_batches)
+        if before["n_batches"] is None
+        else before["n_batches"] > int(max_batches)
     )
     if not needs:
         return {"store_type": st, "action": "none", "before": before,
                 "after": before}
-    if st == "bm25_stats":
-        from eel_spark.operators.retrieval import compact_bm25_stats
-
-        compact_bm25_stats(spark, path)
-    elif st == "ivf_index":
-        from eel_spark.operators.similarity import compact_ivf_index
-
-        compact_ivf_index(spark, path)
-    elif st == "dedup_history":
-        from eel_spark.streaming.streams import compact_dedup_history
-
-        compact_dedup_history(spark, path)
-    elif st == "frontier":
-        from eel_spark.operators.crawl import compact_frontier_store
-
-        compact_frontier_store(spark, path)
-    elif st == "rollup":
+    kw = {}
+    if fam.needs_merges:
         if not merges:
             raise ValueError(
-                "rollup store at depth needs compact_rollup's merges= "
-                "dict (how each aggregate column re-merges) — pass it "
-                "through maintain(merges=...)"
+                f"{st} store at depth needs its compactor's merges= dict "
+                "(how each aggregate column re-merges) — pass it through "
+                "maintain(merges=...)"
             )
-        from eel_spark.operators.rollups import compact_rollup
-
-        compact_rollup(spark, path, merges, list(extra_keys))
-    elif st == "scd2":
-        from eel_spark.operators.scd2 import compact_scd2_history
-
-        compact_scd2_history(spark, path)
+        kw = {"merges": merges, "extra_keys": list(extra_keys)}
+    module, name = fam.compactor.split(":")
+    getattr(importlib.import_module(module), name)(spark, path, **kw)
     after = store_maintenance_report(spark, path, store_type=st).first().asDict()
     return {"store_type": st, "action": "compacted", "before": before,
             "after": after}

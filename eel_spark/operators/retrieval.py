@@ -40,7 +40,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from eel_spark.functions.text import normalized_text, tokens
-from eel_spark.operators.maintenance import locked_store_write
+from eel_spark.operators.maintenance import (
+    _compact_to_sentinel,
+    commit_batch,
+    locked_store_write,
+)
 
 
 def _tokens_col(text_col: str):
@@ -286,16 +290,14 @@ def bm25_topk_multi(
 # -- incrementally maintained corpus statistics (r10) -------------------------
 #
 # A streaming corpus can't rescan history to recompute df/N/avgdl for
-# every new wave. These helpers maintain the BM25 sufficient statistics
-# as batch-tagged parquet increments (the exactly-once pattern the
-# streaming rollup and dedup-history sinks use): each micro-batch writes
-# its FULL-VOCABULARY per-term document frequencies plus one totals row
-# into its own __src_batch partition, so a checkpoint-replayed batch
-# dynamic-overwrites exactly its partition and the store stays
-# byte-identical. Reading folds the increments with SUMs — df and the
-# totals are associative, so fold(waves) ≡ whole-corpus recompute
-# (equivalence-tested). Per batch the shuffle is (term, count) pairs
-# after an array_distinct — vocabulary-bounded, map-side combinable.
+# every new wave, so the BM25 sufficient statistics are an incremental
+# store (operators/maintenance.py owns its commit and compaction). What
+# is particular to this family: each batch's increment is its
+# FULL-VOCABULARY per-term document frequencies plus one totals row,
+# and the fold is SUMs — df and the totals are associative, so
+# fold(waves) ≡ whole-corpus recompute (equivalence-tested). Per batch
+# the shuffle is (term, count) pairs after an array_distinct —
+# vocabulary-bounded, map-side combinable.
 
 
 def bm25_batch_stats(df: DataFrame, text_col: str) -> DataFrame:
@@ -371,19 +373,10 @@ def append_bm25_stats_batch(
     text_col: str,
     src_batch: int = 0,
 ) -> None:
-    """Fold one batch's increment into the store, idempotently: the
-    increment lands via DYNAMIC partition overwrite (old data stays
-    intact until job commit — a failed or interrupted append loses
-    nothing), then ``__term_kp`` sub-partitions of this batch that the
-    new increment no longer touches are reaped post-commit, so
-    replaying (or re-submitting corrected data under) a batch id
-    converges to exactly its rows — a two-level dynamic overwrite alone
-    would leave stale kp dirs behind forever (r11 review). The one
-    remaining window — crash AFTER commit, BEFORE the reap — leaves
-    stale kp rows only until the batch's next replay/re-submission (and
-    never loses data; the r11 review's delete-first draft traded that
-    for batch LOSS on any mid-write failure of a direct caller with no
-    checkpoint to replay). The term-hash sub-partitioning lets per-term
+    """Fold one batch's increment into the store, idempotently, through
+    ``maintenance.commit_batch`` (dynamic overwrite of the batch's
+    ``__src_batch`` partition, then a reap of the ``__term_kp`` dirs it
+    no longer touches). The term-hash sub-partitioning lets per-term
     reads prune files (see ``_TERM_KP``). Do not mix with a pre-r11
     store written without ``__term_kp`` (partition discovery rejects
     mixed depths) — run ``compact_bm25_stats`` once to migrate.
@@ -391,16 +384,7 @@ def append_bm25_stats_batch(
     stream-execution thread; the thread-local mark/release pair is the
     established sink pattern)."""
     from eel_spark.caching import pin, pins_mark, release_pins_since
-    from eel_spark.sources.hdfs import HdfsOps
 
-    if int(src_batch) < 0:
-        # -1 is compact_bm25_stats' collapsed-partition sentinel: an
-        # append landing under it would dynamic-overwrite (and its reap
-        # would delete) the compacted store (r11 advice)
-        raise ValueError(
-            f"src_batch must be non-negative (got {int(src_batch)}) — "
-            "negative ids are reserved for compacted partitions"
-        )
     mark = pins_mark()
     try:
         inc = pin(
@@ -413,20 +397,12 @@ def append_bm25_stats_batch(
         new_kps = {
             r["__term_kp"] for r in inc.select("__term_kp").distinct().collect()
         }
-        (
+        commit_batch(
             # term-sorted files: parquet row-group min/max on `term`
             # prunes within each kp file too (an in-task sort of
             # batch-vocab-sized rows — no extra exchange)
-            inc.sortWithinPartitions("__term_kp", "term")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__src_batch", "__term_kp")
-            .parquet(path)
-        )
-        HdfsOps(batch_df.sparkSession).reap_stale_kp_dirs(
-            f"{path.rstrip('/')}/__src_batch={int(src_batch)}",
-            "__term_kp",
-            new_kps,
+            inc.sortWithinPartitions("__term_kp", "term"),
+            path, src_batch, ("__src_batch", "__term_kp"), new_kps,
         )
     finally:
         release_pins_since(mark)
@@ -484,55 +460,37 @@ def read_bm25_stats(
 @locked_store_write("path", "spark")
 def compact_bm25_stats(spark, path: str) -> None:
     """Collapse the per-batch increments into one ``__src_batch = -1``
-    partition (``-1`` is RESERVED for this sentinel —
-    ``append_bm25_stats_batch`` rejects negative batch ids so an append
-    can never land inside the compacted partition). Run it OFFLINE (no active sink or appender on this
-    store) and only once the streaming checkpoint's replay horizon has
-    passed — a batch appended DURING compaction lands after the read
-    and is destroyed by the swap, and one replayed AFTER compaction
-    re-adds its counts (the same contract as the rollup/dedup-history
-    compactors). Crash recovery: the swap stages the old store at
-    ``<path>__old`` before moving the compacted one in; if a crash
-    lands between the two renames, the next store writer's lease
-    restores the staged store (``sources/hdfs.staged_swap``, the one
-    swap every store uses)."""
-    from eel_spark.sources.hdfs import staged_swap
-
-    store = path.rstrip("/")
-
-    def rewrite(tmp: str) -> None:
-        raw = spark.read.parquet(store)
-        dfreq = (
-            raw.where(F.col("term").isNotNull())
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .select(
-                "term", "df",
-                F.lit(None).cast("long").alias("n_docs"),
-                F.lit(None).cast("long").alias("sum_dl"),
-            )
+    partition through ``maintenance._compact_to_sentinel`` (run it
+    offline, past the streaming checkpoint's replay horizon). The
+    compacted store always has the r11 ``__term_kp`` layout, so
+    compaction also migrates a pre-r11 store."""
+    raw = spark.read.parquet(path)
+    dfreq = (
+        raw.where(F.col("term").isNotNull())
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"))
+        .select(
+            "term", "df",
+            F.lit(None).cast("long").alias("n_docs"),
+            F.lit(None).cast("long").alias("sum_dl"),
         )
-        totals = raw.where(F.col("term").isNull()).agg(
-            F.coalesce(F.sum("n_docs"), F.lit(0)).cast("long").alias("n_docs"),
-            F.coalesce(F.sum("sum_dl"), F.lit(0)).cast("long").alias("sum_dl"),
-        ).select(
-            F.lit(None).cast("string").alias("term"),
-            F.lit(None).cast("long").alias("df"),
-            "n_docs", "sum_dl",
-        )
-        (
-            dfreq.unionByName(totals)
-            .withColumn("__src_batch", F.lit(-1))
-            # always emit the r11 term-hash layout: compaction doubles as
-            # the migration path for pre-r11 stores without __term_kp
-            .withColumn("__term_kp", _term_kp_col())
-            .sortWithinPartitions("__term_kp", "term")
-            .write.mode("overwrite")
-            .partitionBy("__src_batch", "__term_kp")
-            .parquet(tmp)
-        )
-
-    staged_swap(spark, store, rewrite)
+    )
+    totals = raw.where(F.col("term").isNull()).agg(
+        F.coalesce(F.sum("n_docs"), F.lit(0)).cast("long").alias("n_docs"),
+        F.coalesce(F.sum("sum_dl"), F.lit(0)).cast("long").alias("sum_dl"),
+    ).select(
+        F.lit(None).cast("string").alias("term"),
+        F.lit(None).cast("long").alias("df"),
+        "n_docs", "sum_dl",
+    )
+    _compact_to_sentinel(
+        path.rstrip("/"),
+        dfreq.unionByName(totals),
+        "__src_batch",
+        ("__src_batch", "__term_kp"),
+        lambda df: df.withColumn("__term_kp", _term_kp_col())
+        .sortWithinPartitions("__term_kp", "term"),
+    )
 
 
 def _against_stats_components(

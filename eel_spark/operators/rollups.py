@@ -17,7 +17,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from eel_spark.operators.maintenance import locked_store_write
+from eel_spark.operators.maintenance import (
+    _compact_to_sentinel,
+    _overwrite_partitions,
+    _read_store,
+    commit_batch,
+    locked_store_write,
+)
+
+#: a materialized rollup's partition columns (merge_time_rollup and the
+#: batch-partial store)
+_ROLLUP_PARTS = ("granularity", "bucket_date")
 
 #: granularity name → date_trunc unit (coarse → fine)
 GRANULARITIES = {
@@ -76,22 +86,6 @@ def time_rollup(
     )
 
 
-def _read_existing_rollup(spark, path: str):
-    """(df, True) for an existing store; (None, False) ONLY when the
-    path is missing (first materialization). Any other read failure
-    (transient storage error, corrupt footer, permissions) must abort —
-    treating it as "no history" would overwrite touched partitions with
-    batch-only partials, silently discarding accumulated counts."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path), True
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
-        return None, False
-
-
 def _touched_partition_pred(incoming: DataFrame):
     """Partition-pruning predicate for the (granularity, bucket_date)
     pairs ``incoming`` touches. The collected list is bounded by
@@ -126,18 +120,6 @@ def _touched_partition_pred(incoming: DataFrame):
     return pred
 
 
-def _dynamic_partition_overwrite(df: DataFrame, path: str) -> None:
-    """Dynamic partition overwrite via the PER-WRITER option — never the
-    session conf, which would race with concurrent writers on the same
-    SparkSession (parallel foreachBatch, a second operator)."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("granularity", "bucket_date")
-        .parquet(path)
-    )
-
-
 def merge_time_rollup(
     spark,
     path: str,
@@ -170,8 +152,8 @@ def merge_time_rollup(
     incoming = incoming.withColumn("bucket_date", F.to_date("bucket_start"))
     keys = ["granularity", "bucket_start", "bucket_date", *extra_keys]
 
-    existing, have_existing = _read_existing_rollup(spark, path)
-    if have_existing:
+    existing = _read_store(spark, path)
+    if existing is not None:
         incoming.persist()
         try:
             pred = _touched_partition_pred(incoming)
@@ -181,11 +163,11 @@ def merge_time_rollup(
                 .groupBy(*keys)
                 .agg(*[c.alias(name) for name, c in merges.items()])
             )
-            _dynamic_partition_overwrite(merged, path)
+            _overwrite_partitions(merged, path, _ROLLUP_PARTS)
         finally:
             incoming.unpersist()
     else:
-        _dynamic_partition_overwrite(incoming, path)
+        _overwrite_partitions(incoming, path, _ROLLUP_PARTS)
 
 
 def distinct_rollup_aggs(
@@ -424,13 +406,16 @@ def with_distinct_estimates(df: DataFrame, distinct_cols: list[str] | tuple[str,
 
 # ---------------------------------------------------------------------------
 # Batch-partial rollup store: the EXACTLY-ONCE form of the continuous
-# aggregate. merge_time_rollup re-aggregates history with each batch —
-# correct, but NOT idempotent: a replayed batch double-counts. Here each
-# batch instead appends its OWN partial rows tagged __src_batch, and
-# re-applying batch N first drops N's previous rows from the touched
-# partitions — replay-idempotent by construction, no ledger, no
-# transaction. Query through read_rollup (re-merges partials) and
-# collapse history with compact_rollup when batch counts grow.
+# aggregate, one of the incremental stores (operators/maintenance.py owns
+# its commit and compaction). merge_time_rollup re-aggregates history
+# with each batch — correct, but NOT idempotent: a replayed batch
+# double-counts. Here each batch appends its OWN partial rows tagged
+# __src_batch. What differs from the other families: the batch id is a
+# DATA column inside the (granularity, bucket_date) partitions, so an
+# append rewrites the partitions it touches from their other batches'
+# rows plus its own, and the compacted -1 generation is a column value
+# in those same partitions. Query through read_rollup (re-merges
+# partials).
 # ---------------------------------------------------------------------------
 
 
@@ -456,8 +441,8 @@ def append_rollup_batch(
         .withColumn("__src_batch", F.lit(int(src_batch)))
     )
 
-    existing, have = _read_existing_rollup(spark, path)
-    if have:
+    existing = _read_store(spark, path)
+    if existing is not None:
         # persist: the touched-partition collect AND the write both
         # evaluate incoming — without the pin the batch's grouping-sets
         # aggregation runs twice per micro-batch
@@ -469,11 +454,11 @@ def append_rollup_batch(
                 .filter(F.col("__src_batch") != int(src_batch))
                 .unionByName(incoming)
             )
-            _dynamic_partition_overwrite(merged, path)
+            commit_batch(merged, path, src_batch, _ROLLUP_PARTS)
         finally:
             incoming.unpersist()
     else:
-        _dynamic_partition_overwrite(incoming, path)
+        commit_batch(incoming, path, src_batch, _ROLLUP_PARTS)
 
 
 def read_rollup(
@@ -501,20 +486,20 @@ def compact_rollup(
     extra_keys: list[str] = (),
 ) -> None:
     """Collapse per-batch partials: each (bucket, keys) keeps ONE merged
-    row tagged __src_batch = -1. Read cost of read_rollup drops back to
-    one row per bucket; exactly-once replay of PAST batches is spent
-    (their rows are gone), so compact once their replay horizon has
-    passed (e.g. after checkpoint retention). Rewrites each partition
-    in place via dynamic overwrite — compaction never vacates a
-    partition, it only shrinks rows within it."""
+    row tagged ``__src_batch = -1``, written through
+    ``maintenance._compact_to_sentinel``. Read cost of read_rollup drops
+    back to one row per bucket; exactly-once replay of PAST batches is
+    spent (their rows are gone), so compact once their replay horizon
+    has passed (e.g. after checkpoint retention)."""
     keys = ["granularity", "bucket_start", "bucket_date", *extra_keys]
-    existing = spark.read.parquet(path)
-    merged = (
-        existing.groupBy(*keys)
-        .agg(*[c.alias(name) for name, c in merges.items()])
-        .withColumn("__src_batch", F.lit(-1))
+    _compact_to_sentinel(
+        path.rstrip("/"),
+        spark.read.parquet(path)
+        .groupBy(*keys)
+        .agg(*[c.alias(name) for name, c in merges.items()]),
+        "__src_batch",
+        _ROLLUP_PARTS,
     )
-    _dynamic_partition_overwrite(merged, path)
 
 
 def fill_time_gaps(

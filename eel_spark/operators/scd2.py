@@ -88,7 +88,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eel_spark.functions.hashes import row_digest
-from eel_spark.operators.maintenance import store_write_lease
+from eel_spark.operators.maintenance import (
+    _restore_interrupted_swap,
+    store_write_lease,
+)
 
 CURRENT_COL = "scd_current"  # partition: 1 = open version, 0 = closed
 BUCKET_COL = "scd_bucket"  # partition: hash(key) % n_buckets
@@ -835,9 +838,7 @@ def _restore_closed_history(ops, path: str) -> None:
     """Heal an interrupted :func:`_swap_closed_history` (crash between
     its two renames). Run by every holder of the store lease that
     touches the closed subtree (merge, trim, compaction)."""
-    from eel_spark.sources.hdfs import restore_interrupted_swap
-
-    restore_interrupted_swap(
+    _restore_interrupted_swap(
         ops, f"{path}/{CURRENT_COL}=0", aside=f"{path}/{_CLOSED_TRASH}"
     )
 

@@ -19,7 +19,12 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from eel_spark.operators.maintenance import locked_store_write
+from eel_spark.operators.maintenance import (
+    _compact_to_sentinel,
+    _staged_swap,
+    commit_batch,
+    locked_store_write,
+)
 from eel_spark.functions import vectors
 from eel_spark.scale import ensure_parallelism
 
@@ -906,8 +911,8 @@ def pq_topk(
 # Incremental IVF index (r11): embeddings arrive in waves; re-assigning
 # the whole corpus per wave (what ivf_topk does) is a full-corpus job at
 # every arrival. The index persists assigned postings per batch and new
-# waves append THEIR rows only — the same incremental-store discipline as
-# the BM25 stats store (retrieval.py:376) and the dedup history:
+# waves append THEIR rows only, as an incremental store
+# (operators/maintenance.py owns its commit, reap and compaction):
 #
 #   <path>/centroids/      frozen (cell_id, centroid) — written once at
 #                          init; appends READ it, so an append can never
@@ -920,13 +925,9 @@ def pq_topk(
 #                          distance of each appended vector to its
 #                          assigned centroid; the retrain drift signal
 #
-# Append idempotency/crash contract mirrors append_bm25_stats_batch:
-# dynamic partition overwrite (commit-atomic; an interrupted append
-# loses nothing), then post-commit reap of this batch's kp dirs the new
-# increment no longer touches, so replaying a batch id converges to
-# exactly its rows. Query reads prune postings partitions to the probed
-# cells' kp buckets driver-side (the probed-cell set is ≤ n_cells rows —
-# a bounded collect).
+# Query reads prune postings partitions to the probed cells' kp buckets
+# driver-side (the probed-cell set is ≤ n_cells rows — a bounded
+# collect).
 # ---------------------------------------------------------------------------
 
 _IVF_KP = 16
@@ -1034,7 +1035,7 @@ def read_ivf_centroids(spark, path: str) -> DataFrame:
     root = path.rstrip("/")
     ops = HdfsOps(spark)
     if not ops.exists(f"{root}/centroids"):
-        # a reindex that crashed between staged_swap's two root renames
+        # a reindex that crashed between _staged_swap's two root renames
         # leaves the REAL corpus staged at <root>__old; telling the
         # caller to init would create a fresh index beside it. Readers
         # take no lease, so route them to any writer (its lease
@@ -1079,23 +1080,15 @@ def append_ivf_batch(
     src_batch: int = 0,
 ) -> None:
     """Assign one wave against the index's frozen centroids and fold its
-    postings in, idempotently (see module comment for the crash
-    contract). The assignment is the shuffle-free broadcast argmin —
-    appending a wave never touches existing postings, so cost is
-    O(|wave| · n_cells) compares + one partitioned write, regardless of
-    index size. Also records the wave's (n_vectors, sum_dist) drift row.
+    postings in, idempotently, through ``maintenance.commit_batch``
+    (postings reaped per ``__cell_kp``). The assignment is the
+    shuffle-free broadcast argmin — appending a wave never touches
+    existing postings, so cost is O(|wave| · n_cells) compares + one
+    partitioned write, regardless of index size. Also records the
+    wave's (n_vectors, sum_dist) drift row.
     """
     from eel_spark.caching import pin, pins_mark, release_pins_since
-    from eel_spark.sources.hdfs import HdfsOps
 
-    if int(src_batch) < 0:
-        # -1 is compact_ivf_index's collapsed-partition sentinel: an
-        # append landing under it would dynamic-overwrite (and its reap
-        # would delete) most of a compacted corpus (r11 advice)
-        raise ValueError(
-            f"src_batch must be non-negative (got {int(src_batch)}) — "
-            "negative ids are reserved for compacted partitions"
-        )
     spark = batch_df.sparkSession
     root = path.rstrip("/")
     centroids = read_ivf_centroids(spark, path)
@@ -1149,21 +1142,14 @@ def append_ivf_batch(
             ).first()["n"]
             post = _with_pq_codes(post, books, "vec", dim, n_subs)
             cols.insert(3, "codes")
-        (
+        commit_batch(
             post.select(*cols)
             .withColumn("__src_batch", F.lit(int(src_batch)))
-            .sortWithinPartitions("__cell_kp", "cell_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__src_batch", "__cell_kp")
-            .parquet(f"{root}/postings")
-        )
-        HdfsOps(spark).reap_stale_kp_dirs(
-            f"{root}/postings/__src_batch={int(src_batch)}",
-            "__cell_kp",
+            .sortWithinPartitions("__cell_kp", "cell_id"),
+            f"{root}/postings", src_batch, ("__src_batch", "__cell_kp"),
             new_kps,
         )
-        (
+        commit_batch(
             assigned.agg(
                 F.count(F.lit(1)).alias("n_vectors"),
                 F.coalesce(F.sum("__cdist"), F.lit(0.0)).alias("sum_dist"),
@@ -1173,11 +1159,8 @@ def append_ivf_batch(
             # the new centroids, and the stamp (not its batch id) is
             # what keeps its drift row counting as fresh (r12 review)
             .withColumn("__epoch", F.lit(_current_epoch(spark, path)))
-            .withColumn("__src_batch", F.lit(int(src_batch)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__src_batch")
-            .parquet(f"{root}/assign_stats")
+            .withColumn("__src_batch", F.lit(int(src_batch))),
+            f"{root}/assign_stats", src_batch, ("__src_batch",),
         )
     finally:
         release_pins_since(mark)
@@ -1507,16 +1490,11 @@ def ivf_index_report(spark, path: str) -> DataFrame:
 @locked_store_write("path", "spark")
 def compact_ivf_index(spark, path: str) -> None:
     """Collapse the per-batch postings into one ``__src_batch = -1``
-    partition set (file count drops to ≤1 per kp dir; query reads stop
-    opening O(batches) files). ``-1`` is RESERVED for this sentinel —
-    ``append_ivf_batch`` rejects negative batch ids so an append can
-    never land inside (and be destroyed with) the compacted partition. Run OFFLINE, past the replay horizon —
-    the same contract and staged-rename crash recovery as
-    ``compact_bm25_stats`` (retrieval.py:485): a batch appended during
-    compaction is destroyed by the swap; one replayed after re-adds its
-    rows (here: re-appends its postings — idempotent per batch id).
-    Per-batch drift rows in assign_stats are kept (compaction does not
-    rewrite history's drift signal).
+    partition set through ``maintenance._compact_to_sentinel`` (file
+    count drops to ≤1 per kp dir; query reads stop opening O(batches)
+    files). Run it offline, past the replay horizon. Per-batch drift
+    rows in assign_stats are kept (compaction does not rewrite
+    history's drift signal).
 
     Compaction also BACKFILLS derived columns on legacy rows (r11
     verdict #4): postings appended by a pre-sketch writer (``sig`` NULL
@@ -1525,37 +1503,29 @@ def compact_ivf_index(spark, path: str) -> None:
     their PQ code array — one projection over rows already being
     rewritten, so after compaction the degraded-legacy class is GONE
     and the BQ/ADC paths rank every row at full fidelity."""
-    from eel_spark.sources.hdfs import staged_swap
-
     store = f"{path.rstrip('/')}/postings"
     dim = read_ivf_centroids(spark, path).select(
         F.size("centroid").alias("d")
     ).first()["d"]
     books = read_ivf_pq_books(spark, path)
-
-    def rewrite(tmp: str) -> None:
-        # mergeSchema: a mixed pre-/post-sketch store must not lose the
-        # sig column to a schema-inference coin flip — merged, legacy
-        # rows read sig = NULL deterministically and the backfill below
-        # fills them from the stored vectors
-        raw = spark.read.option("mergeSchema", "true").parquet(store)
-        out = _backfill_postings(raw, dim, books)
-        keep = (
-            ["id", "vec", "sig"]
-            + (["codes"] if books is not None else [])
-            + ["cell_id", "__cell_kp"]
-        )
-        (
-            out.select(*keep)
-            .withColumn("__src_batch", F.lit(-1))
-            .repartition("__cell_kp")
-            .sortWithinPartitions("__cell_kp", "cell_id")
-            .write.mode("overwrite")
-            .partitionBy("__src_batch", "__cell_kp")
-            .parquet(tmp)
-        )
-
-    staged_swap(spark, store, rewrite)
+    # mergeSchema: a mixed pre-/post-sketch store must not lose the sig
+    # column to a schema-inference coin flip — merged, legacy rows read
+    # sig = NULL deterministically and the backfill fills them from the
+    # stored vectors
+    raw = spark.read.option("mergeSchema", "true").parquet(store)
+    keep = (
+        ["id", "vec", "sig"]
+        + (["codes"] if books is not None else [])
+        + ["cell_id", "__cell_kp"]
+    )
+    _compact_to_sentinel(
+        store,
+        _backfill_postings(raw, dim, books).select(*keep),
+        "__src_batch",
+        ("__src_batch", "__cell_kp"),
+        lambda df: df.repartition("__cell_kp")
+        .sortWithinPartitions("__cell_kp", "cell_id"),
+    )
 
 
 def _backfill_postings(
@@ -1608,8 +1578,9 @@ def reindex_ivf_index(
     dimension).
 
     What is rewritten, in one staged build of a replacement index root
-    swapped in atomically (the ``staged_swap`` crash contract shared
-    with the compactors — run OFFLINE, past the replay horizon):
+    swapped in atomically (``maintenance._staged_swap``, the crash
+    contract shared with the compactors — run OFFLINE, past the replay
+    horizon):
 
     - ``centroids``: the new table (the new frozen epoch).
     - ``postings``: every stored vector re-assigned to its nearest new
@@ -1638,7 +1609,7 @@ def reindex_ivf_index(
     Queries served from the reindexed store are bit-identical to
     one-shot ``ivf_topk`` with the new centroids over the union of
     appended waves (tested)."""
-    from eel_spark.sources.hdfs import HdfsOps, staged_swap
+    from eel_spark.sources.hdfs import HdfsOps
 
     ops = HdfsOps(spark)
     root = path.rstrip("/")
@@ -1734,4 +1705,4 @@ def reindex_ivf_index(
         log = row if log is None else log.unionByName(row)
         log.write.mode("overwrite").parquet(f"{tmp}/reindex_log")
 
-    staged_swap(spark, root, rewrite)
+    _staged_swap(spark, root, rewrite)

@@ -11,7 +11,7 @@ touched-partition list collects to the driver bounded by the batch's
 distinct partition values, not by data size.
 
 Without a partition column the whole table must merge (there is
-nothing to prune); the rewrite goes through ``sources/hdfs.staged_swap``
+nothing to prune); the rewrite goes through ``maintenance._staged_swap``
 — the one swap every store uses — so the readable table is never
 half-written and a crash at any point leaves it whole, or staged aside
 at ``<path>__old``, which the next upsert restores on entry. Readers
@@ -109,11 +109,11 @@ def _upsert_pinned(
     partition_col: str | None,
     prune: bool,
 ) -> dict:
-    from eel_spark.sources.hdfs import (
-        HdfsOps,
-        restore_interrupted_swap,
-        staged_swap,
+    from eel_spark.operators.maintenance import (
+        _restore_interrupted_swap,
+        _staged_swap,
     )
+    from eel_spark.sources.hdfs import HdfsOps
 
     ops = HdfsOps(spark)
     writer_cols = updates.columns
@@ -121,7 +121,7 @@ def _upsert_pinned(
     # no lease here, so heal a crashed full rewrite's swap ourselves —
     # before the exists check, which would otherwise read the staged
     # table as "no table" and replace it with the batch alone
-    restore_interrupted_swap(ops, path.rstrip("/"))
+    _restore_interrupted_swap(ops, path.rstrip("/"))
     if not ops.exists(path):
         w = updates.write.mode("overwrite")
         if partition_col:
@@ -189,7 +189,7 @@ def _upsert_pinned(
                 w = w.partitionBy(partition_col)
             w.parquet(tmp)
 
-        staged_swap(spark, path.rstrip("/"), write)
+        _staged_swap(spark, path.rstrip("/"), write)
         rewritten = -1  # full rewrite: every partition
 
     return {

@@ -119,23 +119,6 @@ class HdfsOps:
         FsPermission = self._jvm.org.apache.hadoop.fs.permission.FsPermission
         self._fs(path).setPermission(self._path(path), FsPermission(octal))
 
-    def reap_stale_kp_dirs(
-        self, batch_root: str, kp_name: str, live_kps: set[int]
-    ) -> None:
-        """Post-commit reap for the key-hash-partitioned increment
-        stores (BM25 term store, IVF postings): delete this batch's
-        ``<kp_name>=K`` sub-dirs whose K is not in ``live_kps``, so
-        replaying (or re-submitting corrected data under) a batch id
-        converges to exactly its rows — a two-level dynamic overwrite
-        alone would leave vacated kp dirs behind forever. The one
-        crash window — after the write's commit, before this reap —
-        degrades to transient stale rows (repaired by the batch's next
-        replay), never to data loss."""
-        for st in self.list_status(f"{batch_root}/{kp_name}=*"):
-            kp = int(st["name"].split("=", 1)[1])
-            if kp not in live_kps:
-                self.delete(st["path"], recursive=True)
-
     def list_status(self, pattern: str) -> list[dict]:
         """Glob-expand ``pattern`` and return one metadata dict per match
         (FilePattern.scala globbing + HdfsSource.scala's status surface)."""
@@ -207,58 +190,3 @@ class HdfsWatcher:
             if max_polls is None or polls < max_polls:
                 time.sleep(interval_sec)
 
-
-def restore_interrupted_swap(
-    ops: HdfsOps, store: str, aside: str | None = None
-) -> bool:
-    """If a prior :func:`staged_swap` of ``store`` was interrupted
-    between its two renames (store missing, its staged-aside copy
-    ``aside`` — default ``<store>__old`` — present), the staged-aside
-    copy is authoritative — move it back. Returns True when a restore
-    happened. Called by the outermost
-    ``maintenance.acquire_store_lease`` on every path a store swaps, by
-    ``upsert_parquet`` (which takes no lease) on its own path, and by
-    the SCD2 writers for the closed subtree they swap inside the root,
-    so whichever writer runs next after a crash finds the store whole."""
-    aside = aside or store + "__old"
-    if not ops.exists(store) and ops.exists(aside):
-        if not ops.rename(aside, store):
-            raise IOError(
-                f"could not restore staged store {aside} after an "
-                "interrupted swap"
-            )
-        return True
-    return False
-
-
-def staged_swap(spark: SparkSession, store: str, write_fn) -> None:
-    """Crash-safe whole-store replacement — the ONE swap every store
-    rewrite uses (the BM25, IVF, frontier and dedup-history compactors,
-    the IVF reindex, ``upsert_parquet``'s full rewrite): a static
-    overwrite of the store root would truncate before writing, so a
-    crash mid-write loses the store. Instead:
-
-    1. ``write_fn(tmp)`` builds the replacement at a fresh
-       ``<store>__compacting`` (same filesystem → rename-able; a
-       crashed attempt's half-built tree is deleted first); it may read
-       the store freely.
-    2. Swap: store → ``__old``, tmp → store (rolled back if the second
-       rename fails), then drop ``__old``.
-
-    At every crash point the store is either whole at ``store`` or
-    whole at ``<store>__old`` with ``store`` missing. The caller must
-    heal the second state before reading (:func:`restore_interrupted_swap`
-    — the store lease does it on acquisition). Run OFFLINE relative to
-    appenders — data landing in the store between write_fn's read and
-    the swap is destroyed by it (the lease enforces this)."""
-    tmp = store + "__compacting"
-    ops = HdfsOps(spark)
-    ops.delete(tmp, recursive=True)
-    write_fn(tmp)
-    ops.delete(store + "__old", recursive=True)
-    if not ops.rename(store, store + "__old"):
-        raise IOError(f"staged_swap: could not stage {store} aside")
-    if not ops.rename(tmp, store):
-        ops.rename(store + "__old", store)  # roll back
-        raise IOError(f"staged_swap: could not swap in {tmp}")
-    ops.delete(store + "__old", recursive=True)

@@ -42,16 +42,6 @@ EVENT_SCHEMA = T.StructType(
 #: fingerprints hash into
 _N_KP = 16
 
-# AnalysisException fragments that mean "this table simply has no data
-# yet" — a missing path or a table with zero parquet footers. Anything
-# else (schema drift, corruption, permissions) must propagate.
-_NO_HISTORY_TAGS = (
-    "PATH_NOT_FOUND",
-    "Path does not exist",
-    "UNABLE_TO_INFER_SCHEMA",
-)
-
-
 def file_stream(
     spark: SparkSession,
     path: str,
@@ -724,22 +714,12 @@ def _backfill_bands_from_survivors(
     sibling and is renamed into place only once fully written, so a
     killed backfill re-runs from scratch instead of leaving a partial
     side-table that would silently admit near-duplicates."""
-    from pyspark.errors import AnalysisException
-
+    from eel_spark.operators.maintenance import _read_store
     from eel_spark.sources.hdfs import HdfsOps
 
-    try:
-        old = spark.read.parquet(survivor_path)
-    except AnalysisException as e:
-        # same whitelist as the caller's bands-table read: ONLY a
-        # missing/empty survivor table means "genuinely fresh store" —
-        # a corrupt or schema-drifted one must fail loudly, or the
-        # caller would skip the history anti-join and permanently
-        # re-admit near-duplicates of every past survivor
-        if not any(tag in str(e) for tag in _NO_HISTORY_TAGS):
-            raise
-        return None  # no survivors: a genuinely fresh store
-    if not old.take(1):
+    # only a missing/empty survivor table means "genuinely fresh store"
+    old = _read_store(spark, survivor_path)
+    if old is None or not old.take(1):
         return None
     banded = (
         band_fn(old.drop("batch_id"), id_col)
@@ -799,37 +779,36 @@ def _incremental_dedup_sink(
     pass — silently skipping the history anti-join would re-admit
     near-duplicates of every pre-upgrade survivor.
     """
-    from pyspark.errors import AnalysisException
-
     from eel_spark.operators.dedup import survivors_from_pairs
+    from eel_spark.operators.maintenance import (
+        _read_store,
+        commit_batch,
+        store_write_lease,
+    )
 
     spark = stream_df.sparkSession
     bands_path = survivor_path + "__bands"
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from eel_spark.caching import pins_mark, release_pins_since
-        from eel_spark.operators.maintenance import (
-            acquire_store_lease,
-            release_store_lease,
-        )
-
-        _maybe_maintain(
-            spark, survivor_path, batch_id, maintain_every, maintain_kwargs
-        )
         if batch_df.isEmpty():
             return
         # the store's single-writer lease for the append (the same lock
         # the compactor takes — maintain-vs-append fails loudly). The
         # batch-id token makes a crashed attempt's stranded lease
-        # self-adoptable on checkpoint replay; NOTHING that can raise
-        # sits between the acquisition and the try whose finally
-        # releases (r14 review: fp_fn used to run in that gap — a
+        # self-adoptable on checkpoint replay; the with-statement
+        # releases it whatever the admission raises (r14 review: fp_fn
+        # once ran between a bare acquisition and its try — a
         # schema-drift AnalysisException stranded the lease with the
         # process alive)
-        __lease = acquire_store_lease(
+        with store_write_lease(
             spark, survivor_path, "incremental_dedup_append",
             token=f"batch={batch_id}",
-        )
+        ):
+            admit(batch_df, batch_id)
+
+    def admit(batch_df: DataFrame, batch_id: int) -> None:
+        from eel_spark.caching import pins_mark, release_pins_since
+
         # connected-components tracks its label table as a pin; scope the
         # release to THIS batch's pins so a long-running stream holds O(1)
         # executor storage without evicting concurrent queries' caches
@@ -868,22 +847,13 @@ def _incremental_dedup_sink(
             sb = band_fn(surv, id_col).withColumn(
                 "kp", F.pmod(F.col("key"), F.lit(_N_KP)).cast("int")
             )
-            try:
-                hist = spark.read.parquet(bands_path)
-            except AnalysisException as e:
-                # ONLY "no history yet" may fall through: a missing path
-                # (first batch ever) or an empty table (every prior batch
-                # wrote zero survivors → no parquet footers to infer a
-                # schema from). Anything else — schema drift, corrupt
-                # store, permissions — must fail the batch loudly:
-                # swallowing it would skip the history anti-join and
-                # permanently admit near-duplicates of past survivors.
-                if not any(tag in str(e) for tag in _NO_HISTORY_TAGS):
-                    raise
-                # "no bands table" is only "no history" when there are
-                # no survivors either — a populated survivor table with
-                # no side-table is a pre-banded-layout store that must
-                # be backfilled before the anti-join can be trusted
+            # "no bands table" (missing, or every prior batch wrote zero
+            # survivors) is only "no history" when there are no
+            # survivors either — a populated survivor table with no
+            # side-table is a pre-banded-layout store that must be
+            # backfilled before the anti-join can be trusted
+            hist = _read_store(spark, bands_path)
+            if hist is None:
                 hist = _backfill_bands_from_survivors(
                     spark, survivor_path, bands_path, band_fn, id_col
                 )
@@ -914,36 +884,27 @@ def _incremental_dedup_sink(
                     .distinct()
                 )
                 surv = surv.join(hits, id_col, "left_anti")
-            (
-                surv.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(survivor_path)
+            commit_batch(
+                surv.withColumn("batch_id", F.lit(batch_id)),
+                survivor_path, batch_id, ("batch_id",),
             )
-            (
+            commit_batch(
                 band_fn(surv, id_col)
                 .withColumn("kp", F.pmod(F.col("key"), F.lit(_N_KP)).cast("int"))
                 .withColumn("batch_id", F.lit(batch_id))
                 # one task per (band, kp) → one file per partition dir
-                .repartition("band", "kp")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id", "band", "kp")
-                .parquet(bands_path)
+                .repartition("band", "kp"),
+                bands_path, batch_id, ("batch_id", "band", "kp"),
             )
         finally:
             for df in (fp, surv_pinned):
                 if df is not None:
                     df.unpersist()
             release_pins_since(__mark)
-            release_store_lease(spark, __lease)
 
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _store_sink(
+        stream_df, survivor_path, checkpoint, write_batch,
+        maintain_every, maintain_kwargs,
     )
 
 
@@ -1156,25 +1117,16 @@ def frontier_store_sink(
     compactor) exactly like the other five store-backed sinks.
     ``ts_col`` (optional) records MIN-per-key as ``first_seen``.
     """
-    spark = urls.sparkSession
+    from eel_spark.operators.crawl import frontier_admit_batch
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from eel_spark.operators.crawl import frontier_admit_batch
+    def admit(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            frontier_admit_batch(
+                batch_df, store_path, batch_id, url_col=url_col, ts_col=ts_col
+            )
 
-        _maybe_maintain(
-            spark, store_path, batch_id, maintain_every, maintain_kwargs
-        )
-        if batch_df.isEmpty():
-            return
-        frontier_admit_batch(
-            batch_df, store_path, batch_id, url_col=url_col, ts_col=ts_col
-        )
-
-    return (
-        urls.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _store_sink(
+        urls, store_path, checkpoint, admit, maintain_every, maintain_kwargs
     )
 
 
@@ -1272,45 +1224,31 @@ def compact_dedup_history(spark: SparkSession, survivor_path: str) -> None:
     side-table) with their content unchanged, preserving the (band, kp)
     layout so per-batch pruning keeps working.
 
-    Run it OFFLINE (no active query on this store) once the checkpoint
-    replay horizon has passed — same contract as
-    ``rollups.compact_rollup``: a replay of a pre-compaction batch finds
-    its own rows already in the ``-1`` generation, so the history match
-    suppresses them and the store stays correct, but its exactly-once
-    eviction is spent.
-
-    Both tables are rewritten through ``sources/hdfs.staged_swap``, one
-    after the other: a crash at any point leaves each table whole (or
-    staged aside, which the next writer's lease restores), and a crash
+    Both tables go through ``maintenance._compact_to_sentinel``, one
+    after the other (run it offline, past the replay horizon: a replay
+    of a pre-compaction batch finds its own rows in the ``-1``
+    generation, so the history match suppresses them and the store
+    stays correct, but its exactly-once eviction is spent). A crash
     between the two swaps leaves a compacted survivor table beside a
     per-batch bands table — the same rows, so appends stay correct and
     the next compaction finishes the job.
     """
-    from eel_spark.sources.hdfs import staged_swap
+    from eel_spark.operators.maintenance import _compact_to_sentinel
 
     bands_path = survivor_path + "__bands"
-
-    def survivors(tmp: str) -> None:
-        (
-            spark.read.parquet(survivor_path).drop("batch_id")
-            .withColumn("batch_id", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(tmp)
-        )
-
-    def bands(tmp: str) -> None:
-        (
-            spark.read.parquet(bands_path).drop("batch_id")
-            .withColumn("batch_id", F.lit(-1))
-            .repartition("band", "kp")
-            .write.mode("overwrite")
-            .partitionBy("batch_id", "band", "kp")
-            .parquet(tmp)
-        )
-
-    staged_swap(spark, survivor_path, survivors)
-    staged_swap(spark, bands_path, bands)
+    _compact_to_sentinel(
+        survivor_path,
+        spark.read.parquet(survivor_path).drop("batch_id"),
+        "batch_id",
+        ("batch_id",),
+    )
+    _compact_to_sentinel(
+        bands_path,
+        spark.read.parquet(bands_path).drop("batch_id"),
+        "batch_id",
+        ("batch_id", "band", "kp"),
+        lambda df: df.repartition("band", "kp"),
+    )
 
 
 def _maybe_maintain(
@@ -1322,19 +1260,20 @@ def _maybe_maintain(
     moment a sink can PROVE the compactors' replay condition:
     Structured Streaming commits batch N-1 before planning batch N, so
     every batch in the store is past the replay horizon UNLESS a torn
-    prior attempt of THIS batch already wrote partitions (max live
-    batch id == N) — compacting those would fold rows the replay is
-    about to re-append (double count), so that case is detected and
-    skipped (the next cadence point retries). Runs BEFORE the batch's
-    own append on the sink's own thread, so it is never concurrent
-    with its own appender; the store lease serializes it against
-    everything else (loser raises)."""
+    prior attempt of THIS batch left state behind (the family's torn
+    probe: a live batch id >= N, or an SCD2 inflight marker) —
+    compacting then would fold rows the replay is about to re-append
+    or break the merge's repair, so that case is skipped (the next
+    cadence point retries). Runs BEFORE the batch's own append on the
+    sink's own thread, so it is never concurrent with its own
+    appender; the store lease serializes it against everything else
+    (loser raises)."""
     if not maintain_every or batch_id <= 0 or batch_id % int(maintain_every):
         return
     from eel_spark.operators.maintenance import (
+        _torn_attempt,
         detect_store_type,
         maintain,
-        max_live_batch_id,
         store_write_lease,
     )
 
@@ -1351,9 +1290,8 @@ def _maybe_maintain(
             st = detect_store_type(spark, path)
         except ValueError:
             return  # store not materialized yet (prior batches wrote nothing)
-        live = max_live_batch_id(spark, path, st)
-        if live is not None and live >= batch_id:
-            return  # torn prior attempt of this batch — not provably safe
+        if _torn_attempt(spark, path, st, batch_id):
+            return  # not provably safe until the replay repairs it
         kw = dict(maintain_kwargs or {})
         # "compact every N batches" intent: the store holds ~N live
         # increments at each cadence point, so the threshold must sit
@@ -1361,6 +1299,25 @@ def _maybe_maintain(
         # scd2's policy reads max_files_per_leaf instead)
         kw.setdefault("max_batches", max(int(maintain_every) - 1, 1))
         maintain(spark, path, store_type=st, **kw)
+
+
+def _store_sink(
+    df: DataFrame, path: str, checkpoint: str, append, maintain_every,
+    maintain_kwargs,
+):
+    """The store sinks' one shape: each micro-batch runs the maintenance
+    cadence on the store at ``path`` (:func:`_maybe_maintain`), then
+    ``append(batch_df, batch_id)``, on a checkpointed availableNow
+    query."""
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        _maybe_maintain(
+            batch_df.sparkSession, path, batch_id, maintain_every,
+            maintain_kwargs,
+        )
+        append(batch_df, batch_id)
+
+    return foreach_batch_sink(df, fold, checkpoint)
 
 
 def streaming_scd2_sink(
@@ -1403,13 +1360,10 @@ def streaming_scd2_sink(
     from eel_spark.operators.maintenance import store_write_lease
     from eel_spark.operators.scd2 import scd2_merge
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _maybe_maintain(
-            spark, path, batch_id, maintain_every, maintain_kwargs
-        )
+    def merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        spark = batch_df.sparkSession
         # hold the lease under the batch-id token (the merge's own
         # fingerprint-token acquisition is then re-entrant): a replay
         # after a hard kill mid-merge presents batch=N first — at the
@@ -1422,11 +1376,8 @@ def streaming_scd2_sink(
                 order_cols, n_buckets=n_buckets,
             )
 
-    return (
-        df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _store_sink(
+        df, path, checkpoint, merge, maintain_every, maintain_kwargs
     )
 
 
@@ -1456,21 +1407,13 @@ def streaming_rollup_sink(
     """
     from eel_spark.operators.rollups import append_rollup_batch
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _maybe_maintain(
-            batch_df.sparkSession, path, batch_id, maintain_every,
-            maintain_kwargs,
-        )
-        append_rollup_batch(
+    return _store_sink(
+        df, path, checkpoint,
+        lambda batch_df, batch_id: append_rollup_batch(
             batch_df.sparkSession, path, batch_df, ts_col, aggs,
             list(granularities), list(extra_keys), src_batch=batch_id,
-        )
-
-    return (
-        df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        maintain_every, maintain_kwargs,
     )
 
 
@@ -1622,18 +1565,12 @@ def streaming_bm25_stats_sink(
     """
     from eel_spark.operators.retrieval import append_bm25_stats_batch
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _maybe_maintain(
-            batch_df.sparkSession, path, batch_id, maintain_every,
-            maintain_kwargs,
-        )
-        append_bm25_stats_batch(path, batch_df, text_col, src_batch=batch_id)
-
-    return (
-        df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _store_sink(
+        df, path, checkpoint,
+        lambda batch_df, batch_id: append_bm25_stats_batch(
+            path, batch_df, text_col, src_batch=batch_id
+        ),
+        maintain_every, maintain_kwargs,
     )
 
 
@@ -1660,20 +1597,12 @@ def streaming_ivf_sink(
     at the provably-safe point (see :func:`_maybe_maintain`)."""
     from eel_spark.operators.similarity import append_ivf_batch
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _maybe_maintain(
-            batch_df.sparkSession, path, batch_id, maintain_every,
-            maintain_kwargs,
-        )
-        append_ivf_batch(
+    return _store_sink(
+        df, path, checkpoint,
+        lambda batch_df, batch_id: append_ivf_batch(
             path, batch_df, id_col=id_col, vec_col=vec_col, src_batch=batch_id
-        )
-
-    return (
-        df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        maintain_every, maintain_kwargs,
     )
 
 

@@ -490,6 +490,52 @@ def test_maintain_every_torn_attempt_guard(spark, tmp_path):
     _maybe_maintain(spark, str(tmp_path / "nothing_here"), 2, 2)
 
 
+def test_maintain_every_skips_scd2_torn_merge(spark, tmp_path, monkeypatch):
+    """SCD2's torn attempt is an inflight marker: the cadence must skip
+    it (the history compactor refuses it, and would on every restart),
+    the replayed merge repairs the store, and the next cadence point
+    compacts."""
+    from eel_spark.operators.scd2 import scd2_merge
+    from eel_spark.sources.hdfs import HdfsOps
+    from eel_spark.streaming.streams import _maybe_maintain
+
+    schema = "k long, seg string, d date, seq long"
+    path = str(tmp_path / "dim")
+
+    def merge(rows):
+        scd2_merge(spark, path, spark.createDataFrame(rows, schema),
+                   "k", ["seg"], "d", ["seq"], n_buckets=2)
+
+    for i, seg in enumerate("ABC"):
+        merge([(1, seg, date(2024, 1 + i, 1), 2 * i),
+               (2, seg, date(2024, 1 + i, 2), 2 * i + 1)])
+    torn = [(1, "D", date(2024, 4, 1), 7)]
+    real_mkdirs = HdfsOps.mkdirs
+
+    def crash_before_applied(self, p):
+        if "/_scd_applied/" in p:
+            raise IOError("killed before the applied marker")
+        return real_mkdirs(self, p)
+
+    monkeypatch.setattr(HdfsOps, "mkdirs", crash_before_applied)
+    with pytest.raises(IOError, match="applied marker"):
+        merge(torn)
+    monkeypatch.setattr(HdfsOps, "mkdirs", real_mkdirs)
+    kw = {"max_files_per_leaf": 0}
+    before = _report_row(spark, path)
+    _maybe_maintain(spark, path, 4, 2, kw)  # skipped, not raised
+    assert _report_row(spark, path) == before
+    merge(torn)  # the replay repairs through the inflight marker
+    _maybe_maintain(spark, path, 6, 2, kw)
+    assert _report_row(spark, path)["max_files_per_leaf"] == 1
+    got = sorted(
+        (r["k"], r["seg"], int(r["scd_current"]))
+        for r in spark.read.parquet(path).collect()
+    )
+    assert got == [(1, "A", 0), (1, "B", 0), (1, "C", 0), (1, "D", 1),
+                   (2, "A", 0), (2, "B", 0), (2, "C", 1)]
+
+
 def test_maintain_every_bm25_sink(spark, tmp_path):
     """A 6-wave stream with maintain_every=2 folds to the same stats as
     the unmaintained sink, with the store compacted under the cadence

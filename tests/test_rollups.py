@@ -414,6 +414,63 @@ def test_batch_partial_rollup_idempotent(spark, events, tmp_path):
     assert set(r["__src_batch"] for r in raw.select("__src_batch").distinct().collect()) == {-1}
 
 
+def test_rollup_append_rejects_reserved_negative_batch(spark, events, tmp_path):
+    """src_batch = -1 is compact_rollup's sentinel: an append under it
+    would evict the compacted rows of every partition it touches and
+    put back only its own, so any negative id must fail loudly and
+    leave the store as it was."""
+    from eel_spark.operators.rollups import (
+        append_rollup_batch,
+        compact_rollup,
+        read_rollup,
+    )
+
+    aggs = {"n": F.count(F.lit(1))}
+    merges = {"n": F.sum("n")}
+    path = str(tmp_path / "neg")
+    append_rollup_batch(spark, path, events, "ts", aggs, ["day"], src_batch=0)
+    compact_rollup(spark, path, merges)
+
+    def snapshot():
+        return sorted(
+            (str(r["bucket_start"]), r["n"])
+            for r in read_rollup(spark, path, merges).collect()
+        )
+
+    before = snapshot()
+    for bad in (-1, -7):
+        with pytest.raises(ValueError, match="non-negative"):
+            append_rollup_batch(
+                spark, path, events.limit(5), "ts", aggs, ["day"],
+                src_batch=bad,
+            )
+    assert snapshot() == before
+
+
+def test_rollup_store_survives_empty_first_batch(spark, events, tmp_path):
+    """A 0-row first batch leaves a store dir with no parquet files;
+    the next append must read it as "no history", not fail schema
+    inference on every later batch."""
+    from eel_spark.operators.rollups import append_rollup_batch, read_rollup
+
+    aggs = {"n": F.count(F.lit(1)), "total": F.sum("value")}
+    merges = {"n": F.sum("n"), "total": F.sum("total")}
+    path = str(tmp_path / "empty_first")
+    append_rollup_batch(
+        spark, path, events.limit(0), "ts", aggs, ["day"], src_batch=0
+    )
+    append_rollup_batch(spark, path, events, "ts", aggs, ["day"], src_batch=1)
+    got = sorted(
+        (str(r["bucket_start"]), r["n"], round(r["total"], 6))
+        for r in read_rollup(spark, path, merges).collect()
+    )
+    want = sorted(
+        (str(r["bucket_start"]), r["n"], round(r["total"], 6))
+        for r in time_rollup(events, "ts", aggs, ["day"]).collect()
+    )
+    assert got == want
+
+
 def test_fill_time_gaps_modes(spark):
     from datetime import datetime
 

@@ -1285,7 +1285,7 @@ def test_cross_operator_interrupted_swap_recovery(spark, ivf_index):
     """A compaction crash between its two renames (postings staged at
     postings__old) is healed by the NEXT store operation even when that
     operation is a reindex, and vice versa — the shared
-    restore_interrupted_swap contract (r12 review: reindex previously
+    interrupted-swap restore contract (r12 review: reindex previously
     only healed its own root-level stage)."""
     from eel_spark.operators.similarity import (
         compact_ivf_index,

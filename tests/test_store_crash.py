@@ -1,6 +1,7 @@
 """Crash-injection sweep over the store commit protocol: every store
 writer takes the one lease (``maintenance.acquire_store_lease``) and
-every whole-store rewrite goes through ``hdfs.staged_swap``, so a crash
+every whole-store rewrite goes through the store module's staged swap,
+so a crash
 at ANY filesystem step the store code takes through ``HdfsOps`` must
 leave a store that the next writer heals and a rerun brings to exactly
 the clean result.
@@ -31,7 +32,9 @@ import pytest
 
 from eel_spark.operators.maintenance import (
     MAINT_LEASE_SUFFIX,
+    STORE_TYPES,
     break_store_lease,
+    commit_batch,
     store_write_lease,
 )
 from eel_spark.sources.hdfs import HdfsOps
@@ -296,16 +299,10 @@ def _dedup_family(spark) -> Family:
              for i in ids for b in range(2)],
             "doc_id long, fp long, key long, band int, kp int, batch_id int",
         )
-        for df, path, parts in (
-            (survivors, root, ["batch_id"]),
-            (bands, root + "__bands", ["batch_id", "band", "kp"]),
-        ):
-            (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*parts)
-                .parquet(path)
-            )
+        commit_batch(survivors, root, batch_id, ["batch_id"])
+        commit_batch(
+            bands, root + "__bands", batch_id, ["batch_id", "band", "kp"]
+        )
 
     def build(spark, root):
         write_batch(root, 0, [1, 2, 3])
@@ -313,7 +310,7 @@ def _dedup_family(spark) -> Family:
 
     def append(spark, root):
         # the sink's per-batch commit: lease with the batch token, then
-        # a dynamic overwrite of the batch's own partitions in both tables
+        # the batch's own partitions in both tables
         with store_write_lease(spark, root, "dedup_append", token="batch=7"):
             write_batch(root, 7, [8, 9])
 
@@ -356,37 +353,71 @@ def _scd2_family(spark) -> Family:
     )
 
 
+def _rollup_family(spark) -> Family:
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    from eel_spark.operators.rollups import (
+        append_rollup_batch,
+        compact_rollup,
+        read_rollup,
+    )
+
+    aggs = {"n": F.count(F.lit(1)), "total": F.sum("value")}
+    merges = {"n": F.sum("n"), "total": F.sum("total")}
+
+    def append(root, w):
+        events = spark.createDataFrame(
+            [(datetime(2024, 1, 1 + (w + j) % 3, j), float(w * 10 + j))
+             for j in range(4)],
+            "ts timestamp, value double",
+        )
+        append_rollup_batch(spark, root, events, "ts", aggs, ["day"],
+                            src_batch=w)
+
+    def build(spark, root):
+        for w in range(3):
+            append(root, w)
+
+    return Family(
+        build=build,
+        compact=lambda spark, root: compact_rollup(spark, root, merges),
+        append=lambda spark, root: append(root, 7),
+        rows=lambda spark, root: _sorted_rows(
+            read_rollup(spark, root, merges)
+        ),
+    )
+
+
+#: one sweep family per store family: a new family cannot skip the sweep
+FAMILIES = {
+    "bm25_stats": _bm25_family,
+    "ivf_index": _ivf_family,
+    "frontier": _frontier_family,
+    "dedup_history": _dedup_family,
+    "scd2": _scd2_family,
+    "rollup": _rollup_family,
+}
+
+
 # -- sweeps --------------------------------------------------------------------
 
 
-def test_bm25_compaction_crash_sweep(spark, tmp_path, fault):
-    assert _compaction_sweep(spark, tmp_path, fault, _bm25_family(spark))
+def test_sweep_covers_every_store_family():
+    assert set(FAMILIES) == set(STORE_TYPES)
 
 
-def test_ivf_compaction_crash_sweep(spark, tmp_path, fault):
-    assert _compaction_sweep(spark, tmp_path, fault, _ivf_family(spark))
+@pytest.mark.parametrize("family", list(FAMILIES))
+def test_compaction_crash_sweep(spark, tmp_path, fault, family):
+    assert _compaction_sweep(spark, tmp_path, fault, FAMILIES[family](spark))
 
 
-def test_frontier_compaction_crash_sweep(spark, tmp_path, fault):
-    assert _compaction_sweep(spark, tmp_path, fault, _frontier_family(spark))
-
-
-def test_dedup_history_compaction_crash_sweep(spark, tmp_path, fault):
-    assert _compaction_sweep(spark, tmp_path, fault, _dedup_family(spark))
-
-
-def test_scd2_compaction_crash_sweep(spark, tmp_path, fault):
-    assert _compaction_sweep(spark, tmp_path, fault, _scd2_family(spark))
-
-
-@pytest.mark.parametrize(
-    "family",
-    [_bm25_family, _ivf_family, _frontier_family, _dedup_family,
-     _scd2_family],
-    ids=["bm25", "ivf", "frontier", "dedup_history", "scd2"],
-)
+@pytest.mark.parametrize("family", list(FAMILIES))
 def test_append_hard_kill_adopts_lease(spark, tmp_path, fault, family):
-    assert _append_hard_kill_sweep(spark, tmp_path, fault, family(spark))
+    assert _append_hard_kill_sweep(
+        spark, tmp_path, fault, FAMILIES[family](spark)
+    )
 
 
 def test_upsert_full_rewrite_crash_sweep(spark, tmp_path, fault):
