@@ -486,7 +486,8 @@ def detect_store_type(spark: SparkSession, path: str) -> str:
     root = path.rstrip("/")
     for name, fam in _FAMILIES.items():
         marker = fam.marker.format(root=root)
-        if not (ops.list_status(marker) if "*" in marker else ops.exists(marker)):
+        glob = "*" in fam.marker
+        if not (ops.list_status(marker) if glob else ops.exists(marker)):
             continue
         # merge_time_rollup-maintained tables share the rollup layout
         # but carry no batch column — already-merged final tables, not
