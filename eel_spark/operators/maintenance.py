@@ -34,10 +34,15 @@ aggregates and its sort/repartition; the protocol around them is here:
 
 The report and ``maintain`` close the "compact every O(100) batches"
 loop by measuring depth: one report shape across the six families and a
-threshold policy that runs the family's own compactor. The report is
-driver-side file listing, O(store files), never touching row data
-(except the rollup store, whose batch ids are data: one slim
-aggregate). Run it from the ingest scheduler, not inside queries.
+threshold policy that runs the family's own compactor. ``maintain``
+measures with the report as a Python dict (``_report``): driver-side
+layout listing, O(store files), that launches no Spark job and never
+touches row data, except on the rollup store, whose batch ids are data
+(one slim aggregate). So a ``maintain`` that does not compact, the
+common case of the streaming cadence, costs a few listings and no job.
+:func:`store_maintenance_report` is that dict as a one-row DataFrame,
+for dashboards that union reports across stores. Run either from the
+ingest scheduler, not inside queries.
 """
 
 from __future__ import annotations
@@ -282,16 +287,19 @@ def _staged_swap(spark: SparkSession, store: str, write_fn) -> None:
 
 
 def _overwrite_partitions(
-    df: DataFrame, path: str, parts: Sequence[str]
+    df: DataFrame, path: str, parts: Sequence[str], format: str = "parquet"
 ) -> None:
     """Dynamic partition overwrite via the PER-WRITER option — never the
     session conf, which would race with concurrent writers on the same
-    SparkSession (parallel foreachBatch, a second operator)."""
+    SparkSession (parallel foreachBatch, a second operator). The one
+    dynamic-overwrite writer: store commits, rollup merges, SCD2 bucket
+    rewrites, pruned upserts and the ``batch_id`` sinks."""
     (
-        df.write.mode("overwrite")
+        df.write.format(format)
+        .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*parts)
-        .parquet(path)
+        .save(path)
     )
 
 
@@ -461,6 +469,7 @@ _REPORT_SCHEMA = (
     "has_compacted_generation boolean, n_files long, n_bytes long, "
     "n_dirs long, max_files_per_leaf long, last_compaction_ms long"
 )
+_REPORT_COLS = tuple(f.split()[0] for f in _REPORT_SCHEMA.split(","))
 
 
 def _family(store_type: str) -> _Family:
@@ -584,6 +593,38 @@ def _torn_attempt(
     return live is not None and live >= batch_id
 
 
+def _report(
+    spark: SparkSession, path: str, store_type: str | None = None
+) -> dict:
+    """The report row as a dict keyed by ``_REPORT_COLS`` — what
+    :func:`maintain` measures with. Driver-side listing only, so it
+    launches no Spark job, except on the rollup store (one aggregate:
+    its batch ids are data)."""
+    from eel_spark.sources.hdfs import HdfsOps
+
+    ops = HdfsOps(spark)
+    root = path.rstrip("/")
+    st = store_type or detect_store_type(spark, path)
+    fam = _family(st)
+    n_batches, _, compacted_ms = _live_batches(spark, ops, fam, root)
+    walks = [_walk(ops, t.format(root=root)) for t in fam.trees]
+    n_files, n_bytes, n_dirs = (sum(w[i] for w in walks) for i in range(3))
+    max_leaf = max(w[3] for w in walks)
+    if fam.leaf_tree:
+        max_leaf = _walk(ops, fam.leaf_tree.format(root=root))[3]
+    return dict(zip(_REPORT_COLS, (
+        root,
+        st,
+        n_batches,
+        None if n_batches is None else compacted_ms is not None,
+        n_files,
+        n_bytes,
+        n_dirs,
+        max_leaf,
+        compacted_ms if (compacted_ms or 0) > 0 else None,
+    )))
+
+
 def store_maintenance_report(
     spark: SparkSession, path: str, store_type: str | None = None
 ) -> DataFrame:
@@ -600,34 +641,8 @@ def store_maintenance_report(
     the merge's to manage). ``last_compaction_ms`` is the compacted
     generation's directory mtime where the layout records one (BM25 /
     IVF / dedup / frontier sentinels), NULL otherwise."""
-    from eel_spark.sources.hdfs import HdfsOps
-
-    ops = HdfsOps(spark)
-    root = path.rstrip("/")
-    st = store_type or detect_store_type(spark, path)
-    fam = _family(st)
-    n_batches, _, compacted_ms = _live_batches(spark, ops, fam, root)
-    walks = [_walk(ops, t.format(root=root)) for t in fam.trees]
-    n_files, n_bytes, n_dirs = (sum(w[i] for w in walks) for i in range(3))
-    max_leaf = max(w[3] for w in walks)
-    if fam.leaf_tree:
-        max_leaf = _walk(ops, fam.leaf_tree.format(root=root))[3]
-    return spark.createDataFrame(
-        [
-            (
-                root,
-                st,
-                n_batches,
-                None if n_batches is None else compacted_ms is not None,
-                n_files,
-                n_bytes,
-                n_dirs,
-                max_leaf,
-                compacted_ms if (compacted_ms or 0) > 0 else None,
-            )
-        ],
-        _REPORT_SCHEMA,
-    )
+    row = _report(spark, path, store_type)
+    return spark.createDataFrame([tuple(row.values())], _REPORT_SCHEMA)
 
 
 def maintain(
@@ -663,7 +678,7 @@ def maintain(
     ``action`` is ``"compacted"`` or ``"none"``."""
     st = store_type or detect_store_type(spark, path)
     fam = _family(st)
-    before = store_maintenance_report(spark, path, store_type=st).first().asDict()
+    before = _report(spark, path, st)
     needs = (
         before["max_files_per_leaf"] > int(max_files_per_leaf)
         if before["n_batches"] is None
@@ -683,6 +698,6 @@ def maintain(
         kw = {"merges": merges, "extra_keys": list(extra_keys)}
     module, name = fam.compactor.split(":")
     getattr(importlib.import_module(module), name)(spark, path, **kw)
-    after = store_maintenance_report(spark, path, store_type=st).first().asDict()
+    after = _report(spark, path, st)
     return {"store_type": st, "action": "compacted", "before": before,
             "after": after}

@@ -89,6 +89,7 @@ from pyspark.sql import functions as F
 
 from eel_spark.functions.hashes import row_digest
 from eel_spark.operators.maintenance import (
+    _overwrite_partitions,
     _restore_interrupted_swap,
     store_write_lease,
 )
@@ -609,18 +610,11 @@ def _write_generation(
     out = df.withColumn(
         CURRENT_COL, F.col("is_current").cast("int")
     ).withColumn(BUCKET_COL, _bucket(ks, n_buckets))
+    if dynamic and not append:
+        _overwrite_partitions(out, path, (CURRENT_COL, BUCKET_COL))
+        return
     w = out.write.partitionBy(CURRENT_COL, BUCKET_COL)
-    if append:
-        w.mode("append").parquet(path)
-    elif dynamic:
-        # per-writer option, never the session conf (shared-session race)
-        (
-            w.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(path)
-        )
-    else:
-        w.mode("errorifexists").parquet(path)
+    w.mode("append" if append else "errorifexists").parquet(path)
 
 
 def read_scd2_current(spark: SparkSession, path: str) -> DataFrame:

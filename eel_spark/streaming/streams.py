@@ -23,7 +23,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from eel_spark.operators.maintenance import locked_store_write
+from eel_spark.operators.maintenance import (
+    _overwrite_partitions,
+    locked_store_write,
+)
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -992,13 +995,9 @@ def idempotent_batch_sink(
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.format(format)
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .save(path)
+        _overwrite_partitions(
+            batch_df.withColumn("batch_id", F.lit(batch_id)), path,
+            ["batch_id"], format,
         )
 
     return (
@@ -1196,13 +1195,9 @@ def validated_batch_sink(
                 f"batch {batch_id} failed validation: {failed}"
             )
         dest = path if ok else quarantine_path
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.format(format)
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .save(dest)
+        _overwrite_partitions(
+            batch_df.withColumn("batch_id", F.lit(batch_id)), dest,
+            ["batch_id"], format,
         )
 
     return (
@@ -1639,16 +1634,13 @@ def streaming_scd2_enrich_sink(
     from eel_spark.operators.scd2 import scd2_enrich
 
     def enrich_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            scd2_enrich(
-                batch_df, batch_df.sparkSession, dim_path, keys, ts_col,
-                attrs=attrs, how=how, n_buckets=n_buckets, bin_days=bin_days,
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
+        enriched = scd2_enrich(
+            batch_df, batch_df.sparkSession, dim_path, keys, ts_col,
+            attrs=attrs, how=how, n_buckets=n_buckets, bin_days=bin_days,
+        )
+        _overwrite_partitions(
+            enriched.withColumn("batch_id", F.lit(batch_id)), out_path,
+            ["batch_id"],
         )
 
     return (

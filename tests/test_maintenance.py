@@ -34,6 +34,19 @@ def _report_row(spark, path, **kw):
     return df.first().asDict()
 
 
+def _maintain_jobs(spark, path, **kw):
+    """``maintain`` under its own job group: (result, the group's job
+    ids)."""
+    sc = spark.sparkContext
+    group = f"maintain:{path}"
+    sc.setJobGroup(group, group)
+    try:
+        res = maintain(spark, path, **kw)
+    finally:
+        sc._jsc.clearJobGroup()
+    return res, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _docs(spark, lo, hi):
     return spark.createDataFrame(
         [(i, f"token{i} " * 12) for i in range(lo, hi)],
@@ -54,13 +67,16 @@ def test_bm25_store_report_and_maintain(spark, tmp_path):
     assert row["n_batches"] == 3
     assert row["has_compacted_generation"] is False
     assert row["n_files"] > 0 and row["n_bytes"] > 0
-    # under threshold: no action
-    res = maintain(spark, path, max_batches=8)
-    assert res["action"] == "none"
-    assert _report_row(spark, path)["n_batches"] == 3
+    # under threshold: no action, measured by listing alone (no job)
+    res, jobs = _maintain_jobs(spark, path, max_batches=8)
+    assert res["action"] == "none" and jobs == []
+    assert res["before"] == row  # maintain measures the public report
+    before = _report_row(spark, path)
+    assert before["n_batches"] == 3
     # over threshold: the store's own compactor runs
     res = maintain(spark, path, max_batches=2)
     assert res["action"] == "compacted"
+    assert res["before"] == before
     after = res["after"]
     assert after["n_batches"] == 0
     assert after["has_compacted_generation"] is True
@@ -94,8 +110,12 @@ def test_ivf_store_report_and_maintain(spark, tmp_path):
     assert detect_store_type(spark, path) == "ivf_index"
     row = _report_row(spark, path)
     assert row["store_type"] == "ivf_index" and row["n_batches"] == 3
+    res, jobs = _maintain_jobs(spark, path, max_batches=8)
+    assert res["action"] == "none" and jobs == []
+    assert res["before"] == row
     res = maintain(spark, path, max_batches=2)
     assert res["action"] == "compacted"
+    assert res["before"] == row
     assert res["after"]["n_batches"] == 0
     assert res["after"]["has_compacted_generation"] is True
     # the index still serves after maintenance
@@ -135,6 +155,7 @@ def test_rollup_store_report_and_maintain(spark, tmp_path):
         maintain(spark, path, max_batches=2)
     res = maintain(spark, path, max_batches=2, merges=merges)
     assert res["action"] == "compacted"
+    assert res["before"] == row
     assert res["after"]["n_batches"] == 0
     assert res["after"]["has_compacted_generation"] is True
     after = sorted(
@@ -170,6 +191,7 @@ def test_scd2_store_report_and_maintain(spark, tmp_path):
     assert row["max_files_per_leaf"] >= 2
     res = maintain(spark, path, max_files_per_leaf=1)
     assert res["action"] == "compacted"
+    assert res["before"] == row
     assert res["after"]["max_files_per_leaf"] == 1
     assert maintain(spark, path, max_files_per_leaf=1)["action"] == "none"
 
@@ -205,6 +227,7 @@ def test_dedup_history_report_and_maintain(spark, tmp_path):
     assert row["n_batches"] == 4
     res = maintain(spark, surv_path, max_batches=2)
     assert res["action"] == "compacted"
+    assert res["before"] == row
     assert res["after"]["n_batches"] == 0
     assert res["after"]["has_compacted_generation"] is True
     survivors = spark.read.parquet(surv_path)

@@ -445,14 +445,23 @@ def test_hdfs_ops_source_watcher(spark, tmp_path):
     assert set(rows) == {"a.txt", "b.txt"}
     assert rows["b.txt"]["length"] == 2
     assert rows["a.txt"]["permission"]  # e.g. rw-r--r--
+    for r in rows.values():
+        assert r["owner"] and r["group"] and r["permission"]
 
+    status_keys = [
+        "path", "name", "length", "is_dir", "modification_time", "owner",
+        "group", "permission", "replication", "block_size",
+    ]
     seen = []
-    w = HdfsWatcher(spark, str(d / "*.txt"), callback=lambda s: seen.append(s["name"]))
+    w = HdfsWatcher(spark, str(d / "*.txt"), callback=seen.append)
     assert {s["name"] for s in w.poll_once()} == {"a.txt", "b.txt"}
     (d / "c.txt").write_text("333")
     assert [s["name"] for s in w.poll_once()] == ["c.txt"]
     assert w.poll_once() == []  # nothing new
-    assert set(seen) == {"a.txt", "b.txt", "c.txt"}
+    assert {s["name"] for s in seen} == {"a.txt", "b.txt", "c.txt"}
+    assert all(list(s) == status_keys for s in seen)
+    # the store listing reads layout only
+    assert list(ops.list_status(str(d / "a.txt"))[0]) == status_keys[:5]
 
     ops.mkdirs(str(tmp_path / "made/nested"))
     assert ops.exists(str(tmp_path / "made/nested"))
