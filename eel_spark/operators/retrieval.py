@@ -493,47 +493,6 @@ def compact_bm25_stats(spark, path: str) -> None:
     )
 
 
-def _against_stats_components(
-    matched: DataFrame, stats: DataFrame, terms: Sequence[str],
-    k1: float, b: float,
-) -> DataFrame:
-    """Join matched (id, dl, term, tf) rows to maintained stats and emit
-    per-(row, term) components: LEFT join on term with df coalesced to 0
-    (a store-unseen term keeps its match), totals carried as a separate
-    1-row broadcast so they survive term misses.
-
-    Defensive about the ``stats`` shape (it has the same column names as
-    ``bm25_term_stats`` output, which is (doc, term) grain): the per-term
-    projection collapses to ONE row per term via MAX(df) — on the
-    canonical ``read_bm25_stats`` shape that is the identity, and a
-    mistakenly-passed doc-grain frame no longer fans out the left join
-    and silently inflates scores (doc-grain df is constant per term, so
-    MAX recovers it). Totals likewise aggregate to exactly one row with
-    NULL→0 coalescing, so an EMPTY stats frame (empty-vocabulary store
-    read with ``terms=None``) degrades every match to df=0 / N=0 instead
-    of dropping rows through an empty crossJoin — the documented
-    'degrades, never disappears rows' contract. With N=0 the avgdl
-    normalization is undefined (0/0 → NULL), so the component coalesces
-    to 0.0: every match survives with a zero score rather than a NULL
-    that would poison the fold."""
-    dfreq = (
-        stats.select("term", "df")
-        .where(F.col("term").isin(list(terms)))
-        .groupBy("term")
-        .agg(F.max("df").alias("df"))
-    )
-    totals = stats.agg(
-        F.coalesce(F.max("n_docs"), F.lit(0)).cast("long").alias("n_docs"),
-        F.coalesce(F.max("sum_dl"), F.lit(0)).cast("long").alias("sum_dl"),
-    )
-    return (
-        matched.join(F.broadcast(dfreq), "term", "left")
-        .withColumn("df", F.coalesce("df", F.lit(0)))
-        .crossJoin(F.broadcast(totals))
-        .withColumn("__c", F.coalesce(_bm25_component(k1, b), F.lit(0.0)))
-    )
-
-
 def bm25_score_against_stats(
     df: DataFrame,
     text_col: str,
@@ -556,14 +515,63 @@ def bm25_score_against_stats(
     term set degrades, never disappears rows. Same match-bounded
     projection and sorted-order component fold as ``bm25_scores``:
     identical integer inputs produce bit-identical scores
-    (equivalence-tested against the one-shot path)."""
-    terms = sorted({t.strip().lower() for t in query_terms if t and t.strip()})
-    if not terms:
-        raise ValueError("query_terms must contain at least one term")
-    comp = _against_stats_components(
-        _matched_tf(df, text_col, id_col, terms), stats, terms, k1, b
-    ).select(id_col, "__c")
-    return _fold_scores(comp, [id_col])
+    (equivalence-tested against the one-shot path). The multi-query
+    scorer of :func:`bm25_topk_multi_against_stats` with one query."""
+    return _bm25_scores_against_stats(
+        df, text_col, id_col, stats, {"q": query_terms}, k1, b
+    ).drop("query_id")
+
+
+def _bm25_scores_against_stats(
+    df: DataFrame, text_col: str, id_col: str, stats: DataFrame,
+    queries: dict, k1: float, b: float,
+) -> DataFrame:
+    """(query_id, id, score, n_terms) per query over maintained stats.
+    One match-bounded scan for the union of the query terms: matched
+    (id, dl, term, tf) rows LEFT join the stats on term with df
+    coalesced to 0 (a store-unseen term keeps its match), totals ride
+    as a separate 1-row broadcast so they survive term misses, and the
+    per-(row, term) components fan out to query grain by a broadcast
+    (query_id, term) join.
+
+    Defensive about the ``stats`` shape (it has the same column names as
+    ``bm25_term_stats`` output, which is (doc, term) grain): the per-term
+    projection collapses to ONE row per term via MAX(df) — on the
+    canonical ``read_bm25_stats`` shape that is the identity, and a
+    mistakenly-passed doc-grain frame no longer fans out the left join
+    and silently inflates scores (doc-grain df is constant per term, so
+    MAX recovers it). Totals likewise aggregate to exactly one row with
+    NULL→0 coalescing, so an EMPTY stats frame (empty-vocabulary store
+    read with ``terms=None``) degrades every match to df=0 / N=0 instead
+    of dropping rows through an empty crossJoin — the documented
+    'degrades, never disappears rows' contract. With N=0 the avgdl
+    normalization is undefined (0/0 → NULL), so the component coalesces
+    to 0.0: every match survives with a zero score rather than a NULL
+    that would poison the fold."""
+    qmap = _normalize_queries(queries)
+    union_terms = sorted({t for ts in qmap.values() for t in ts})
+    pairs = [(qid, t) for qid, ts in sorted(qmap.items()) for t in ts]
+    qdf = df.sparkSession.createDataFrame(pairs, "query_id string, term string")
+    dfreq = (
+        stats.select("term", "df")
+        .where(F.col("term").isin(union_terms))
+        .groupBy("term")
+        .agg(F.max("df").alias("df"))
+    )
+    totals = stats.agg(
+        F.coalesce(F.max("n_docs"), F.lit(0)).cast("long").alias("n_docs"),
+        F.coalesce(F.max("sum_dl"), F.lit(0)).cast("long").alias("sum_dl"),
+    )
+    comp = (
+        _matched_tf(df, text_col, id_col, union_terms)
+        .join(F.broadcast(dfreq), "term", "left")
+        .withColumn("df", F.coalesce("df", F.lit(0)))
+        .crossJoin(F.broadcast(totals))
+        .withColumn("__c", F.coalesce(_bm25_component(k1, b), F.lit(0.0)))
+        .join(F.broadcast(qdf), "term")
+        .select("query_id", id_col, "__c")
+    )
+    return _fold_scores(comp, ["query_id", id_col])
 
 
 def bm25_topk_multi_against_stats(
@@ -587,19 +595,9 @@ def bm25_topk_multi_against_stats(
     match (see ``bm25_score_against_stats``)."""
     from eel_spark.operators.similarity import _topk_per_query
 
-    qmap = _normalize_queries(queries)
-    union_terms = sorted({t for ts in qmap.values() for t in ts})
-    pairs = [(qid, t) for qid, ts in sorted(qmap.items()) for t in ts]
-    qdf = df.sparkSession.createDataFrame(pairs, "query_id string, term string")
-    comp = (
-        _against_stats_components(
-            _matched_tf(df, text_col, id_col, union_terms), stats,
-            union_terms, k1, b,
-        )
-        .join(F.broadcast(qdf), "term")
-        .select("query_id", id_col, "__c")
+    scored = _bm25_scores_against_stats(
+        df, text_col, id_col, stats, queries, k1, b
     )
-    scored = _fold_scores(comp, ["query_id", id_col])
     return _topk_per_query(scored, "query_id", id_col, k, value_col="score")
 
 

@@ -14,7 +14,7 @@ compose (sketch column inside each IVF cell).
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -41,10 +41,14 @@ def _topk_per_query(
     k: int,
     value_col: str = "cos",
     ascending: bool = False,
+    exclude_self: bool = False,
 ) -> DataFrame:
     """One exact per-query top-k of a (query, candidate, value) table:
     (query, id, value_col, rank) — :func:`_topk_per_query_multi` with one
-    dimension."""
+    dimension. ``exclude_self`` drops candidates whose id equals the
+    query id before ranking (corpus-internal queries)."""
+    if exclude_self:
+        scored = scored.filter(F.col(id_col) != F.col(query_id_col))
     return _topk_per_query_multi(
         scored, query_id_col, id_col, k, {"x": (value_col, ascending)}
     ).withColumnRenamed("rank_x", "rank")
@@ -141,8 +145,8 @@ def _exact_rerank(
     k: int,
 ) -> DataFrame:
     """Exact-cosine top-k of a bounded candidate set — the second stage
-    of every prefiltered ANN path (BQ, PQ, IVF-PQ, and their
-    incremental-index twins). ``cands`` holds the (query_id_col, id_col)
+    of every prefiltered ANN path (BQ, PQ, IVF-PQ, one-shot or served
+    from the incremental index). ``cands`` holds the (query_id_col, id_col)
     survivors of the approximate stage; ``corpus`` is (id, vector) and
     ``queries`` is (query id, vector), positionally, prepared by the
     caller so each path keeps its own casts. The survivors are few
@@ -198,9 +202,22 @@ def brute_force_topk(
         F.col(id_col),
         vectors.cosine(F.col(vec_col), F.col("__qvec")).alias("cos"),
     )
-    if exclude_self:
-        scored = scored.filter(F.col(id_col) != F.col(query_id_col))
-    return _topk_per_query(scored, query_id_col, id_col, k)
+    return _topk_per_query(
+        scored, query_id_col, id_col, k, exclude_self=exclude_self
+    )
+
+
+def _as_double(
+    df: DataFrame, id_col: str, vec_col: str, id_as: str, vec_as: str
+) -> DataFrame:
+    """(id_as, vec_as): each row's id and its vector cast to double —
+    the one cast k-means training, IVF corpora, appended postings and
+    queries all go through, so one-shot and served vectors score
+    bit-identically."""
+    return df.select(
+        F.col(id_col).alias(id_as),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(vec_as),
+    )
 
 
 def train_centroids(
@@ -217,10 +234,7 @@ def train_centroids(
 
     Returns (cell_id, centroid array<double>).
     """
-    v = vectors_df.select(
-        F.col(id_col).alias("__id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-    )
+    v = _as_double(vectors_df, id_col, vec_col, "__id", "__v")
     if sample_mod > 1:
         v = v.filter(F.pmod(F.xxhash64(F.col("__id")), sample_mod) == 0)
     # deterministic seeds: the min-id vector in each of n_cells hash
@@ -354,21 +368,15 @@ def _probe_cells(
     query_id_col: str,
     vec_col: str,
     n_probe: int,
-    with_dims: bool = False,
 ) -> DataFrame:
-    """Per query, the ``n_probe`` nearest cells: (__qid, __qv, cell_id).
-    One broadcast crossJoin against the n_cells-row centroid table plus a
-    per-query window over n_cells rows — bounded by queries × n_cells.
-    Shared by every IVF path (:func:`ivf_topk`, :func:`ivf_pq_topk` and
-    their incremental-index twins) so the one-shot and incremental-index
-    paths cannot drift (their equivalence is bit-exact, tested). ``with_dims`` additionally carries each row's
-    query-vector and centroid sizes (``__qdim``/``__cdim``) so the
-    against-index paths can validate dimensions inside the probed-cells
-    collect they already pay for — see ``_collect_probed_cells``."""
-    q = queries_df.select(
-        F.col(query_id_col).alias("__qid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__qv"),
-    )
+    """Per query, the ``n_probe`` nearest cells: (__qid, __qv, cell_id,
+    __qdim, __cdim). One broadcast crossJoin against the n_cells-row
+    centroid table plus a per-query window over n_cells rows — bounded
+    by queries × n_cells. Every IVF scorer joins it to a postings frame
+    on ``cell_id``, one-shot or served. The vector sizes feed the served
+    paths' dimension check (:func:`_served_probes`); elsewhere Catalyst
+    prunes them."""
+    q = _as_double(queries_df, query_id_col, vec_col, "__qid", "__qv")
     qc = q.crossJoin(F.broadcast(centroids)).withColumn(
         "__dist", vectors.l2_distance(F.col("__qv"), F.col("centroid"))
     )
@@ -376,13 +384,42 @@ def _probe_cells(
     ranked = qc.withColumn("__rn", F.row_number().over(wq)).filter(
         F.col("__rn") <= n_probe
     )
-    if with_dims:
-        return ranked.select(
-            "__qid", "__qv", "cell_id",
-            F.size("__qv").alias("__qdim"),
-            F.size("centroid").alias("__cdim"),
-        )
-    return ranked.select("__qid", "__qv", "cell_id")
+    return ranked.select(
+        "__qid", "__qv", "cell_id",
+        F.size("__qv").alias("__qdim"),
+        F.size("centroid").alias("__cdim"),
+    )
+
+
+def _ivf_corpus(
+    vectors_df: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """The one-shot postings frame (id, vec, cell_id), in the stored
+    postings' columns: the corpus fanned out to every core, vectors cast
+    to double, each row assigned to its nearest centroid."""
+    return _assign_cells(
+        _as_double(ensure_parallelism(vectors_df), id_col, vec_col, "id", "vec"),
+        centroids,
+        "vec",
+    )
+
+
+def _cosine_topk(
+    probes: DataFrame, postings: DataFrame, query_id_col: str, id_col: str,
+    k: int, exclude_self: bool,
+) -> DataFrame:
+    """Exact-cosine top-k of probes (__qid, __qv, cell_id) joined on
+    ``cell_id`` to a postings frame (id, vec, cell_id). Probed-cell
+    candidates still grow with the corpus (n_probe / n_cells of it per
+    query), so the salted top-k ranks them, not one reducer per query."""
+    scored = probes.join(postings, "cell_id").select(
+        F.col("__qid").alias(query_id_col),
+        F.col("id").alias(id_col),
+        vectors.cosine(F.col("vec"), F.col("__qv")).alias("cos"),
+    )
+    return _topk_per_query(
+        scored, query_id_col, id_col, k, exclude_self=exclude_self
+    )
 
 
 def ivf_scored_candidates(
@@ -405,27 +442,17 @@ def ivf_scored_candidates(
     plus any approximate (probe-n) ranking read the SAME scored rows:
     the corpus cell assignment and the per-pair cosine fold run once
     instead of once per probe configuration. Cosines are bit-identical
-    to ivf_topk's (same double casts, same argument order), so rankings
-    derived from this table match it exactly."""
-    corpus = _assign_cells(
-        ensure_parallelism(vectors_df).select(
-            F.col(id_col).alias("__id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-        ),
-        centroids,
-        "__v",
-    )
+    to ivf_topk's (same postings frame, same argument order), so
+    rankings derived from this table match it exactly."""
+    corpus = _ivf_corpus(vectors_df, centroids, id_col, vec_col)
     q = F.broadcast(
-        queries_df.select(
-            F.col(query_id_col).alias("__qid"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__qv"),
-        )
+        _as_double(queries_df, query_id_col, vec_col, "__qid", "__qv")
     )
     return corpus.crossJoin(q).select(
         F.col("__qid").alias(query_id_col),
-        F.col("__id").alias(id_col),
+        F.col("id").alias(id_col),
         "cell_id",
-        vectors.cosine(F.col("__v"), F.col("__qv")).alias("cos"),
+        vectors.cosine(F.col("vec"), F.col("__qv")).alias("cos"),
     )
 
 
@@ -461,26 +488,11 @@ def ivf_topk(
     ``n_probe`` nearest cells only. Candidate count ∝ probed-cell sizes —
     the 100 TB path (brute force touches every vector per query; IVF
     touches ~n_probe/n_cells of them)."""
-    corpus = _assign_cells(
-        ensure_parallelism(vectors_df).select(
-            F.col(id_col).alias("__id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-        ),
-        centroids,
-        "__v",
+    return _cosine_topk(
+        _probe_cells(queries_df, centroids, query_id_col, vec_col, n_probe),
+        _ivf_corpus(vectors_df, centroids, id_col, vec_col),
+        query_id_col, id_col, k, exclude_self,
     )
-    probes = _probe_cells(queries_df, centroids, query_id_col, vec_col, n_probe)
-    scored = probes.join(corpus, "cell_id").select(
-        F.col("__qid").alias(query_id_col),
-        F.col("__id").alias(id_col),
-        vectors.cosine(F.col("__v"), F.col("__qv")).alias("cos"),
-    )
-    if exclude_self:
-        scored = scored.filter(F.col(id_col) != F.col(query_id_col))
-    # probed-cell candidate counts still grow with the corpus (n_probe /
-    # n_cells of it per query) — rank them with the same two-phase salted
-    # top-k as the brute-force path rather than one reducer per query.
-    return _topk_per_query(scored, query_id_col, id_col, k)
 
 
 def pack_signatures(
@@ -548,11 +560,9 @@ def bq_topk(
         F.col(id_col),
         vectors.hamming(F.col("sig"), F.col("__qsig")).alias("hamming"),
     )
-    if exclude_self:
-        ham = ham.filter(F.col(id_col) != F.col(query_id_col))
     cands = _topk_per_query(
         ham, query_id_col, id_col, refine * k,
-        value_col="hamming", ascending=True,
+        value_col="hamming", ascending=True, exclude_self=exclude_self,
     )
     return _exact_rerank(
         vectors_df.select(id_col, vec_col),
@@ -692,8 +702,8 @@ def _with_pq_codes(
 ) -> DataFrame:
     """Append the ``n_subs``-byte PQ code array for ``vec_expr`` — one
     broadcast of the packed codebooks, per-sub argmin, no shuffle.
-    Shared by ``encode_pq`` and the incremental index's append so the
-    two encoders cannot drift."""
+    Shared by ``encode_pq``, ``encode_ivf_pq`` and the incremental
+    index's append so the encoders cannot drift."""
     packed = _packed_books(books)
     # per-sub argmin: zip subvectors with their codebooks positionally
     codes = F.zip_with(
@@ -735,6 +745,31 @@ def _pq_adc(codes_col: str = "codes", lut_col: str = "__lut") -> "F.Column":
         ),
         F.lit(0.0),
         lambda acc, v: acc + v,
+    )
+
+
+def _adc_candidates(
+    probes: DataFrame, postings: DataFrame, books: DataFrame, dim: int,
+    n_subs: int, query_id_col: str, id_col: str, n: int, exclude_self: bool,
+) -> DataFrame:
+    """ADC scan: each probe row (__qid, __qv, cell_id) becomes its LUT,
+    broadcast and joined on ``cell_id`` to a postings frame (id, codes,
+    cell_id); the ``n`` nearest per query survive. NULL ``codes`` (a
+    wave appended by a pre-PQ writer on a mixed store) rank LAST, not
+    NULLS-FIRST into every candidate slot — the Hamming scan's rule."""
+    lut_probes = F.broadcast(
+        probes.withColumn("__qsv", _subvecs(F.col("__qv"), dim, n_subs))
+        .crossJoin(F.broadcast(_packed_books(books)))
+        .select("__qid", "cell_id", _pq_lut().alias("__lut"))
+    )
+    scored = lut_probes.join(postings, "cell_id").select(
+        F.col("__qid").alias(query_id_col),
+        F.col("id").alias(id_col),
+        F.coalesce(_pq_adc(), F.lit(float("inf"))).alias("adc"),
+    )
+    return _topk_per_query(
+        scored, query_id_col, id_col, n,
+        value_col="adc", ascending=True, exclude_self=exclude_self,
     )
 
 
@@ -785,27 +820,18 @@ def ivf_pq_topk(
     ``coded`` (from ``encode_ivf_pq``) is the persistable corpus: (id,
     cell_id, codes) — at 100 TB you materialize it partitioned by
     cell_id so a probe prunes partitions at the scan. Training inputs
-    (``train_centroids``, ``train_pq``) are sampled upstream."""
+    (``train_centroids``, ``train_pq``) are sampled upstream. Probe and
+    ADC scan are :func:`ivf_pq_topk_against_index`'s, over ``coded``."""
     if coded is None:
         coded = encode_ivf_pq(
             vectors_df, centroids, books, dim, n_subs, id_col, vec_col
         )
-    probes = F.broadcast(
-        _probe_cells(queries_df, centroids, query_id_col, vec_col, n_probe)
-        .withColumn("__qsv", _subvecs(F.col("__qv"), dim, n_subs))
-        .crossJoin(F.broadcast(_packed_books(books)))
-        .select("__qid", "cell_id", _pq_lut().alias("__lut"))
-    )
-    scored = probes.join(ensure_parallelism(coded), "cell_id").select(
-        F.col("__qid").alias(query_id_col),
-        F.col(id_col),
-        _pq_adc().alias("adc"),
-    )
-    if exclude_self:
-        scored = scored.filter(F.col(id_col) != F.col(query_id_col))
-    cands = _topk_per_query(
-        scored, query_id_col, id_col, refine * k,
-        value_col="adc", ascending=True,
+    cands = _adc_candidates(
+        _probe_cells(queries_df, centroids, query_id_col, vec_col, n_probe),
+        ensure_parallelism(coded).select(
+            F.col(id_col).alias("id"), "codes", "cell_id"
+        ),
+        books, dim, n_subs, query_id_col, id_col, refine * k, exclude_self,
     )
     return _exact_rerank(
         vectors_df.select(id_col, vec_col),
@@ -827,23 +853,11 @@ def encode_ivf_pq(
     two broadcast joins (cell assignment + code assignment), no shuffle.
     Write it partitioned by cell_id (or bucketed) so probes prune at the
     scan."""
-    assigned = _assign_cells(
-        ensure_parallelism(vectors_df).select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-        ),
-        centroids,
-        "__v",
+    coded = _with_pq_codes(
+        _ivf_corpus(vectors_df, centroids, id_col, vec_col), books, "vec",
+        dim, n_subs,
     )
-    return encode_pq(
-        assigned.select(F.col(id_col), F.col("__v").alias(vec_col), "cell_id"),
-        books,
-        dim,
-        n_subs,
-        id_col,
-        vec_col,
-        keep=("cell_id",),
-    ).select(id_col, "cell_id", "codes")
+    return coded.select(F.col("id").alias(id_col), "cell_id", "codes")
 
 
 def pq_topk(
@@ -894,11 +908,9 @@ def pq_topk(
             _pq_adc().alias("adc"),
         )
     )
-    if exclude_self:
-        scored = scored.filter(F.col(id_col) != F.col(query_id_col))
     cands = _topk_per_query(
         scored, query_id_col, id_col, refine * k,
-        value_col="adc", ascending=True,
+        value_col="adc", ascending=True, exclude_self=exclude_self,
     )
     return _exact_rerank(
         vectors_df.select(id_col, vec_col),
@@ -912,7 +924,9 @@ def pq_topk(
 # the whole corpus per wave (what ivf_topk does) is a full-corpus job at
 # every arrival. The index persists assigned postings per batch and new
 # waves append THEIR rows only, as an incremental store
-# (operators/maintenance.py owns its commit, reap and compaction):
+# (operators/maintenance.py owns its commit, reap and compaction). A
+# served query reads the probed cells' postings and scores them with the
+# one-shot paths' scorers:
 #
 #   <path>/centroids/      frozen (cell_id, centroid) — written once at
 #                          init; appends READ it, so an append can never
@@ -1101,12 +1115,7 @@ def append_ivf_batch(
     try:
         assigned = pin(
             _assign_cells(
-                batch_df.select(
-                    F.col(id_col).alias("id"),
-                    F.transform(
-                        F.col(vec_col), lambda x: x.cast("double")
-                    ).alias("vec"),
-                ),
+                _as_double(batch_df, id_col, vec_col, "id", "vec"),
                 centroids,
                 "vec",
                 dist_col="__cdist",
@@ -1166,19 +1175,23 @@ def append_ivf_batch(
         release_pins_since(mark)
 
 
-def _collect_probed_cells(probes: DataFrame) -> tuple[list[int], int | None]:
-    """(probed cell ids, index dim) — the driver-side partition-pruning
-    collect every against-index path pays (bounded ≤ n_cells), with
-    query dimension validation folded into the SAME job: wrong-dimension
-    query vectors fail as loudly as wrong-dimension waves do at append
-    (without this, zip_with silently scores by prefix truncation — r11
-    advice), and a NULL vector (a query id whose embedding row went
+def _served_probes(
+    spark, path: str, queries_df: DataFrame, query_id_col: str,
+    vec_col: str, n_probe: int,
+) -> tuple[DataFrame, DataFrame, list[int], int | None]:
+    """The served preamble: (centroids, probes, probed cell ids, index
+    dim). The queries probe the index's frozen centroids; the probed
+    cells are collected driver-side for partition pruning (bounded
+    ≤ n_cells), with query validation folded into the SAME job:
+    wrong-dimension query vectors fail as loudly as wrong-dimension
+    waves do at append (zip_with would otherwise score by prefix
+    truncation), and a NULL vector (a query id whose embedding row went
     missing in the caller's join) gets its own diagnosis instead of a
-    misleading model-mismatch error. The index dim rides back too so
-    the BQ/PQ paths skip their separate centroids probe — zero extra
-    Spark jobs for the validation AND one fewer for those serves (r12
-    review, both passes). ``dim`` is None only for an EMPTY query batch
-    (no probes to measure — the serve returns empty anyway)."""
+    misleading model-mismatch error. The index dim rides back too, so
+    the BQ/PQ paths need no centroids probe of their own. ``dim`` is
+    None only for an EMPTY query batch (no probes to measure)."""
+    centroids = read_ivf_centroids(spark, path)
+    probes = _probe_cells(queries_df, centroids, query_id_col, vec_col, n_probe)
     row = probes.agg(
         F.collect_set("cell_id").alias("cells"),
         F.min("__qdim").alias("qlo"),
@@ -1199,7 +1212,7 @@ def _collect_probed_cells(probes: DataFrame) -> tuple[list[int], int | None]:
             f"query vector dim {got} != index dim {dim} — wrong "
             "embedding model for this index"
         )
-    return sorted(row["cells"]), dim
+    return centroids, probes, sorted(row["cells"]), dim
 
 
 def read_ivf_postings(
@@ -1245,6 +1258,30 @@ def read_ivf_postings(
     )
 
 
+def _serve_prefiltered(
+    spark, path: str, queries_df: DataFrame, id_col: str, vec_col: str,
+    query_id_col: str, k: int, n_probe: int,
+    scan: Callable[[DataFrame, list[int], int], DataFrame],
+) -> DataFrame:
+    """The BQ and PQ served paths around their candidate scan:
+    ``scan(probes, cells, dim)`` returns the prefilter's (query, id)
+    candidates, reranked by exact cosine between the probed cells'
+    stored vectors and the double-cast query vectors. The scans' sketch
+    and subvector expressions need the index dim even for an empty query
+    batch, which has no probe to measure it."""
+    centroids, probes, cells, dim = _served_probes(
+        spark, path, queries_df, query_id_col, vec_col, n_probe
+    )
+    if dim is None:
+        dim = centroids.select(F.size("centroid").alias("d")).first()["d"]
+    cands = scan(probes, cells, dim)
+    return _exact_rerank(
+        read_ivf_postings(spark, path, cells=cells).select("id", "vec"),
+        _as_double(queries_df, query_id_col, vec_col, "__qid", "__qv"),
+        cands, query_id_col, id_col, k,
+    )
+
+
 def ivf_topk_against_index(
     spark,
     path: str,
@@ -1258,31 +1295,46 @@ def ivf_topk_against_index(
 ) -> DataFrame:
     """IVF top-k served FROM the incremental index: probe cells against
     the frozen centroids, read only the probed cells' postings
-    (partition-pruned — plan-asserted in tests), rank with the shared
-    salted top-k. Bit-identical to :func:`ivf_topk` over the union of
-    appended waves with the same centroids (same probe helper, same
-    double-cast arithmetic, same tie-breaks — tested), except no
-    full-corpus re-assignment happens at query time."""
-    centroids = read_ivf_centroids(spark, path)
-    probes = _probe_cells(
-        queries_df, centroids, query_id_col, vec_col, n_probe, with_dims=True
+    (partition-pruned — plan-asserted in tests) and score them with
+    :func:`ivf_topk`'s cosine top-k. The stored postings are the
+    assignment ``ivf_topk`` computes in place, so the result is
+    bit-identical to it over the union of appended waves with the same
+    centroids, except no full-corpus re-assignment happens at query
+    time."""
+    _, probes, cells, _ = _served_probes(
+        spark, path, queries_df, query_id_col, vec_col, n_probe
     )
-    # bounded collect: ≤ n_cells distinct values (the centroid table is
-    # broadcast-sized by design) — buys driver-side partition pruning;
-    # dimension validation rides in the same job
-    probed_cells, _ = _collect_probed_cells(probes)
-    probes = probes.drop("__qdim", "__cdim")
-    corpus = ensure_parallelism(
-        read_ivf_postings(spark, path, cells=probed_cells)
-    ).select(F.col("id").alias("__id"), F.col("vec").alias("__v"), "cell_id")
-    scored = probes.join(corpus, "cell_id").select(
+    return _cosine_topk(
+        probes, ensure_parallelism(read_ivf_postings(spark, path, cells=cells)),
+        query_id_col, id_col, k, exclude_self,
+    )
+
+
+def _hamming_candidates(
+    probes: DataFrame, postings: DataFrame, dim: int, query_id_col: str,
+    id_col: str, n: int, exclude_self: bool,
+) -> DataFrame:
+    """Hamming scan: each probe row (__qid, __qv, cell_id) is
+    sign-sketched and joined on ``cell_id`` to a postings frame (id, sig,
+    cell_id); the ``n`` nearest per query survive. Legacy rows on a
+    mixed store read as sig = NULL (mergeSchema): their Hamming
+    coalesces to an impossible worst so they rank LAST — ascending order
+    is NULLS FIRST, which would let un-sketched rows take every candidate
+    slot. They degrade to prefilter-invisible (the plain path still
+    finds them) rather than poisoning the ranking."""
+    qsig = probes.withColumn("__qsig", vectors.pack_sign_bits(F.col("__qv"), dim))
+    ham = qsig.join(postings, "cell_id").select(
         F.col("__qid").alias(query_id_col),
-        F.col("__id").alias(id_col),
-        vectors.cosine(F.col("__v"), F.col("__qv")).alias("cos"),
+        F.col("id").alias(id_col),
+        F.coalesce(
+            vectors.hamming(F.col("sig"), F.col("__qsig")),
+            F.lit(1 << 30),
+        ).alias("hamming"),
     )
-    if exclude_self:
-        scored = scored.filter(F.col(id_col) != F.col(query_id_col))
-    return _topk_per_query(scored, query_id_col, id_col, k)
+    return _topk_per_query(
+        ham, query_id_col, id_col, n,
+        value_col="hamming", ascending=True, exclude_self=exclude_self,
+    )
 
 
 def ivf_bq_topk_against_index(
@@ -1306,47 +1358,16 @@ def ivf_bq_topk_against_index(
     Result format and tie-breaks match :func:`ivf_topk_against_index`;
     only stage-1 misses cost recall (recall-floor tested; raise
     ``refine`` or ``n_probe`` to trade cost for recall)."""
-    centroids = read_ivf_centroids(spark, path)
-    probes = _probe_cells(
-        queries_df, centroids, query_id_col, vec_col, n_probe, with_dims=True
-    )
-    probed_cells, dim = _collect_probed_cells(probes)
-    probes = probes.drop("__qdim", "__cdim")
-    if dim is None:  # empty query batch: nothing to sketch or rank
-        dim = centroids.select(F.size("centroid").alias("d")).first()["d"]
-    corpus = ensure_parallelism(
-        read_ivf_postings(spark, path, cells=probed_cells, with_sig=True)
-    ).select(
-        F.col("id").alias("__id"), F.col("vec").alias("__v"), "sig", "cell_id"
-    )
-    qsig = probes.withColumn("__qsig", vectors.pack_sign_bits(F.col("__qv"), dim))
-    # legacy rows on a mixed store read as sig = NULL (mergeSchema):
-    # coalesce their Hamming to an impossible worst so they rank LAST —
-    # ascending order is NULLS FIRST, which would let un-sketched rows
-    # consume every refine·k slot and silently displace real candidates.
-    # They degrade to prefilter-invisible (the plain path still finds
-    # them) rather than poisoning the ranking.
-    ham = qsig.join(corpus, "cell_id").select(
-        F.col("__qid").alias(query_id_col),
-        F.col("__id").alias(id_col),
-        F.coalesce(
-            vectors.hamming(F.col("sig"), F.col("__qsig")),
-            F.lit(1 << 30),
-        ).alias("hamming"),
-    )
-    if exclude_self:
-        ham = ham.filter(F.col(id_col) != F.col(query_id_col))
-    cands = _topk_per_query(
-        ham, query_id_col, id_col, refine * k,
-        value_col="hamming", ascending=True,
-    )
-    return _exact_rerank(
-        read_ivf_postings(spark, path, cells=probed_cells).select("id", "vec"),
-        queries_df.select(
-            query_id_col,
-            F.transform(F.col(vec_col), lambda x: x.cast("double")),
-        ),
-        cands, query_id_col, id_col, k,
+    def scan(probes, cells, dim):
+        postings = read_ivf_postings(spark, path, cells=cells, with_sig=True)
+        return _hamming_candidates(
+            probes, ensure_parallelism(postings), dim,
+            query_id_col, id_col, refine * k, exclude_self,
+        )
+
+    return _serve_prefiltered(
+        spark, path, queries_df, id_col, vec_col, query_id_col, k, n_probe,
+        scan,
     )
 
 
@@ -1367,53 +1388,26 @@ def ivf_pq_topk_against_index(
     probed cells' stored code arrays (n_subs byte lookups per pair over
     a partition-pruned read that never touches the float vectors),
     exact-cosine rerank of the refine·k survivors from the stored
-    vectors. Same LUT/ADC kernels as the one-shot ``ivf_pq_topk`` (the
-    expressions are shared helpers), so results match it exactly for
-    the same centroids/books/corpus (tested)."""
-    centroids = read_ivf_centroids(spark, path)
-    books = read_ivf_pq_books(spark, path)
-    if books is None:
-        raise ValueError(
-            f"index at {path} was initialized without PQ codebooks — "
-            "init a new index with pq_books= to use the ADC-scan path"
+    vectors. The probe and ADC scan are the one-shot ``ivf_pq_topk``'s,
+    over the stored codes instead of freshly encoded ones, so results
+    match it exactly for the same centroids/books/corpus (tested)."""
+    def scan(probes, cells, dim):
+        books = read_ivf_pq_books(spark, path)
+        if books is None:
+            raise ValueError(
+                f"index at {path} was initialized without PQ codebooks — "
+                "init a new index with pq_books= to use the ADC-scan path"
+            )
+        n_subs = books.select(F.countDistinct("sub_id").alias("n")).first()["n"]
+        postings = read_ivf_postings(spark, path, cells=cells, with_codes=True)
+        return _adc_candidates(
+            probes, ensure_parallelism(postings), books, dim, n_subs,
+            query_id_col, id_col, refine * k, exclude_self,
         )
-    n_subs = books.select(F.countDistinct("sub_id").alias("n")).first()["n"]
-    probes = _probe_cells(
-        queries_df, centroids, query_id_col, vec_col, n_probe, with_dims=True
-    )
-    probed_cells, dim = _collect_probed_cells(probes)
-    probes = probes.drop("__qdim", "__cdim")
-    if dim is None:  # empty query batch: nothing to code or rank
-        dim = centroids.select(F.size("centroid").alias("d")).first()["d"]
-    lut_probes = F.broadcast(
-        probes.withColumn("__qsv", _subvecs(F.col("__qv"), dim, n_subs))
-        .crossJoin(F.broadcast(_packed_books(books)))
-        .select("__qid", "cell_id", _pq_lut().alias("__lut"))
-    )
-    coded = ensure_parallelism(
-        read_ivf_postings(spark, path, cells=probed_cells, with_codes=True)
-    ).select(F.col("id").alias("__id"), "codes", "cell_id")
-    # codes = NULL (a wave appended by a pre-pq writer on a mixed store)
-    # must rank LAST, not NULLS-FIRST into every candidate slot — the
-    # same degrade-never-displace coalesce as the BQ path's sig
-    scored = lut_probes.join(coded, "cell_id").select(
-        F.col("__qid").alias(query_id_col),
-        F.col("__id").alias(id_col),
-        F.coalesce(_pq_adc(), F.lit(float("inf"))).alias("adc"),
-    )
-    if exclude_self:
-        scored = scored.filter(F.col(id_col) != F.col(query_id_col))
-    cands = _topk_per_query(
-        scored, query_id_col, id_col, refine * k,
-        value_col="adc", ascending=True,
-    )
-    return _exact_rerank(
-        read_ivf_postings(spark, path, cells=probed_cells).select("id", "vec"),
-        queries_df.select(
-            query_id_col,
-            F.transform(F.col(vec_col), lambda x: x.cast("double")),
-        ),
-        cands, query_id_col, id_col, k,
+
+    return _serve_prefiltered(
+        spark, path, queries_df, id_col, vec_col, query_id_col, k, n_probe,
+        scan,
     )
 
 

@@ -528,8 +528,14 @@ def _queries(spark):
 
 def test_ivf_index_equals_one_shot(spark, ivf_index):
     """Serving from the incremental index is bit-identical to ivf_topk
-    over the union of the appended waves with the same centroids."""
-    from eel_spark.operators.similarity import ivf_topk, ivf_topk_against_index
+    over the union of the appended waves with the same centroids, and,
+    with every cell probed, to the exact brute-force top-k — an oracle
+    that shares no IVF code with the served path."""
+    from eel_spark.operators.similarity import (
+        brute_force_topk,
+        ivf_topk,
+        ivf_topk_against_index,
+    )
 
     path, waves, centroids = ivf_index
     union = waves[0]
@@ -540,6 +546,10 @@ def test_ivf_index_equals_one_shot(spark, ivf_index):
     from_index = ivf_topk_against_index(spark, path, q, k=5, n_probe=2)
     assert sorted(map(tuple, from_index.collect())) == sorted(
         map(tuple, one_shot.collect())
+    )
+    all_cells = ivf_topk_against_index(spark, path, q, k=5, n_probe=3)
+    assert sorted(map(tuple, all_cells.collect())) == sorted(
+        map(tuple, brute_force_topk(union, q, k=5).collect())
     )
 
 
@@ -812,8 +822,14 @@ def pq_index(spark, tmp_path, clustered):
 
 def test_ivf_pq_against_index_equals_one_shot(spark, pq_index):
     """ADC scan from the incremental index ≡ one-shot ivf_pq_topk over
-    the union with the same centroids/books (shared LUT/ADC kernels)."""
-    from eel_spark.operators.similarity import ivf_pq_topk, ivf_pq_topk_against_index
+    the union with the same centroids/books (shared LUT/ADC kernels);
+    with every cell probed and refine·k covering the corpus, it is the
+    exact brute-force top-k (an oracle sharing no IVF code)."""
+    from eel_spark.operators.similarity import (
+        brute_force_topk,
+        ivf_pq_topk,
+        ivf_pq_topk_against_index,
+    )
 
     path, waves, centroids, books = pq_index
     union = waves[0]
@@ -827,6 +843,13 @@ def test_ivf_pq_against_index_equals_one_shot(spark, pq_index):
         spark, path, q, k=5, n_probe=2, refine=4
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    # 3 cells, 36 postings: refine·k = 40 keeps every probed posting
+    covering = ivf_pq_topk_against_index(
+        spark, path, q, k=5, n_probe=3, refine=8
+    )
+    assert sorted(map(tuple, covering.collect())) == sorted(
+        map(tuple, brute_force_topk(union, q, k=5).collect())
+    )
 
 
 def test_ivf_pq_index_lifecycle_and_validation(spark, pq_index, tmp_path, clustered):
