@@ -71,31 +71,17 @@ def shingle_hashes_from_tokens(token_hash_arr: Column, n: int = 3) -> Column:
     )
 
 
-def minhash_signature(shingle_arr: Column, num_hashes: int = 64) -> Column:
-    """array<long> of ``num_hashes`` minima: min over shingles of
-    xxhash64(shingle, seed). Empty input → MAX_LONG sentinels.
+def minhash_signature_from_hashes(hash_arr: Column, num_hashes: int = 64) -> Column:
+    """array<long> of ``num_hashes`` minima over PRE-HASHED shingles
+    (array<long> from ``shingle_hashes_from_tokens``): slot i is the min
+    over shingles of ``xxhash64(h, i)``. Empty input → MAX_LONG
+    sentinels.
 
-    Single-pass fold: one traversal of the shingle array updating a
+    Single-pass fold: one traversal of the hash array updating a
     ``num_hashes``-wide accumulator (zip_with least). Equivalent to — and
     measured ~15% faster than — ``num_hashes`` separate
     ``array_min(transform(...))`` passes: higher-order functions evaluate
-    interpreted (outside codegen), so traversal count is what matters.
-
-    Each shingle STRING is hashed exactly once up front; the per-slot
-    family is ``xxhash64(h, seed)`` over that 8-byte pre-hash — the same
-    pseudo-random family (modulo a negligible 2^-64 pre-hash collision)
-    at 1/64th of the hashed input bytes (measured ~10% on the sf0.1
-    signature job; the rest of the cost is interpreted-HOF overhead,
-    not hash input width).
-    """
-    hashed = F.transform(shingle_arr, lambda s: F.xxhash64(s))
-    return minhash_signature_from_hashes(hashed, num_hashes)
-
-
-def minhash_signature_from_hashes(hash_arr: Column, num_hashes: int = 64) -> Column:
-    """``minhash_signature`` over PRE-HASHED shingles (array<long> from
-    ``shingle_hashes_from_tokens``): the per-slot family is
-    ``xxhash64(h, seed)`` directly — no per-shingle string pre-hash."""
+    interpreted (outside codegen), so traversal count is what matters."""
     seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
     init = F.array_repeat(F.lit(2**63 - 1), num_hashes)
     return F.aggregate(
@@ -177,13 +163,6 @@ def token_hashes(text: Column | str) -> Column:
     select before feeding simhash64_from_hashes — inlined into the 64
     bit-vote aggregates it would be recomputed per bit."""
     return F.transform(tokens(normalized_text(text)), lambda t: F.xxhash64(t))
-
-
-def simhash64(text: Column | str) -> Column:
-    """64-bit SimHash of the token multiset (convenience form; for the
-    hot path use token_hashes + simhash64_from_hashes across a projection
-    boundary)."""
-    return simhash64_from_hashes(token_hashes(text))
 
 
 def simhash64_from_hashes(hs: Column) -> Column:

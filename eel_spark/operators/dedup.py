@@ -8,6 +8,18 @@ The scale invariant across all of them: **all-pairs comparison only ever
 happens inside an LSH/band bucket**, never globally — candidate-pair count
 is bounded by bucket sizes, and every stage is a DataFrame op (shuffles on
 band keys, no driver-side state, no Python in the hot path).
+
+One LSH pair stage, band → bucket pairs → verify, written once as the
+private helpers below and shared by the batch operators and the
+full-history streaming sinks (``streaming/streams.py``):
+``_minhash_table`` and ``_jaccard_verified`` (every MinHash path),
+``_simhash_fingerprints`` and ``_simhash_banded`` (SimHash batch and
+text sink), ``_bucket_pairs`` (every self-join over band buckets),
+``_hamming_pairs`` (SimHash batch and both sinks) and
+``_check_pigeonhole`` (every Hamming-verified path). Kept apart on
+purpose: the cross-corpus MinHash join caps each side's bucket on its
+own (``joins._capped_bucket_join`` caps the combined population), and
+semdedup keeps its cell join.
 """
 
 from __future__ import annotations
@@ -52,35 +64,25 @@ def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.join(survivors.select(id_col), on=id_col, how="left_semi")
 
 
-def _shingle_sig_tables(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int,
-    num_hashes: int,
-    pinned: bool,
-) -> tuple[DataFrame, DataFrame]:
-    """(id, shingle-hashes) and (id, sig) tables — the shared front of
-    every minhash path (self- and cross-corpus). Shingles are 64-bit
-    hashes, not strings (``hashes.shingle_hashes_from_tokens`` — the
-    string front cost 2.5× as much and rode every downstream shuffle);
-    each array is projected through its own select boundary FIRST:
-    inlining a referenced-again HOF expression makes Catalyst
-    re-evaluate it per consumer slot (measured 20× slower at sf0.01 for
-    shingles-in-signature, 4× for token-hashes-in-shingles).
-    ``pinned`` tracks both through caching.pin for multi-branch plans."""
-    from eel_spark.caching import pin
-
+def _minhash_table(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int, num_hashes: int
+) -> DataFrame:
+    """(id, __sh, sig): distinct n-shingle hashes and their MinHash
+    signature per doc — the one table every minhash path bands and
+    verifies. Shingles are 64-bit hashes, not strings
+    (``hashes.shingle_hashes_from_tokens`` — the string front cost 2.5×
+    as much and rode every downstream shuffle); each array is projected
+    through its own select boundary FIRST: inlining a referenced-again
+    HOF expression makes Catalyst re-evaluate it per consumer slot
+    (measured 20× slower at sf0.01 for shingles-in-signature, 4× for
+    token-hashes-in-shingles). Unpinned: a caller that feeds several
+    plan branches from it pins it (``caching.pin``)."""
     shingled = _shingle_hash_table(df, text_col, id_col, shingle_n)
-    if pinned:
-        shingled = pin(shingled)
-    sig_tbl = shingled.select(
+    return shingled.select(
         id_col,
+        "__sh",
         hashes.minhash_signature_from_hashes(F.col("__sh"), num_hashes).alias("sig"),
     )
-    if pinned:
-        sig_tbl = pin(sig_tbl)
-    return shingled, sig_tbl
 
 
 def _shingle_hash_table(
@@ -125,7 +127,8 @@ def _bucket_pairs(
 ) -> DataFrame:
     """(``__a``, ``__b``) member pairs within each (band, key) bucket of
     a banded table, via ONE aggregation — the shared candidate stage of
-    every LSH family (minhash / simhash / embedding).
+    every LSH self-join (minhash / simhash / embedding, and through
+    ``_hamming_pairs`` the streaming sinks' within-wave pairs).
 
     groupBy(band, key) → collect_list shuffles the banded rows once; the
     bucket cap is a size() filter on the aggregated row (identical
@@ -143,7 +146,10 @@ def _bucket_pairs(
     Σ|bucket|² pairs without per-row buffering (members are unique per
     bucket — one banded row per (band, doc) — so a<b yields the same
     pair set in the same orientation: struct comparison and array_sort
-    both order field-by-field)."""
+    both order field-by-field). An id repeated in one frame with two
+    different payloads (a streaming wave can carry one) is two members,
+    so struct members may also pair it with itself as (x, x); such a
+    self-pair joins no two components and changes no survivor."""
     member = (
         F.struct(*[F.col(c) for c in member_cols])
         if len(member_cols) > 1
@@ -165,7 +171,7 @@ def _bucket_pairs(
     buckets = buckets.filter(F.size("__ids") <= max_bucket_size)
     # sorted members behind their own projection boundary: array_sort
     # inlined into the downstream explodes would re-sort per element (the
-    # re-evaluation trap _shingle_sig_tables documents)
+    # re-evaluation trap _minhash_table documents)
     buckets = buckets.select(F.array_sort("__ids").alias("__ids"))
     ids = F.col("__ids")
     n = F.size("__ids")
@@ -205,35 +211,42 @@ def _band_pairs(
     )
 
 
-def _candidates_from_sigs(
-    sig_tbl: DataFrame,
+def _jaccard_verified(
+    pairs: DataFrame,
+    tbl_a: DataFrame,
+    tbl_b: DataFrame,
     id_col: str,
-    num_hashes: int,
-    bands: int,
-    max_bucket_size: int | None = None,
+    a: str,
+    b: str,
+    threshold: float,
 ) -> DataFrame:
-    """Band-join candidate pairs from a (id, sig) table, with estimated
-    Jaccard from the rejoined signatures.
-
-    ``max_bucket_size`` caps pathological buckets: band-join work is
-    Σ|bucket|² — one bucket of verbatim duplicates can dominate the whole
-    job (measured 15× on an 8×-replica corpus). Buckets above the cap are
-    skipped; their members are near-certain *exact* duplicates, which
-    dedup_exact handles at Σ|bucket| cost — run it first (the documented
-    pipeline order in queries/pipeline.py).
-    """
-    pairs = _band_pairs(sig_tbl, id_col, num_hashes, bands, max_bucket_size)
-    # signatures rejoin only for the (bounded) candidate set
-    sig_a = sig_tbl.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sig_b = sig_tbl.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
+    """(a, b, est_jaccard, jaccard) for the candidate ``pairs`` whose
+    EXACT shingle Jaccard is ≥ ``threshold`` — the verify stage of every
+    minhash path. Each side's (__sh, sig) rejoins once from its
+    ``_minhash_table``, and only for the (bounded) candidate set: one
+    combined rejoin per side, so two candidate joins, not four."""
+    side_a = tbl_a.select(
+        F.col(id_col).alias(a),
+        F.col("__sh").alias("__sh_a"),
+        F.col("sig").alias("__sig_a"),
+    )
+    side_b = tbl_b.select(
+        F.col(id_col).alias(b),
+        F.col("__sh").alias("__sh_b"),
+        F.col("sig").alias("__sig_b"),
+    )
     return (
-        pairs.join(sig_a, "id_a")
-        .join(sig_b, "id_b")
+        pairs.join(side_a, a)
+        .join(side_b, b)
         .select(
-            "id_a",
-            "id_b",
-            hashes.estimated_jaccard(F.col("sig_a"), F.col("sig_b")).alias("est_jaccard"),
+            a,
+            b,
+            hashes.estimated_jaccard(F.col("__sig_a"), F.col("__sig_b")).alias(
+                "est_jaccard"
+            ),
+            hashes.jaccard(F.col("__sh_a"), F.col("__sh_b")).alias("jaccard"),
         )
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -254,13 +267,31 @@ def minhash_candidates(
     sizes, not n². ``bands``/``num_hashes`` set the similarity threshold
     s ≈ (1/bands)^(bands/num_hashes).
 
-    Shingle/signature construction is shared with every other minhash
-    path (``_shingle_sig_tables``).
+    ``max_bucket_size`` caps pathological buckets: band-join work is
+    Σ|bucket|² — one bucket of verbatim duplicates can dominate the whole
+    job (measured 15× on an 8×-replica corpus). Buckets above the cap are
+    skipped; their members are near-certain *exact* duplicates, which
+    dedup_exact handles at Σ|bucket| cost — run it first (the documented
+    pipeline order in queries/pipeline.py).
+
+    The signature table is every minhash path's (``_minhash_table``);
+    only its (id, sig) columns are read here, so the shingle arrays are
+    pruned from the plan.
     """
-    _, sig_tbl = _shingle_sig_tables(
-        df, text_col, id_col, shingle_n, num_hashes, pinned=False
+    tbl = _minhash_table(df, text_col, id_col, shingle_n, num_hashes)
+    pairs = _band_pairs(tbl, id_col, num_hashes, bands, max_bucket_size)
+    # signatures rejoin only for the (bounded) candidate set
+    sig_a = tbl.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
+    sig_b = tbl.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
+    return (
+        pairs.join(sig_a, "id_a")
+        .join(sig_b, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            hashes.estimated_jaccard(F.col("sig_a"), F.col("sig_b")).alias("est_jaccard"),
+        )
     )
-    return _candidates_from_sigs(sig_tbl, id_col, num_hashes, bands, max_bucket_size)
 
 
 def minhash_near_duplicates(
@@ -276,61 +307,27 @@ def minhash_near_duplicates(
     """Near-dup pairs verified by *exact* n-gram Jaccard ≥ threshold.
 
     Verification joins the shingle sets back only for LSH candidates —
-    the expensive exact Jaccard runs on a bounded pair set.
+    the expensive exact Jaccard runs on a bounded pair set
+    (``_jaccard_verified``).
 
     ONE pinned (id, shingles, sig) table feeds every branch (band join
-    + one combined rejoin per pair side): the r9 layout pinned shingles
-    and signatures separately and rejoined each separately — four
-    candidate joins where two suffice. Fusing them halves the rejoin
-    count and the AQE job count of the collect (measured 41 → 29
+    + one combined rejoin per pair side); the r9 layout pinned shingles
+    and signatures separately and rejoined each separately, and fusing
+    them halved the AQE job count of the collect (measured 41 → 29
     stages, ~0.4 s of pure scheduling overhead on the sf0.1 bench slot
-    — r11 verdict #5). The pin boundary still guarantees shingling
-    computes once (recomputing it per branch dominates runtime); the
-    table is O(corpus) narrow rows — at 100 TB you'd stage it to a
-    table; MEMORY_AND_DISK is the single-job equivalent. The cache is
-    freed by ``caching.release_pins()`` — which the query registry
-    invokes on the next query build — not by waiting on GC (cached
-    plans are held by the CacheManager until an explicit unpersist).
+    — r11 verdict #5). The pin boundary guarantees shingling computes
+    once (recomputing it per branch dominates runtime); the table is
+    O(corpus) narrow rows — at 100 TB you'd stage it to a table;
+    MEMORY_AND_DISK is the single-job equivalent. The cache is freed by
+    ``caching.release_pins()`` — which the query registry invokes on the
+    next query build — not by waiting on GC (cached plans are held by
+    the CacheManager until an explicit unpersist).
     """
     from eel_spark.caching import pin
 
-    # shingle hashes in their own projection FIRST (the
-    # _shingle_sig_tables caveat): referenced twice and non-cheap, so
-    # CollapseProject keeps the boundary and the array is built once
-    shingled = _shingle_hash_table(df, text_col, id_col, shingle_n)
-    combined = pin(
-        shingled.select(
-            id_col,
-            "__sh",
-            hashes.minhash_signature_from_hashes(F.col("__sh"), num_hashes).alias(
-                "sig"
-            ),
-        )
-    )
-    pairs = _band_pairs(combined, id_col, num_hashes, bands, max_bucket_size)
-    a = combined.select(
-        F.col(id_col).alias("id_a"),
-        F.col("__sh").alias("sh_a"),
-        F.col("sig").alias("sig_a"),
-    )
-    b = combined.select(
-        F.col(id_col).alias("id_b"),
-        F.col("__sh").alias("sh_b"),
-        F.col("sig").alias("sig_b"),
-    )
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            hashes.estimated_jaccard(F.col("sig_a"), F.col("sig_b")).alias(
-                "est_jaccard"
-            ),
-            hashes.jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    tbl = pin(_minhash_table(df, text_col, id_col, shingle_n, num_hashes))
+    pairs = _band_pairs(tbl, id_col, num_hashes, bands, max_bucket_size)
+    return _jaccard_verified(pairs, tbl, tbl, id_col, "id_a", "id_b", threshold)
 
 
 def minhash_near_duplicates_against(
@@ -360,25 +357,15 @@ def minhash_near_duplicates_against(
     Bucket caps apply per side before the join (a verbatim-dup flood in
     either corpus otherwise multiplies the other side's bucket).
 
-    Each side pins ONE combined (id, shingles, sig) table and rejoins
-    once — the same two-joins-not-four fusion as the self variant (r12).
+    Each side pins ONE ``_minhash_table`` and rejoins once through
+    ``_jaccard_verified`` — the same verify stage as the self variant.
     """
     from eel_spark.caching import pin
 
-    def combined_side(side: DataFrame) -> DataFrame:
-        shingled = _shingle_hash_table(side, text_col, id_col, shingle_n)
-        return pin(
-            shingled.select(
-                id_col,
-                "__sh",
-                hashes.minhash_signature_from_hashes(F.col("__sh"), num_hashes).alias(
-                    "sig"
-                ),
-            )
-        )
-
-    new_tbl = combined_side(df)
-    ref_tbl = combined_side(reference)
+    new_tbl = pin(_minhash_table(df, text_col, id_col, shingle_n, num_hashes))
+    ref_tbl = pin(
+        _minhash_table(reference, text_col, id_col, shingle_n, num_hashes)
+    )
 
     # each side's bucket cap fused into its (band, key) aggregation (the
     # _bucket_pairs layout, two-sided): the bucket-list join replaces the
@@ -401,28 +388,8 @@ def minhash_near_duplicates_against(
         .select("id_new", F.explode("__id_refs").alias("id_ref"))
         .distinct()
     )
-    a = new_tbl.select(
-        F.col(id_col).alias("id_new"),
-        F.col("__sh").alias("sh_n"),
-        F.col("sig").alias("sig_n"),
-    )
-    b = ref_tbl.select(
-        F.col(id_col).alias("id_ref"),
-        F.col("__sh").alias("sh_r"),
-        F.col("sig").alias("sig_r"),
-    )
-    return (
-        pairs.join(a, "id_new")
-        .join(b, "id_ref")
-        .select(
-            "id_new",
-            "id_ref",
-            hashes.estimated_jaccard(F.col("sig_n"), F.col("sig_r")).alias(
-                "est_jaccard"
-            ),
-            hashes.jaccard(F.col("sh_n"), F.col("sh_r")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return _jaccard_verified(
+        pairs, new_tbl, ref_tbl, id_col, "id_new", "id_ref", threshold
     )
 
 
@@ -443,6 +410,68 @@ def dedup_against(
     return df.join(flagged, id_col, "left_anti")
 
 
+def _check_pigeonhole(max_hamming: int, n_bands: int) -> None:
+    """Reject a Hamming bound the banding cannot recall: two
+    fingerprints within Hamming ``n_bands - 1`` MUST share at least one
+    identical band chunk (pigeonhole); farther pairs collide only by
+    luck, so ``max_hamming > n_bands - 1`` would silently miss pairs.
+    Checked by every Hamming-verified LSH path before it builds a
+    plan."""
+    if max_hamming > n_bands - 1:
+        raise ValueError(
+            f"max_hamming={max_hamming} exceeds the pigeonhole recall bound "
+            f"{n_bands - 1} (= {n_bands} bands - 1); use at least "
+            f"{max_hamming + 1} bands or lower max_hamming"
+        )
+
+
+def _simhash_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, fp): the 64-bit SimHash of each doc's tokens. Token hashes
+    project through their own select first, then 64 bit-votes run over
+    the stored array (the projection-boundary rule of
+    ``_minhash_table``)."""
+    return df.select(
+        F.col(id_col), hashes.token_hashes(text_col).alias("__th")
+    ).select(F.col(id_col), hashes.simhash64_from_hashes(F.col("__th")).alias("fp"))
+
+
+def _simhash_banded(fp: DataFrame, id_col: str, bands: int) -> DataFrame:
+    """(id, fp, band, key): one row per ``bands`` chunk of each 64-bit
+    fingerprint — the banded frame ``_hamming_pairs`` self-joins, and
+    the text sink's history side-table rows."""
+    return fp.select(
+        id_col, "fp", F.explode(hashes.simhash_bands(F.col("fp"), bands)).alias("b")
+    ).select(id_col, "fp", F.col("b.band").alias("band"), F.col("b.key").alias("key"))
+
+
+def _hamming_pairs(
+    banded: DataFrame,
+    id_col: str,
+    ham_fn,
+    max_hamming: int,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """(id_a, id_b, hamming ≤ ``max_hamming``) from a banded (id, fp,
+    band, key) frame: ``_bucket_pairs`` over (id, fp) members, then the
+    exact ``ham_fn(fp_a, fp_b)`` verify. Fingerprints ride the bucket
+    members, so candidate pairs emerge with both fps attached — no
+    rejoin; id first in the member struct keeps id_a < id_b structural.
+    Within the pigeonhole bound the result is EXACTLY the brute-force
+    pair set (modulo ``max_bucket_size`` capping)."""
+    return (
+        _bucket_pairs(banded, [id_col, "fp"], max_bucket_size)
+        .select(
+            F.col(f"__a.{id_col}").alias("id_a"),
+            F.col(f"__b.{id_col}").alias("id_b"),
+            F.col("__a.fp").alias("fp_a"),
+            F.col("__b.fp").alias("fp_b"),
+        )
+        .distinct()
+        .select("id_a", "id_b", ham_fn(F.col("fp_a"), F.col("fp_b")).alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
 def simhash_near_duplicates(
     df: DataFrame,
     text_col: str,
@@ -456,25 +485,15 @@ def simhash_near_duplicates(
     Recall guarantee is the pigeonhole bound: two fingerprints within
     hamming distance ``bands - 1`` MUST share at least one exact band
     chunk. ``max_hamming > bands - 1`` would silently miss pairs (they
-    collide only by luck), so it is rejected here — pick bands ≥
-    max_hamming + 1 (64 must stay divisible by bands: 2/4/8/16/32).
+    collide only by luck), so it is rejected here, before ``df`` is
+    touched — pick bands ≥ max_hamming + 1 (64 must stay divisible by
+    bands: 2/4/8/16/32).
     """
-    if max_hamming > bands - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the pigeonhole recall bound "
-            f"bands-1={bands - 1}; use bands >= {max_hamming + 1} "
-            "(a divisor of 64) or lower max_hamming"
-        )
-    # token hashes projected once, then 64 bit-votes over the stored array
-    # (same projection-boundary trick as minhash_candidates)
-    fp = ensure_parallelism(df).select(
-        F.col(id_col), hashes.token_hashes(text_col).alias("__th")
-    ).select(
-        F.col(id_col), hashes.simhash64_from_hashes(F.col("__th")).alias("fp")
-    )
+    _check_pigeonhole(max_hamming, bands)
+    fp = _simhash_fingerprints(ensure_parallelism(df), text_col, id_col)
     return simhash_pairs_from_fingerprints(
         fp, id_col, max_hamming=max_hamming, bands=bands,
-        max_bucket_size=max_bucket_size, _checked=True,
+        max_bucket_size=max_bucket_size,
     )
 
 
@@ -484,44 +503,21 @@ def simhash_pairs_from_fingerprints(
     max_hamming: int = 3,
     bands: int = 4,
     max_bucket_size: int | None = None,
-    _checked: bool = False,
 ) -> DataFrame:
     """Near-dup pairs from PRE-COMPUTED 64-bit fingerprints in column
-    ``fp``: band equi-join → exact hamming verify — the LSH core of
+    ``fp``: ``_simhash_banded`` → ``_hamming_pairs`` (band self-join →
+    exact hamming verify) — the LSH core of
     :func:`simhash_near_duplicates`, exposed for callers that sketch
     outside this module (external fingerprint pipelines, the oracle-
-    verified registry query, the streaming sinks' band functions).
-    Within the pigeonhole bound (``max_hamming ≤ bands - 1``) the
-    result is EXACTLY the hamming-≤-``max_hamming`` pair set of the
-    brute-force cross product (modulo ``max_bucket_size`` capping)."""
-    if not _checked and max_hamming > bands - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the pigeonhole recall bound "
-            f"bands-1={bands - 1}; use bands >= {max_hamming + 1} "
-            "(a divisor of 64) or lower max_hamming"
-        )
-    banded = fp.select(
-        id_col, "fp", F.explode(hashes.simhash_bands(F.col("fp"), bands)).alias("b")
-    ).select(id_col, "fp", F.col("b.band").alias("band"), F.col("b.key").alias("key"))
-    # fingerprints ride the bucket members (one long each), so candidate
-    # pairs emerge with both fps attached — no rejoin; the _bucket_pairs
-    # fusion replaces the former cap anti-join + band self-join (id first
-    # in the member struct keeps id_a < id_b structural)
-    return (
-        _bucket_pairs(banded, [id_col, "fp"], max_bucket_size)
-        .select(
-            F.col(f"__a.{id_col}").alias("id_a"),
-            F.col(f"__b.{id_col}").alias("id_b"),
-            F.col("__a.fp").alias("fp_a"),
-            F.col("__b.fp").alias("fp_b"),
-        )
-        .distinct()
-        .select(
-            "id_a",
-            "id_b",
-            hashes.hamming64(F.col("fp_a"), F.col("fp_b")).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    verified registry query). The streaming text sink runs the same two
+    helpers, uncapped. Within the pigeonhole bound (``max_hamming ≤
+    bands - 1``) the result is EXACTLY the hamming-≤-``max_hamming``
+    pair set of the brute-force cross product (modulo
+    ``max_bucket_size`` capping)."""
+    _check_pigeonhole(max_hamming, bands)
+    return _hamming_pairs(
+        _simhash_banded(fp, id_col, bands), id_col, hashes.hamming64,
+        max_hamming, max_bucket_size,
     )
 
 

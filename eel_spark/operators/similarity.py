@@ -780,18 +780,14 @@ def encode_pq(
     n_subs: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Compress each vector to ``n_subs`` bytes: (id, codes array<tinyint>)
     where codes[s] is the nearest codebook entry of subspace s. A 100 TB
     float32 corpus at dim=64/n_subs=8 becomes a ~3 TB code table — the
-    table ``pq_topk`` scans. One broadcast join, no shuffle. ``keep``
-    carries extra columns through (e.g. cell_id for the IVF-PQ layout)."""
-    base = vectors_df.select(
-        F.col(id_col), F.col(vec_col), *[F.col(c) for c in keep]
-    )
+    table ``pq_topk`` scans. One broadcast join, no shuffle."""
+    base = vectors_df.select(F.col(id_col), F.col(vec_col))
     return _with_pq_codes(base, books, vec_col, dim, n_subs).select(
-        F.col(id_col), "codes", *[F.col(c) for c in keep]
+        F.col(id_col), "codes"
     )
 
 
@@ -957,6 +953,20 @@ def _ivf_kps(cells) -> list[int]:
     return sorted({int(c) % _IVF_KP for c in cells})
 
 
+def _index_dim(centroids: DataFrame) -> int:
+    """The index's dimension: its centroids' length — a one-row driver
+    probe (the bq_topk convention)."""
+    return centroids.select(F.size("centroid").alias("d")).first()["d"]
+
+
+def _pq_n_subs(books: DataFrame | None) -> int | None:
+    """The PQ books' subspace count — a one-row driver probe; None for
+    an index without books."""
+    if books is None:
+        return None
+    return books.select(F.countDistinct("sub_id").alias("n")).first()["n"]
+
+
 def init_ivf_index(
     path: str, centroids: DataFrame, pq_books: DataFrame | None = None
 ) -> None:
@@ -987,7 +997,7 @@ def init_ivf_index(
     # centroids (read_ivf_pq_books refuses such orphans too)
     ops.delete(f"{root}/pq_books", recursive=True)
     if pq_books is not None:
-        dim = centroids.select(F.size("centroid").alias("d")).first()["d"]
+        dim = _index_dim(centroids)
         shape = pq_books.agg(
             F.countDistinct("sub_id").alias("n_subs"),
             F.min(F.size("centroid")).alias("lo"),
@@ -1110,7 +1120,7 @@ def append_ivf_batch(
     # (the bq_topk convention); packed sign sketches ride along in the
     # postings (1/32 the vector bytes) so ivf_bq_topk_against_index can
     # Hamming-prefilter inside probed cells without a second store
-    dim = centroids.select(F.size("centroid").alias("d")).first()["d"]
+    dim = _index_dim(centroids)
     mark = pins_mark()
     try:
         assigned = pin(
@@ -1146,10 +1156,7 @@ def append_ivf_batch(
         cols = ["id", "vec", "sig", "cell_id", "__cell_kp"]
         books = read_ivf_pq_books(spark, path)
         if books is not None:
-            n_subs = books.select(
-                F.countDistinct("sub_id").alias("n")
-            ).first()["n"]
-            post = _with_pq_codes(post, books, "vec", dim, n_subs)
+            post = _with_pq_codes(post, books, "vec", dim, _pq_n_subs(books))
             cols.insert(3, "codes")
         commit_batch(
             post.select(*cols)
@@ -1273,7 +1280,7 @@ def _serve_prefiltered(
         spark, path, queries_df, query_id_col, vec_col, n_probe
     )
     if dim is None:
-        dim = centroids.select(F.size("centroid").alias("d")).first()["d"]
+        dim = _index_dim(centroids)
     cands = scan(probes, cells, dim)
     return _exact_rerank(
         read_ivf_postings(spark, path, cells=cells).select("id", "vec"),
@@ -1398,7 +1405,7 @@ def ivf_pq_topk_against_index(
                 f"index at {path} was initialized without PQ codebooks — "
                 "init a new index with pq_books= to use the ADC-scan path"
             )
-        n_subs = books.select(F.countDistinct("sub_id").alias("n")).first()["n"]
+        n_subs = _pq_n_subs(books)
         postings = read_ivf_postings(spark, path, cells=cells, with_codes=True)
         return _adc_candidates(
             probes, ensure_parallelism(postings), books, dim, n_subs,
@@ -1498,9 +1505,7 @@ def compact_ivf_index(spark, path: str) -> None:
     rewritten, so after compaction the degraded-legacy class is GONE
     and the BQ/ADC paths rank every row at full fidelity."""
     store = f"{path.rstrip('/')}/postings"
-    dim = read_ivf_centroids(spark, path).select(
-        F.size("centroid").alias("d")
-    ).first()["d"]
+    dim = _index_dim(read_ivf_centroids(spark, path))
     books = read_ivf_pq_books(spark, path)
     # mergeSchema: a mixed pre-/post-sketch store must not lose the sig
     # column to a schema-inference coin flip — merged, legacy rows read
@@ -1514,7 +1519,7 @@ def compact_ivf_index(spark, path: str) -> None:
     )
     _compact_to_sentinel(
         store,
-        _backfill_postings(raw, dim, books).select(*keep),
+        _backfill_postings(raw, dim, books, _pq_n_subs(books)).select(*keep),
         "__src_batch",
         ("__src_batch", "__cell_kp"),
         lambda df: df.repartition("__cell_kp")
@@ -1523,20 +1528,18 @@ def compact_ivf_index(spark, path: str) -> None:
 
 
 def _backfill_postings(
-    raw: DataFrame, dim: int, books: DataFrame | None
+    raw: DataFrame, dim: int, books: DataFrame | None, n_subs: int | None
 ) -> DataFrame:
     """Fill derived posting columns from the stored vectors: ``sig``
     where NULL or absent, and (on a books-bearing index) ``codes`` where
     NULL — shared by ``compact_ivf_index`` and ``reindex_ivf_index`` so
-    every store rewrite leaves zero degraded-legacy rows."""
+    every store rewrite leaves zero degraded-legacy rows. ``n_subs`` is
+    the caller's ``_pq_n_subs(books)``."""
     sig = vectors.pack_sign_bits(F.col("vec"), dim)
     out = raw.withColumn(
         "sig", F.coalesce(F.col("sig"), sig) if "sig" in raw.columns else sig
     )
     if books is not None:
-        n_subs = books.select(
-            F.countDistinct("sub_id").alias("n")
-        ).first()["n"]
         out = _with_pq_codes(out, books, "vec", dim, n_subs, out="__bf_codes")
         out = out.withColumn(
             "codes",
@@ -1608,7 +1611,7 @@ def reindex_ivf_index(
     ops = HdfsOps(spark)
     root = path.rstrip("/")
     old_cents = read_ivf_centroids(spark, path)
-    dim = old_cents.select(F.size("centroid").alias("d")).first()["d"]
+    dim = _index_dim(old_cents)
     books = read_ivf_pq_books(spark, path)
     if centroids is None:
         cells = int(n_cells) if n_cells is not None else old_cents.count()
@@ -1650,7 +1653,7 @@ def reindex_ivf_index(
         raw = spark.read.option("mergeSchema", "true").parquet(
             f"{root}/postings"
         )
-        filled = _backfill_postings(raw, dim, books)
+        filled = _backfill_postings(raw, dim, books, _pq_n_subs(books))
         keep = (
             ["id", "vec", "sig"]
             + (["codes"] if books is not None else [])

@@ -642,8 +642,9 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str):
     from the same deterministic fingerprints (twins planted ≤ 3 bit
     flips apart). One hash-mismatch ⇒ a recall OR precision hole in
     the banding. The text fingerprinting path (token_hashes →
-    simhash64) keeps its planted-recall coverage in tests/test_dedup.py;
-    this slot verifies the LSH machinery itself, exactly."""
+    simhash64_from_hashes) keeps its planted-recall coverage in
+    tests/test_dedup.py; this slot verifies the LSH machinery itself,
+    exactly."""
     docs = table(spark, sf_dir, "documents").df
     fp = _deterministic_fingerprints(docs)
     pairs = dedup.simhash_pairs_from_fingerprints(

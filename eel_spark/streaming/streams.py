@@ -590,12 +590,15 @@ def incremental_near_dedup_sink(
     survivor ever admitted, with no watermark horizon.
 
     Per micro-batch (foreachBatch): simhash-fingerprint the batch →
-    intra-batch near-dedup (band equi-join + hamming verify + min-id
-    component survivor — identical semantics to the batch
-    ``simhash_near_duplicates`` + ``survivors_from_pairs`` pipeline) →
-    band-join the remainder against the accumulated survivor table and
-    drop anything within ``max_hamming`` of an existing survivor → append
+    intra-batch near-dedup (band self-join + hamming verify + min-id
+    component survivor — the batch ``simhash_near_duplicates`` +
+    ``survivors_from_pairs`` pipeline, run through the same
+    ``operators/dedup`` helpers: ``_simhash_fingerprints``,
+    ``_simhash_banded`` and ``_hamming_pairs``, uncapped) → band-join
+    the remainder against the accumulated survivor table and drop
+    anything within ``max_hamming`` of an existing survivor → append
     the rest under a ``batch_id=N`` partition with dynamic overwrite.
+    The history side-table holds the same ``_simhash_banded`` rows.
 
     Contrast with ``streaming_dedup``: that one bounds state via the
     watermark (a dup arriving after the horizon re-emits); here state is
@@ -611,30 +614,18 @@ def incremental_near_dedup_sink(
     partition and lose the batch).
     """
     from eel_spark.functions import hashes
+    from eel_spark.operators.dedup import (
+        _check_pigeonhole,
+        _simhash_banded,
+        _simhash_fingerprints,
+    )
 
-    if max_hamming > bands - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the pigeonhole recall bound "
-            f"bands-1={bands - 1}; use bands >= {max_hamming + 1}"
-        )
-
-    def fp_fn(batch_df: DataFrame) -> DataFrame:
-        return batch_df.select(
-            F.col(id_col), hashes.token_hashes(text_col).alias("__th")
-        ).select(F.col(id_col), hashes.simhash64_from_hashes("__th").alias("fp"))
-
-    def band_fn(fp_df: DataFrame, ident: str) -> DataFrame:
-        return fp_df.select(
-            F.col(ident),
-            "fp",
-            F.explode(hashes.simhash_bands(F.col("fp"), bands)).alias("b"),
-        ).select(
-            ident, "fp", F.col("b.band").alias("band"), F.col("b.key").alias("key")
-        )
-
+    _check_pigeonhole(max_hamming, bands)
     return _incremental_dedup_sink(
         docs, survivor_path, checkpoint, id_col,
-        fp_fn, band_fn, hashes.hamming64, max_hamming,
+        lambda batch_df: _simhash_fingerprints(batch_df, text_col, id_col),
+        lambda fp_df, ident: _simhash_banded(fp_df, ident, bands),
+        hashes.hamming64, max_hamming,
         maintain_every=maintain_every, maintain_kwargs=maintain_kwargs,
     )
 
@@ -658,18 +649,16 @@ def incremental_embedding_dedup_sink(
     batch_id-partition exactly-once mechanics. Bands are ``bands_per_word``
     chunks of each 64-bit sketch word (pigeonhole: two sketches within
     Hamming n_words·bands_per_word − 1 share a band); candidates verify
-    with the exact word-wise Hamming before dropping."""
+    with the exact word-wise Hamming before dropping. The within-wave
+    pairs come from the batch operators' ``_hamming_pairs`` (uncapped);
+    only the fingerprint and the banding are this sink's own."""
     from eel_spark.functions import vectors as V
+    from eel_spark.operators.dedup import _check_pigeonhole
 
     n_words = (dim + 63) // 64
     if 64 % bands_per_word != 0:
         raise ValueError(f"bands_per_word={bands_per_word} must divide 64")
-    total_bands = n_words * bands_per_word
-    if max_hamming > total_bands - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the pigeonhole recall bound "
-            f"{total_bands - 1} (= words x bands_per_word - 1)"
-        )
+    _check_pigeonhole(max_hamming, n_words * bands_per_word)
     band_bits = 64 // bands_per_word
     mask = (1 << band_bits) - 1 if band_bits < 64 else -1
 
@@ -759,7 +748,13 @@ def _incremental_dedup_sink(
     sinks: fingerprint → intra-batch band-join/verify/component-survivor →
     anti-join vs accumulated survivors → idempotent batch_id-partition
     append. ``fp_fn(batch) → (id, fp)``, ``band_fn(fp_df, ident) →
-    (ident, fp, band, key)``, ``ham_fn(a, b) → Column``.
+    (ident, fp, band, key)``, ``ham_fn(a, b) → Column``. The intra-batch
+    pairs are ``operators.dedup._hamming_pairs`` over ``band_fn``'s
+    frame, uncapped: the batch operators' band self-join and Hamming
+    verify, not a copy of them. A struct (id, fp) member orders on id
+    first, so pairs keep id_a < id_b, except that an id repeated in one
+    wave with two different fingerprints can pair with itself as (x, x);
+    that self-pair changes no survivor.
 
     History layout (the per-batch scan-cost lever): alongside the
     user-facing survivor table (one row per admitted id, partitioned by
@@ -782,7 +777,7 @@ def _incremental_dedup_sink(
     pass — silently skipping the history anti-join would re-admit
     near-duplicates of every pre-upgrade survivor.
     """
-    from eel_spark.operators.dedup import survivors_from_pairs
+    from eel_spark.operators.dedup import _hamming_pairs, survivors_from_pairs
     from eel_spark.operators.maintenance import (
         _read_store,
         commit_batch,
@@ -819,21 +814,12 @@ def _incremental_dedup_sink(
         fp = surv_pinned = None
         try:
             fp = fp_fn(batch_df).persist()
-            b = band_fn(fp, id_col)
-            left = b.select(
-                F.col(id_col).alias("id_a"), F.col("fp").alias("fp_a"), "band", "key"
-            )
-            right = b.select(
-                F.col(id_col).alias("id_b"), F.col("fp").alias("fp_b"), "band", "key"
-            )
-            pairs = (
-                left.join(right, ["band", "key"])
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b", "fp_a", "fp_b")
-                .distinct()
-                .filter(ham_fn(F.col("fp_a"), F.col("fp_b")) <= max_hamming)
-                .select("id_a", "id_b")
-            )
+            # the batch pair stage, uncapped: a wave's buckets are
+            # bounded by the wave, and dropping an over-cap bucket would
+            # admit its near-duplicates
+            pairs = _hamming_pairs(
+                band_fn(fp, id_col), id_col, ham_fn, max_hamming, None
+            ).select("id_a", "id_b")
             # propagation, explicitly: intra-batch pair graphs are tiny
             # and star-shaped (the case propagation wins), and the star
             # variant's per-round checkpoint + pin tracking would

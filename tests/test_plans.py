@@ -138,6 +138,26 @@ def test_prepare_corpus_semi_join_broadcasts(spark):
         assert marker not in plan
 
 
+@pytest.mark.parametrize(
+    "name", ["anomaly_hourly_events", "q20_promo_part_suppliers"]
+)
+def test_aqe_demotes_initial_sort_merge_joins(spark, name):
+    """The two other slots whose audited plans start with SortMergeJoins
+    (the anomaly back-joins of the grouped median/MAD tables; q20's
+    supplier semi-join on its HAVING aggregate) must run them as
+    broadcast joins once
+    AQE sees runtime sizes — the same executed-plan check as
+    ``test_prepare_corpus_semi_join_broadcasts``."""
+    df = QUERIES[name](spark, SF)
+    df.collect()
+    plan = (
+        df._jdf.queryExecution().executedPlan().toString()
+        .split("== Initial Plan ==")[0]
+    )
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+
+
 def test_ordered_ops_have_no_global_window(spark):
     """take_while / zip_with_index (concat) must not funnel the dataset
     through an unpartitioned window: the prefix boundary is a global-min

@@ -389,6 +389,101 @@ def test_corpus_prep_resumes_from_checkpoint(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
+def _planted_text_rows(seed: int = 11):
+    """A seeded near-dup wave for the incremental text sink (ids ≥ 100,
+    vocabulary disjoint from the tests' ``w{i}x{j}`` docs): three chains
+    whose every link changes one more token of its base doc, and id 100
+    twice — two different one-token edits of chain 0's base, so the
+    repeated id sits inside a component with its own fingerprints."""
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    for c in range(3):
+        toks = [f"p{c}x{j}" for j in range(30)]
+        rows.append((110 + 10 * c, " ".join(toks)))
+        for k in range(1, 3):
+            toks = list(toks)
+            toks[rng.randrange(30)] = f"q{c}y{k}"
+            rows.append((110 + 10 * c + k, " ".join(toks)))
+    for k in range(2):
+        toks = [f"p0x{j}" for j in range(30)]
+        toks[rng.randrange(30)] = f"r{k}"
+        rows.append((100, " ".join(toks)))
+    return rows
+
+
+def _planted_vector_rows(seed: int = 11, dim: int = 64):
+    """The embedding sink's twin of :func:`_planted_text_rows`: three
+    chains of seeded Gaussian vectors whose every link flips the signs
+    of two more dimensions (so chain ends sit beyond a Hamming bound of
+    3), and id 100 twice — chain 0's base with one and with two flipped
+    signs."""
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    for c in range(3):
+        v = [rng.gauss(0.0, 1.0) for _ in range(dim)]
+        rows.append((110 + 10 * c, list(v)))
+        for k in range(1, 3):
+            for d in rng.sample(range(dim), 2):
+                v[d] = -v[d]
+            rows.append((110 + 10 * c + k, list(v)))
+    for flips in (1, 2):
+        v = list(rows[0][1])  # chain 0's base
+        for d in range(flips):
+            v[d] = -v[d]
+        rows.append((100, v))
+    return rows
+
+
+def _assert_wave_survivors_match_union_find(
+    spark, surv_path, rows, schema, id_col, fp_expr, max_hamming
+):
+    """Independent oracle for one wave written into an EMPTY store:
+    fingerprint the wave's rows with Spark, take every pair of rows at
+    Hamming ≤ ``max_hamming`` in Python, union-find their ids, and keep
+    the rows whose id is its component's minimum. The survivor table
+    must hold exactly those (id, fp) rows. Returns the oracle's
+    component sizes."""
+
+    def key(fp):
+        return tuple(fp) if isinstance(fp, list) else fp
+
+    def ham(a, b):
+        words = zip(a, b) if isinstance(a, tuple) else [(a, b)]
+        return sum(bin((x ^ y) & (2**64 - 1)).count("1") for x, y in words)
+
+    fps = [
+        (r[0], key(r[1]))
+        for r in spark.createDataFrame(rows, schema)
+        .select(id_col, fp_expr.alias("fp"))
+        .collect()
+    ]
+    parent = {i: i for i, _ in fps}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for n, (a, fa) in enumerate(fps):
+        for b, fb in fps[n + 1:]:
+            if ham(fa, fb) <= max_hamming:
+                ra, rb = find(a), find(b)
+                parent[max(ra, rb)] = min(ra, rb)
+    want = sorted((i, fp) for i, fp in fps if find(i) == i)
+    got = sorted(
+        (r[id_col], key(r["fp"])) for r in spark.read.parquet(surv_path).collect()
+    )
+    assert got == want
+    sizes = {}
+    for i in parent:
+        sizes[find(i)] = sizes.get(find(i), 0) + 1
+    return sorted(sizes.values(), reverse=True)
+
+
 def test_incremental_near_dedup_across_waves_and_replay(spark, tmp_path):
     """Near-dup suppression with NO watermark horizon: wave 2 arrives in
     a separate micro-batch and must drop (a) a near-dup of a wave-1
@@ -397,7 +492,9 @@ def test_incremental_near_dedup_across_waves_and_replay(spark, tmp_path):
     simulated failure replay (latest commit file deleted, query
     restarted) must leave the survivor table IDENTICAL — the replayed
     batch overwrites its own partition and must not match against its
-    previous attempt's rows."""
+    previous attempt's rows. Wave 1 also carries seeded near-dup chains
+    and a repeated id: its survivors must equal a brute-force union-find
+    over the wave's Hamming pairs."""
     import os
 
     from eel_spark.streaming import incremental_near_dedup_sink
@@ -411,6 +508,7 @@ def test_incremental_near_dedup_across_waves_and_replay(spark, tmp_path):
         return " ".join(toks)
 
     wave1 = [(1, doc(1)), (2, doc(2)), (3, doc(3)), (4, doc(4))]
+    wave1 += _planted_text_rows()
     wave2 = [
         (5, perturb(doc(1))),  # near-dup of wave-1 survivor 1
         (6, doc(6)),           # fresh — must be admitted
@@ -441,14 +539,23 @@ def test_incremental_near_dedup_across_waves_and_replay(spark, tmp_path):
 
     add_wave("w1", wave1)
     run_once()
-    assert {
-        r["doc_id"] for r in spark.read.parquet(surv_path).collect()
-    } == {1, 2, 3, 4}
+    # within-wave dedup of wave 1 (chains, the repeated id) against the
+    # brute-force union-find oracle
+    from eel_spark.functions import hashes
+
+    sizes = _assert_wave_survivors_match_union_find(
+        spark, surv_path, wave1, schema, "doc_id",
+        hashes.simhash64_from_hashes(hashes.token_hashes("text")), 7,
+    )
+    assert sizes[0] >= 3  # a planted chain merged into one component
+    kept = {r["doc_id"] for r in spark.read.parquet(surv_path).collect()}
+    assert kept & {1, 2, 3, 4} == {1, 2, 3, 4} and 100 in kept
+    planted_kept = kept - {1, 2, 3, 4}
 
     add_wave("w2", wave2)
     run_once()
     survivors = spark.read.parquet(surv_path).collect()
-    assert {r["doc_id"] for r in survivors} == {1, 2, 3, 4, 6}
+    assert {r["doc_id"] for r in survivors} == {1, 2, 3, 4, 6} | planted_kept
 
     # simulated mid-commit failure: drop the LATEST commit marker → the
     # restarted query replays that batch from the checkpointed offsets
@@ -461,8 +568,10 @@ def test_incremental_near_dedup_across_waves_and_replay(spark, tmp_path):
         os.remove(crc)
     run_once()
     replayed = spark.read.parquet(surv_path).collect()
-    assert {r["doc_id"] for r in replayed} == {1, 2, 3, 4, 6}
-    assert len(replayed) == 5
+    assert sorted(r["doc_id"] for r in replayed) == sorted(
+        r["doc_id"] for r in survivors
+    )
+    assert {r["doc_id"] for r in replayed} == {1, 2, 3, 4, 6} | planted_kept
 
 
 def test_incremental_dedup_history_read_prunes(spark, tmp_path):
@@ -598,7 +707,9 @@ def test_incremental_embedding_dedup_across_waves(spark, tmp_path):
     sign-identical variant of a wave-1 vector (tiny jitter that flips no
     sign) plus an intra-batch twin, admits the genuinely fresh vector.
     The existing text-sink test covers the replay branch (shared
-    skeleton); this one covers the sketch/banding plumbing."""
+    skeleton); this one covers the sketch/banding plumbing. Wave 1 also
+    carries seeded sign-flip chains and a repeated id, checked against
+    the same union-find oracle as the text sink."""
     import math
 
     from eel_spark.streaming import incremental_embedding_dedup_sink
@@ -609,6 +720,7 @@ def test_incremental_embedding_dedup_across_waves(spark, tmp_path):
         ]
 
     wave1 = [(1, vec(1)), (2, vec(2)), (3, vec(3))]
+    wave1 += _planted_vector_rows()
     wave2 = [
         (4, vec(1, jitter=1.0)),  # same signs as 1 → near-dup, dropped
         (5, vec(9)),              # fresh
@@ -633,11 +745,22 @@ def test_incremental_embedding_dedup_across_waves(spark, tmp_path):
 
     spark.createDataFrame(wave1, schema).coalesce(1).write.parquet(str(in_dir / "w1"))
     run_once()
-    assert {r["vec_id"] for r in spark.read.parquet(surv_path).collect()} == {1, 2, 3}
+    from eel_spark.functions import vectors as V
+
+    sizes = _assert_wave_survivors_match_union_find(
+        spark, surv_path, wave1, schema, "vec_id",
+        V.pack_sign_bits(F.col("embedding"), 64), 3,
+    )
+    assert sizes[0] >= 3  # a planted chain merged into one component
+    kept = {r["vec_id"] for r in spark.read.parquet(surv_path).collect()}
+    assert kept & {1, 2, 3} == {1, 2, 3} and 100 in kept
+    planted_kept = kept - {1, 2, 3}
 
     spark.createDataFrame(wave2, schema).coalesce(1).write.parquet(str(in_dir / "w2"))
     run_once()
-    assert {r["vec_id"] for r in spark.read.parquet(surv_path).collect()} == {1, 2, 3, 5}
+    assert {
+        r["vec_id"] for r in spark.read.parquet(surv_path).collect()
+    } == {1, 2, 3, 5} | planted_kept
 
 
 def test_incremental_embedding_dedup_validation(spark, tmp_path):
