@@ -752,9 +752,8 @@ def _incremental_dedup_sink(
     pairs are ``operators.dedup._hamming_pairs`` over ``band_fn``'s
     frame, uncapped: the batch operators' band self-join and Hamming
     verify, not a copy of them. A struct (id, fp) member orders on id
-    first, so pairs keep id_a < id_b, except that an id repeated in one
-    wave with two different fingerprints can pair with itself as (x, x);
-    that self-pair changes no survivor.
+    first, so pairs keep id_a < id_b (for the one exception, an id
+    repeated within a wave, see ``_bucket_pairs``).
 
     History layout (the per-batch scan-cost lever): alongside the
     user-facing survivor table (one row per admitted id, partitioned by

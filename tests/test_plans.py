@@ -119,21 +119,30 @@ def test_q1_whole_stage_codegen(spark):
     assert found >= 2  # scan+partial-agg stage and final-agg stage
 
 
-def test_prepare_corpus_semi_join_broadcasts(spark):
-    """pipeline_prepare_corpus: the survivor-id semi-join must become a
-    broadcast under AQE (survivor list ≪ corpus at every scale), and the
-    whole pipeline stays Python-free."""
-    df = QUERIES["pipeline_prepare_corpus"](spark, SF)
+def _final_plan_broadcasts(spark, name: str) -> str:
+    """Run slot ``name`` and return its final executed plan, asserting
+    that it broadcasts and holds no SortMergeJoin. AQE's toString
+    appends the pre-runtime "Initial Plan" (where a join may
+    legitimately START as a SortMergeJoin before runtime stats demote
+    it), so only the part before it is graded."""
+    df = QUERIES[name](spark, SF)
     df.collect()
-    # AQE's toString appends the pre-runtime "Initial Plan" (where the
-    # perplexity vocab join legitimately STARTS as a SortMergeJoin before
-    # runtime stats demote it) — grade only the final executed plan
     plan = (
         df._jdf.queryExecution().executedPlan().toString()
         .split("== Initial Plan ==")[0]
     )
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
+    assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+    return plan
+
+
+def test_prepare_corpus_semi_join_broadcasts(spark):
+    """pipeline_prepare_corpus: the survivor-id semi-join must become a
+    broadcast under AQE (survivor list ≪ corpus at every scale), and the
+    whole pipeline stays Python-free. The perplexity vocab join starts
+    as a SortMergeJoin in the initial plan."""
+    plan = _final_plan_broadcasts(spark, "pipeline_prepare_corpus")
+    assert "LeftSemi" in plan
     for marker in ("BatchEvalPython", "ArrowEvalPython"):
         assert marker not in plan
 
@@ -145,17 +154,8 @@ def test_aqe_demotes_initial_sort_merge_joins(spark, name):
     """The two other slots whose audited plans start with SortMergeJoins
     (the anomaly back-joins of the grouped median/MAD tables; q20's
     supplier semi-join on its HAVING aggregate) must run them as
-    broadcast joins once
-    AQE sees runtime sizes — the same executed-plan check as
-    ``test_prepare_corpus_semi_join_broadcasts``."""
-    df = QUERIES[name](spark, SF)
-    df.collect()
-    plan = (
-        df._jdf.queryExecution().executedPlan().toString()
-        .split("== Initial Plan ==")[0]
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    broadcast joins once AQE sees runtime sizes."""
+    _final_plan_broadcasts(spark, name)
 
 
 def test_ordered_ops_have_no_global_window(spark):

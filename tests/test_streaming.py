@@ -548,7 +548,9 @@ def test_incremental_near_dedup_across_waves_and_replay(spark, tmp_path):
         hashes.simhash64_from_hashes(hashes.token_hashes("text")), 7,
     )
     assert sizes[0] >= 3  # a planted chain merged into one component
-    kept = {r["doc_id"] for r in spark.read.parquet(surv_path).collect()}
+    wave1_rows = spark.read.parquet(surv_path).collect()
+    n1 = len(wave1_rows)  # fixed exactly by the oracle above
+    kept = {r["doc_id"] for r in wave1_rows}
     assert kept & {1, 2, 3, 4} == {1, 2, 3, 4} and 100 in kept
     planted_kept = kept - {1, 2, 3, 4}
 
@@ -556,6 +558,7 @@ def test_incremental_near_dedup_across_waves_and_replay(spark, tmp_path):
     run_once()
     survivors = spark.read.parquet(surv_path).collect()
     assert {r["doc_id"] for r in survivors} == {1, 2, 3, 4, 6} | planted_kept
+    assert len(survivors) == n1 + 1  # wave 2 admits id 6 as one row
 
     # simulated mid-commit failure: drop the LATEST commit marker → the
     # restarted query replays that batch from the checkpointed offsets
@@ -572,6 +575,7 @@ def test_incremental_near_dedup_across_waves_and_replay(spark, tmp_path):
         r["doc_id"] for r in survivors
     )
     assert {r["doc_id"] for r in replayed} == {1, 2, 3, 4, 6} | planted_kept
+    assert len(replayed) == n1 + 1
 
 
 def test_incremental_dedup_history_read_prunes(spark, tmp_path):
@@ -752,15 +756,17 @@ def test_incremental_embedding_dedup_across_waves(spark, tmp_path):
         V.pack_sign_bits(F.col("embedding"), 64), 3,
     )
     assert sizes[0] >= 3  # a planted chain merged into one component
-    kept = {r["vec_id"] for r in spark.read.parquet(surv_path).collect()}
+    wave1_rows = spark.read.parquet(surv_path).collect()
+    n1 = len(wave1_rows)  # fixed exactly by the oracle above
+    kept = {r["vec_id"] for r in wave1_rows}
     assert kept & {1, 2, 3} == {1, 2, 3} and 100 in kept
     planted_kept = kept - {1, 2, 3}
 
     spark.createDataFrame(wave2, schema).coalesce(1).write.parquet(str(in_dir / "w2"))
     run_once()
-    assert {
-        r["vec_id"] for r in spark.read.parquet(surv_path).collect()
-    } == {1, 2, 3, 5} | planted_kept
+    survivors = spark.read.parquet(surv_path).collect()
+    assert {r["vec_id"] for r in survivors} == {1, 2, 3, 5} | planted_kept
+    assert len(survivors) == n1 + 1  # wave 2 admits id 5 as one row
 
 
 def test_incremental_embedding_dedup_validation(spark, tmp_path):
